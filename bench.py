@@ -28,8 +28,10 @@ from contextlib import contextmanager as _contextmanager
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from spacetime_crawler_spark.session import host_cpus  # noqa: E402
+
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS") or host_cpus())
 # Default world = 2M pages / 100k seeds, measured 1 core vs 4 cores.
 # Phase-instrumented probes (RoundMetrics.phase_s) show per-round parallel
 # work W ≈ 215 core-s is dominated by the pages scan + extraction — W
@@ -330,42 +332,6 @@ def ensure_world() -> tuple[str, list[str]]:
                 synth.write_pages_parquet(spark, p, pages_dir)
                 _stop_drained(spark)
     _evict_stale_worlds(cache_root, world_name)
-    # one-time legacy sweep: pre-round-3 runs cached worlds DIRECTLY in the
-    # global tempdir (no lock discipline existed then, so none applies);
-    # compare PATHS so the live dir survives when cache_root IS the tempdir.
-    # Without this, an orphaned ~23 GB legacy world breaks the one-world
-    # disk bound and can ENOSPC the next generation.
-    import fcntl
-    import shutil
-    import tempfile as _tf
-
-    for stale in os.listdir(_tf.gettempdir()):
-        stale_path = os.path.join(_tf.gettempdir(), stale)
-        if (
-            stale.startswith("scs_bench_world_")
-            and not stale.endswith(".lock")
-            and os.path.isdir(stale_path)
-            and stale_path != pages_dir
-            and os.path.dirname(stale_path) != cache_root
-        ):
-            # A concurrent bench whose cache_root IS the tempdir holds a
-            # shared flock on <world>.lock — honor it exactly like
-            # _evict_stale_worlds does, so this sweep can never delete a
-            # live, reader-locked world out from under another process.
-            # No lock FILE at all means no reader can hold one (readers
-            # create theirs before opening the world; true legacy worlds
-            # predate the protocol entirely) — delete without creating a
-            # lock file that, being deliberately never unlinked, would
-            # otherwise litter the tempdir as a permanent orphan.
-            try:
-                if not os.path.exists(stale_path + ".lock"):
-                    shutil.rmtree(stale_path, ignore_errors=True)
-                    continue
-                with open(stale_path + ".lock", "a") as lf:
-                    fcntl.flock(lf, fcntl.LOCK_EX | fcntl.LOCK_NB)
-                    shutil.rmtree(stale_path, ignore_errors=True)
-            except OSError:
-                continue  # held by a live reader — leave it
     return pages_dir, seeds
 
 

@@ -148,77 +148,6 @@ def extract_page(html: bytes | str | None, base_url: str) -> tuple[str, list[str
     )
 
 
-class _AnchorCollector(HTMLParser):
-    """(href, anchor-text) pairs in document order.
-
-    Pinned spec: every <a href> contributes one pair; its anchor text is
-    the whitespace-collapsed join of the text nodes between the start tag
-    and its close.  A new <a> implicitly closes an open one (browser
-    behavior — HTML forbids nesting); <script>/<style> text never leaks
-    into an anchor (same skip rule as text extraction).  <a> without href
-    contributes nothing — mirroring _LinkCollector exactly, so the href
-    SEQUENCE here is identical to extract_links' (asserted in tests)."""
-
-    def __init__(self) -> None:
-        super().__init__(convert_charrefs=True)
-        self._skip_depth = 0
-        self._open_href: str | None = None
-        self._chunks: list[str] = []
-        self.anchors: list[tuple[str, str]] = []
-
-    def _close_open(self) -> None:
-        if self._open_href is not None:
-            self.anchors.append(
-                (self._open_href, " ".join(" ".join(self._chunks).split()))
-            )
-        self._open_href = None
-        self._chunks = []
-
-    def handle_starttag(self, tag: str, attrs) -> None:
-        if tag in _SKIP_CONTENT_TAGS and tag not in _VOID_TAGS:
-            self._skip_depth += 1
-        elif tag == "a":
-            self._close_open()
-            for name, value in attrs:
-                if name == "href" and value is not None:
-                    self._open_href = value
-                    break
-
-    def handle_endtag(self, tag: str) -> None:
-        if tag in _SKIP_CONTENT_TAGS and self._skip_depth > 0:
-            self._skip_depth -= 1
-        elif tag == "a":
-            self._close_open()
-
-    def handle_data(self, data: str) -> None:
-        if self._skip_depth or self._open_href is None:
-            return
-        stripped = data.strip()
-        if stripped:
-            self._chunks.append(stripped)
-
-
-def extract_anchors(
-    html: bytes | str | None, base_url: str
-) -> list[tuple[str, str]]:
-    """Every <a href> in document order as (canonical absolute url,
-    anchor text) — the inbound-anchor-text signal feeding link-context
-    ranking.  Hrefs resolve/canonicalize through the SAME
-    resolve_and_canonicalize as extract_links (F8), so for any page
-    [u for u, _ in extract_anchors(...)] == extract_links(...)."""
-    parser = _AnchorCollector()
-    try:
-        parser.feed(_decode(html))
-        parser.close()
-    except Exception:
-        pass
-    parser._close_open()  # unclosed <a> at EOF still owns its href (≡ F8)
-    return [
-        (resolve_and_canonicalize(base_url, href), text)
-        for href, text in parser.anchors
-    ]
-
-
 # Block-level elements: opening OR closing one of these ends the current
 # text block.  (br/hr are void but still break blocks.)
 _BLOCK_TAGS = frozenset(

@@ -36,10 +36,6 @@ def tokenize(text: str | None) -> list[str]:
     return [t for t in _TOKEN_RE.split(text.lower()) if t]
 
 
-def word_count(text: str | None) -> int:
-    return len(tokenize(text))
-
-
 def sql_stopword_list() -> str:
     """The stopword list as a SQL IN-list literal, shared verbatim by the
     Spark and DuckDB sides of the a4_common_words oracle pair."""

@@ -1,11 +1,12 @@
 """Partitioned bloom URL-seen pre-filter (SURVEY.md §2 F3 / §4.3).
 
-P independent bloom bitmaps, one per pmod(url_hash, P) bucket, each sized
-for its own key count at the target FPR.  Hashing is Kirsch–Mitzenmacher
-double hashing g_i = h1 + i·h2 over two JVM-computed hashes
-(h1 = xxhash64(url_norm), h2 = hash(url_norm) — Spark's murmur3_x86_32 per
-BASELINE.json north_star "canonicalized murmur3 URL hashes"), so the Python
-side does only vectorized numpy bit ops on Arrow batches.
+P independent bloom bitmaps, one per pmod(url_hash, P) bucket, all with
+the same fixed geometry (BITS_PER_PART, NUM_HASHES).  Hashing is
+Kirsch–Mitzenmacher double hashing g_i = h1 + i·h2 over two JVM-computed
+hashes (h1 = xxhash64(url_norm), h2 = hash(url_norm) — Spark's
+murmur3_x86_32 per BASELINE.json north_star "canonicalized murmur3 URL
+hashes"), so the Python side does only vectorized numpy bit ops on Arrow
+batches.
 
 Correctness NEVER depends on the bloom (SURVEY §4.3): a negative is
 definitely-new and may skip the exact anti-join; a positive falls through to
@@ -26,8 +27,6 @@ shard-routing design SURVEY §4.3 calls for at the 10^10 tier.
 
 from __future__ import annotations
 
-import math
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -42,8 +41,11 @@ BLOOM_SCHEMA = T.StructType([
     T.StructField("bits", T.BinaryType()),
 ])
 
-DEFAULT_FPR = 0.01
-MIN_BITS = 1 << 10
+# fixed geometry per partition bucket (incremental maintenance): 2^21 bits
+# / 7 hashes ≈ 1% FPR up to ~200k keys per bucket — FPR degradation past
+# that capacity only costs extra anti-join traffic, never correctness
+BITS_PER_PART = 1 << 21
+NUM_HASHES = 7
 
 
 def _positions(h1: np.ndarray, h2: np.ndarray, k: int, nbits: int) -> np.ndarray:
@@ -52,18 +54,6 @@ def _positions(h1: np.ndarray, h2: np.ndarray, k: int, nbits: int) -> np.ndarray
     u2 = h2.astype(np.int64).astype(np.uint64)  # 32-bit murmur sign-extended
     i = np.arange(k, dtype=np.uint64)[None, :]
     return ((u1[:, None] + i * u2[:, None]) % np.uint64(nbits)).astype(np.int64)
-
-
-def _build_bitmap(h1: np.ndarray, h2: np.ndarray, fpr: float) -> tuple[int, int, bytes]:
-    n = max(len(h1), 1)
-    nbits = max(MIN_BITS, int(-n * math.log(fpr) / (math.log(2) ** 2)))
-    nbits = (nbits + 63) // 64 * 64
-    k = max(1, round(nbits / n * math.log(2)))
-    bits = np.zeros(nbits // 8, dtype=np.uint8)
-    if len(h1):
-        pos = _positions(h1, h2, k, nbits)
-        np.bitwise_or.at(bits, pos >> 3, (1 << (pos & 7)).astype(np.uint8))
-    return nbits, k, bits.tobytes()
 
 
 def _build_bitmap_fixed(

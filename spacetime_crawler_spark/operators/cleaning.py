@@ -1,12 +1,14 @@
-"""Line-level corpus cleaning — the C4 rules (Raffel et al. 2020, public
-spec) re-expressed as native Spark column programs, plus the global
-exact-line dedup every large webtext pipeline runs before training.
+"""Corpus cleaning stages: boilerplate removal, PII redaction and the C4
+line rules (Raffel et al. 2020, public spec) used by the web-ingest
+composite (operators/pipeline.py::pipeline_web_ingest), plus global
+exact-line/paragraph dedup, a term blocklist, text normalization and
+charset annotation, all re-expressed as native Spark column programs.
 
-Both operators are df-in/df-out over (doc_id, text) so they compose with
-the curation pipeline and run equally over the documents table, crawl
-output, or WARC-ingested pages.  Neither takes a driver-registry slot
-(the 50-row artifact cap is taken); each is pinned by an in-test DuckDB
-oracle over the same parquet fixture (tests/test_cleaning.py).
+Each operator is df-in/df-out so it composes with the curation pipeline
+and runs equally over the documents table, crawl output, or WARC-ingested
+pages.  None takes a driver-registry slot (the 50-row artifact cap is
+taken); the SQL-expressible ones are pinned by an in-test DuckDB oracle
+over the same parquet fixture (tests/test_cleaning.py).
 """
 
 from __future__ import annotations

@@ -107,14 +107,6 @@ def _shingle_docs(docs: DataFrame) -> DataFrame:
     ).select("doc_id", F.expr(_SPARK_SHINGLES_FROM_TOKS).alias("shingles"))
 
 
-def _shingled(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _shingle_docs(
-        load_table(spark, sf_dir, "documents").filter(
-            F.col("doc_id") < _DEDUP_DOC_LIMIT
-        )
-    )
-
-
 def _score_candidates(candidates: DataFrame, sh: DataFrame) -> DataFrame:
     """(doc_a, doc_b) candidates → exact Jaccard from the FULL shingle sets
     (scores are never affected by candidate-generation caps)."""

@@ -20,8 +20,8 @@ Scale shape:
   between the JVM, numpy, and DuckDB's libm; computing it in exactly one
   place — and quantizing to int(logp * 1e12) — removes the only
   cross-engine float hazard.  Integer log-prob sums are exact and
-  order-free (DECIMAL(38,0) accumulator, same trick as the semdedup
-  centroids), so scores are bit-identical on any partitioning.
+  order-free (DECIMAL(38,0) accumulator), so scores are bit-identical
+  on any partitioning.
 - SCORE is map-only plus one broadcast hash join: explode_outer the
   gram array (built in a select BELOW the explode — the Generate-
   reprojection trap), left-join the <= top_v-row model broadcast,
@@ -44,8 +44,6 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-
-from spacetime_crawler_spark.sources.tables import load_table
 
 TOP_V = 50_000
 UNK_ALPHA = 0.5
@@ -225,20 +223,3 @@ def seed_stratum(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
     )
 
 
-def lm_quality_demo(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Train on the seed stratum of `documents`, score ALL documents,
-    bucket per language.  `scored` feeds the bucket window AND the final
-    left join — persist it across the two consumers (and release it after
-    eagerly materializing the small result), else the whole score plan
-    runs twice."""
-    docs = load_table(spark, sf_dir, "documents")
-    model = train_char_lm(spark, seed_stratum(docs))
-    scored = lm_quality_score(docs, model).persist()
-    try:
-        return (
-            lm_ppl_buckets(scored, docs)
-            .orderBy("doc_id")
-            .localCheckpoint(eager=True)
-        )
-    finally:
-        scored.unpersist(blocking=False)

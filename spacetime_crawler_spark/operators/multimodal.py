@@ -24,12 +24,6 @@ from spacetime_crawler_spark.sources.tables import load_table
 
 FEATURE_DIM = 8
 
-BINARY_META_SCHEMA = T.StructType([
-    T.StructField("doc_id", T.LongType()),
-    T.StructField("byte_len", T.LongType()),
-    T.StructField("sha", T.StringType()),
-])
-
 FEATURES_SCHEMA = T.StructType([
     T.StructField("doc_id", T.LongType()),
     T.StructField("byte_len", T.LongType()),

@@ -37,6 +37,18 @@ SCHEDULE_SCHEMA = (
 )
 
 
+def latest_capture(captures: DataFrame, key: str) -> DataFrame:
+    """One row per `key`: the latest capture (max warc_ts, ties to the
+    smallest stored url) — the as-of rule shared by robots rules, the fetch
+    join and the offline pages view."""
+    w = Window.partitionBy(key).orderBy(F.desc("warc_ts"), F.asc("url"))
+    return (
+        captures.withColumn("rn", F.row_number().over(w))
+        .filter(F.col("rn") == 1)
+        .drop("rn")
+    )
+
+
 def build_robots_rules(pages: DataFrame) -> DataFrame:
     """pages rows at path /robots.txt → robots_rules(host, crawl_delay,
     rules).  Latest capture wins; one row per host; small by construction
@@ -54,15 +66,9 @@ def build_robots_rules(pages: DataFrame) -> DataFrame:
     if "is_robots" in pages.columns:
         pages = pages.filter(F.col("is_robots") == 1)
     robots = pages.filter(F.parse_url("url", F.lit("PATH")) == "/robots.txt")
-    latest = (
-        robots.withColumn("host", F.lower(F.parse_url("url", F.lit("HOST"))))
-        .withColumn(
-            "rn",
-            F.row_number().over(
-                Window.partitionBy("host").orderBy(F.desc("warc_ts"), F.asc("url"))
-            ),
-        )
-        .filter(F.col("rn") == 1)
+    latest = latest_capture(
+        robots.withColumn("host", F.lower(F.parse_url("url", F.lit("HOST")))),
+        "host",
     )
     return latest.select(
         "host", robots_parse_udf("html").alias("parsed")

@@ -119,14 +119,6 @@ def _with_table_buckets(df: DataFrame, vec_col: str) -> DataFrame:
     )
 
 
-def sim_ann_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(vec_id, table, bucket) index — the build side of the ANN path.
-    Pure projection, embarrassingly parallel; written partitioned by
-    (table, bucket) at scale so probes are partition-pruned."""
-    emb = spread(load_table(spark, sf_dir, "embeddings"), min_bytes=0)
-    return _with_table_buckets(emb, "embedding").select("vec_id", "table", "bucket")
-
-
 def _query_buckets(
     query_vec: list[float], hamming: int = 0
 ) -> list[tuple[int, int]]:

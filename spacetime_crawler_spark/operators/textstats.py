@@ -247,7 +247,6 @@ def _langid_norm_expr(text_col: str) -> str:
     )
 
 
-_LANGID_NORM = _langid_norm_expr("text")
 # NB Spark's sequence(1, 0) is DESCENDING [1, 0], never empty — short texts
 # need the explicit guard.  Two-step projection (normalized string first,
 # trigrams from the `nt` column) so the regex/lower pipeline runs once per
@@ -697,138 +696,4 @@ SELECT source, COUNT(*) AS n_docs,
                       AND avg_tok_len >= {QUALITY_KEEP_MIN_AVG_TOK_LEN}
                       AS INT)), 4) AS keep_rate
 FROM m GROUP BY source ORDER BY source
-"""
-
-
-# --- Gopher quality rules (full documented set) ---------------------------------
-
-# The MassiveText/Gopher quality-filter rules (Rae et al. 2021, table A1 —
-# public spec), pinned here as thresholds over map-only signals.  Ratios
-# are ROUNDED to 4dp before thresholding (house style: both engines must
-# agree at the boundary).  Complements text_quality_score (C4-shape) and
-# text_repetition_stats (the Gopher repetition half).
-GOPHER_MIN_WORDS = 50
-GOPHER_MAX_WORDS = 100_000
-GOPHER_MIN_MEAN_WORD_LEN = 3
-GOPHER_MAX_MEAN_WORD_LEN = 10
-GOPHER_MAX_HASH_RATIO = 0.1
-GOPHER_MAX_ELLIPSIS_RATIO = 0.1
-GOPHER_MAX_BULLET_LINE_FRAC = 0.9
-GOPHER_MAX_ELLIPSIS_LINE_FRAC = 0.3
-GOPHER_MIN_ALPHA_WORD_FRAC = 0.8
-GOPHER_REQUIRED_STOPS = ("the", "be", "to", "of", "and", "that", "have", "with")
-GOPHER_MIN_REQUIRED_STOPS = 2
-
-
-def gopher_quality_filter(docs: DataFrame) -> DataFrame:
-    """The full documented Gopher rule set over (doc_id, text): word-count
-    bounds, mean word length bounds, '#' and '…' symbol-to-word ratios,
-    bullet-line and ellipsis-line fractions, alphabetic-word fraction,
-    and the required-stopword floor — each signal emitted, plus the
-    conjunctive keep flag.
-
-    Pinned spec: words = whitespace runs (original case; the alpha check
-    and stop list lowercase per-word); '...' counts are non-overlapping
-    replace()-counting; a bullet line starts (after ltrim) with '•', '-',
-    or '*'; an ellipsis line ends (after rtrim) with '...' or '…'.
-
-    Scale shape: one narrow map-only projection, entirely native exprs
-    inside whole-stage codegen — at 100 TB this is a scan-stage filter
-    that runs before any shuffle."""
-    w = "filter(split(text, '\\\\s+'), x -> x != '')"
-    lines = "split(text, '\\n')"
-    stops = ", ".join(f"'{s}'" for s in GOPHER_REQUIRED_STOPS)
-    nw = f"greatest(size({w}), 1)"
-    nl = f"greatest(size({lines}), 1)"
-    sig = docs.select(
-        "doc_id",
-        F.expr(f"size({w})").cast("int").alias("n_words"),
-        F.expr(
-            f"round(aggregate({w}, 0L, (a, x) -> a + length(x)) / {nw}, 4)"
-        ).alias("mean_word_len"),
-        F.expr(
-            "round((length(text) - length(replace(text, '#', '')))"
-            f" / {nw}, 4)"
-        ).alias("hash_ratio"),
-        F.expr(
-            "round(((length(text) - length(replace(text, '...', ''))) / 3"
-            " + (length(text) - length(replace(text, '…', ''))))"
-            f" / {nw}, 4)"
-        ).alias("ellipsis_ratio"),
-        F.expr(
-            f"round(size(filter({lines},"
-            " x -> startswith(ltrim(x), '•') or startswith(ltrim(x), '-')"
-            f" or startswith(ltrim(x), '*'))) / {nl}, 4)"
-        ).alias("bullet_line_frac"),
-        F.expr(
-            f"round(size(filter({lines},"
-            " x -> endswith(rtrim(x), '...') or endswith(rtrim(x), '…')))"
-            f" / {nl}, 4)"
-        ).alias("ellipsis_line_frac"),
-        F.expr(
-            f"round(size(filter({w}, x -> lower(x) rlike '[a-z]'))"
-            f" / {nw}, 4)"
-        ).alias("alpha_word_frac"),
-        F.expr(
-            f"size(array_intersect(array_distinct(transform({w},"
-            f" x -> lower(x))), array({stops})))"
-        ).cast("int").alias("n_required_stops"),
-    )
-    return sig.withColumn(
-        "keep",
-        (
-            F.col("n_words").between(GOPHER_MIN_WORDS, GOPHER_MAX_WORDS)
-            & F.col("mean_word_len").between(
-                GOPHER_MIN_MEAN_WORD_LEN, GOPHER_MAX_MEAN_WORD_LEN
-            )
-            & (F.col("hash_ratio") <= GOPHER_MAX_HASH_RATIO)
-            & (F.col("ellipsis_ratio") <= GOPHER_MAX_ELLIPSIS_RATIO)
-            & (F.col("bullet_line_frac") <= GOPHER_MAX_BULLET_LINE_FRAC)
-            & (F.col("ellipsis_line_frac") <= GOPHER_MAX_ELLIPSIS_LINE_FRAC)
-            & (F.col("alpha_word_frac") >= GOPHER_MIN_ALPHA_WORD_FRAC)
-            & (F.col("n_required_stops") >= GOPHER_MIN_REQUIRED_STOPS)
-        ).cast("int"),
-    )
-
-
-GOPHER_QUALITY_SQL = f"""
-WITH t AS (
-  SELECT doc_id, text,
-         list_filter(regexp_split_to_array(text, '\\s+'), x -> x <> '') AS w,
-         string_split(text, chr(10)) AS l
-  FROM docs
-), m AS (
-  SELECT doc_id,
-         CAST(len(w) AS INT) AS n_words,
-         ROUND(COALESCE(list_sum(list_transform(w, x -> LENGTH(x))), 0) * 1.0
-               / GREATEST(len(w), 1), 4) AS mean_word_len,
-         ROUND((LENGTH(text) - LENGTH(replace(text, '#', ''))) * 1.0
-               / GREATEST(len(w), 1), 4) AS hash_ratio,
-         ROUND(((LENGTH(text) - LENGTH(replace(text, '...', ''))) / 3
-                + (LENGTH(text) - LENGTH(replace(text, '…', '')))) * 1.0
-               / GREATEST(len(w), 1), 4) AS ellipsis_ratio,
-         ROUND(len(list_filter(l,
-                 x -> starts_with(ltrim(x), '•') OR starts_with(ltrim(x), '-')
-                      OR starts_with(ltrim(x), '*'))) * 1.0
-               / GREATEST(len(l), 1), 4) AS bullet_line_frac,
-         ROUND(len(list_filter(l,
-                 x -> ends_with(rtrim(x), '...') OR ends_with(rtrim(x), '…'))) * 1.0
-               / GREATEST(len(l), 1), 4) AS ellipsis_line_frac,
-         ROUND(len(list_filter(w, x -> regexp_matches(lower(x), '[a-z]'))) * 1.0
-               / GREATEST(len(w), 1), 4) AS alpha_word_frac,
-         CAST(len(list_intersect(list_distinct(list_transform(w, x -> lower(x))),
-              [{", ".join(f"'{s}'" for s in GOPHER_REQUIRED_STOPS)}])) AS INT)
-           AS n_required_stops
-  FROM t
-)
-SELECT *,
-       CAST(n_words BETWEEN {GOPHER_MIN_WORDS} AND {GOPHER_MAX_WORDS}
-            AND mean_word_len BETWEEN {GOPHER_MIN_MEAN_WORD_LEN} AND {GOPHER_MAX_MEAN_WORD_LEN}
-            AND hash_ratio <= {GOPHER_MAX_HASH_RATIO}
-            AND ellipsis_ratio <= {GOPHER_MAX_ELLIPSIS_RATIO}
-            AND bullet_line_frac <= {GOPHER_MAX_BULLET_LINE_FRAC}
-            AND ellipsis_line_frac <= {GOPHER_MAX_ELLIPSIS_LINE_FRAC}
-            AND alpha_word_frac >= {GOPHER_MIN_ALPHA_WORD_FRAC}
-            AND n_required_stops >= {GOPHER_MIN_REQUIRED_STOPS} AS INT) AS keep
-FROM m
 """

@@ -86,29 +86,6 @@ def robots_parse_udf(body: pd.Series) -> pd.DataFrame:
     return pd.DataFrame({"crawl_delay": delays, "rules": rules_col})
 
 
-_ANCHORS_SCHEMA = T.ArrayType(
-    T.StructType([
-        T.StructField("url", T.StringType()),
-        T.StructField("anchor", T.StringType()),
-    ])
-)
-
-
-@F.pandas_udf(_ANCHORS_SCHEMA)
-def anchor_extract_udf(html: pd.Series, base_url: pd.Series) -> pd.Series:
-    """F8 companion — (href, anchor-text) pairs in document order (the
-    pinned extract_anchors; its href sequence ≡ link_extract_udf's by
-    spec, golden-tested)."""
-    from spacetime_crawler_spark.functions.textextract import extract_anchors
-
-    return pd.Series(
-        [
-            [{"url": u, "anchor": a} for u, a in extract_anchors(h, b)]
-            for h, b in zip(html, base_url)
-        ]
-    )
-
-
 _CHARSET_SCHEMA = T.StructType([
     T.StructField("charset", T.StringType()),
     T.StructField("text_decoded", T.StringType()),

@@ -99,10 +99,6 @@ def write_cdx_index(
     )
 
 
-def read_cdx(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.parquet(path)
-
-
 def capture_records(pages: DataFrame) -> DataFrame:
     """The captures frame for a raw multi-snapshot pages archive (the
     BASELINE.json input shape: url, warc_ts, html, text, lang) — each
@@ -263,7 +259,7 @@ def cdx_lookup(
         .select(surt_expr(F.lit(url)).alias("s"))
         .head()[0]
     )
-    cdx = read_cdx(spark, path)
+    cdx = spark.read.parquet(path)
     if match_type == "exact":
         cond = F.col("surt") == probe
     elif match_type == "prefix":

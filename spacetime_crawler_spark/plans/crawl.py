@@ -27,12 +27,13 @@ from __future__ import annotations
 import time
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, Observation, SparkSession, Window
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from spacetime_crawler_spark.operators import bloom
 from spacetime_crawler_spark.operators.politeness import (
     build_robots_rules,
+    latest_capture,
     leftover_after_schedule,
     robots_gate,
     schedule_round,
@@ -54,13 +55,6 @@ class CrawlConfig:
     round_budget_s: float = 30.0
     n_parts: int = 32
     use_bloom: bool = True
-    allowed_host_suffixes: tuple[str, ...] = ()
-    # fixed bloom geometry per partition bucket (incremental maintenance):
-    # 2^21 bits / 7 hashes ≈ 1% FPR up to ~200k keys per bucket; size for
-    # the target seen-set capacity — FPR degradation past capacity only
-    # costs extra anti-join traffic, never correctness
-    bloom_bits_per_part: int = 1 << 21
-    bloom_hashes: int = 7
     # fetch-join strategy gate: broadcast the selected set while it's small,
     # fall back to a shuffled hash join past this many rows (the 10^10-tier
     # regime where the winner set exceeds broadcast size)
@@ -72,15 +66,6 @@ class CrawlConfig:
     # rewrite `seen` as one compacted snapshot every K rounds so readers
     # union ≤K+1 files instead of O(rounds); 0 disables compaction
     seen_compact_every: int = 8
-    # annotate fetch_log with a `lang` column (reliable-only langid over the
-    # F9-extracted text) so per-language budgeting/sampling runs over crawl
-    # output directly.  Map-only column exprs riding the existing extract
-    # projection — no extra shuffle or parse — but it is real per-row work
-    # (~70 trigram set-probes over a 1000-char prefix), so it is opt-in:
-    # the benchmarked crawl keeps its round-over-round comparable workload,
-    # and ingest pipelines that want lang at the source use
-    # read_warc_pages(extract_text=True) instead
-    annotate_lang: bool = False
 
 
 @dataclass
@@ -123,20 +108,14 @@ def _with_keys(df: DataFrame, url_col: str = "url_norm") -> DataFrame:
     )
 
 
-def _is_valid_expr(url_col: str, allowed_suffixes: tuple[str, ...]) -> F.Column:
+def _is_valid_expr(url_col: str) -> F.Column:
     """F1 as NATIVE column expressions (no UDF → Catalyst can push/fold it):
-    scheme whitelist + extension-blacklist rlike + optional host suffix."""
+    scheme whitelist + extension-blacklist rlike + non-empty host."""
     scheme_ok = F.parse_url(F.col(url_col), F.lit("PROTOCOL")).isin("http", "https")
     path = F.lower(F.coalesce(F.parse_url(F.col(url_col), F.lit("PATH")), F.lit("")))
     ext_ok = ~path.rlike(BLACKLIST_RLIKE)
     host = F.lower(F.coalesce(F.parse_url(F.col(url_col), F.lit("HOST")), F.lit("")))
-    cond = scheme_ok & ext_ok & (host != "")
-    if allowed_suffixes:
-        suffix_ok = F.lit(False)
-        for s in allowed_suffixes:
-            suffix_ok = suffix_ok | (host == s) | host.endswith("." + s)
-        cond = cond & suffix_ok
-    return cond
+    return scheme_ok & ext_ok & (host != "")
 
 
 def prepare_page_keys(spark: SparkSession, pages: DataFrame) -> DataFrame:
@@ -160,16 +139,7 @@ def prepare_pages(spark: SparkSession, pages: DataFrame) -> DataFrame:
     analytics at test scale (crawl_reports); the crawl loop itself uses the
     shuffle-free prepare_page_keys + fetch_join_round path instead."""
     canon = pages.withColumn("url_norm", canonicalize_udf("url"))
-    latest = (
-        canon.withColumn(
-            "rn",
-            F.row_number().over(
-                Window.partitionBy("url_norm").orderBy(F.desc("warc_ts"), F.asc("url"))
-            ),
-        )
-        .filter(F.col("rn") == 1)
-        .drop("rn")
-    )
+    latest = latest_capture(canon, "url_norm")
     return _with_keys(latest.select("url_norm", "warc_ts", "html"))
 
 
@@ -179,7 +149,6 @@ def fetch_join_round(
     page_keys: DataFrame,
     selected: DataFrame,
     broadcast_selected: bool = True,
-    extra_meta: tuple[str, ...] = (),
 ) -> DataFrame:
     """F5 with an adaptive physical strategy, html never in a shuffle KEY:
 
@@ -194,8 +163,6 @@ def fetch_join_round(
 
     broadcast_selected=True (small selected set — the common case): steps
     1/3/4 broadcast the small side, so html NEVER enters any exchange.
-    `extra_meta` names additional columns of `selected` to carry through
-    both branches (e.g. the streaming fetch stage's sched_round).
 
     broadcast_selected=False (10^10-tier rounds where the selected set
     exceeds broadcast size): steps 1/3/4 become shuffled hash joins on
@@ -206,7 +173,7 @@ def fetch_join_round(
     carries the whole table.  (With Iceberg `bucket(P, url)` layout both
     joins become storage-co-partitioned and the exchange disappears.)"""
     meta_cols = ["host", "url_norm", "url_hash", "h2", "depth",
-                 "fetch_seq", "due_s", "crawl_delay", *extra_meta]
+                 "fetch_seq", "due_s", "crawl_delay"]
 
     def _small(df: DataFrame) -> DataFrame:
         # broadcast when allowed, else prefer a shuffled hash join with this
@@ -215,16 +182,7 @@ def fetch_join_round(
 
     sel_meta = selected.select(*meta_cols)
     captures = page_keys.join(_small(sel_meta), ["url_hash", "url_norm"], "inner")
-    winners = (
-        captures.withColumn(
-            "rn",
-            F.row_number().over(
-                Window.partitionBy("url_norm").orderBy(F.desc("warc_ts"), F.asc("url"))
-            ),
-        )
-        .filter(F.col("rn") == 1)
-        .drop("rn")
-    )
+    winners = latest_capture(captures, "url_norm")
     # status-200 branch: html streams from the scan; schedule metadata rides
     # the small side
     fetched_ok = (
@@ -247,22 +205,15 @@ def fetch_join_round(
     return fetched_ok.unionByName(missing)
 
 
-def extract_fetched(
-    fetched: DataFrame,
-    annotate_lang: bool = False,
-    extra_cols: tuple[str, ...] = (),
-) -> DataFrame:
+def extract_fetched(fetched: DataFrame) -> DataFrame:
     """F8+F9 enrichment over fetch_join_round output — THE pinned shape of
-    a fetch record, shared by the batch loop and the streaming fetch stage
-    so the two paths cannot drift: one fused parse per page yields
-    (..., status, text_sha256, content_len, links[, lang]); html is
-    dropped here and never persisted downstream.  `extra_cols` names
-    pass-through columns (e.g. sched_round)."""
-    out = fetched.withColumn(
+    a fetch record: one fused parse per page yields (..., status,
+    text_sha256, content_len, links); html is dropped here and never
+    persisted downstream."""
+    return fetched.withColumn(
         "page", page_extract_udf("html", "url_norm")
     ).select(
         "host", "url_norm", "url_hash", "depth", "fetch_seq", "due_s",
-        *extra_cols,
         "status",
         F.when(F.col("status") == 200, F.sha2(F.col("page.text"), 256))
         .alias("text_sha256"),
@@ -272,25 +223,7 @@ def extract_fetched(
         F.when(F.col("status") == 200, F.col("page.links"))
         .otherwise(F.array().cast("array<string>"))
         .alias("links"),
-        *(
-            [F.when(F.col("status") == 200, F.col("page.text"))
-             .alias("__ltext")]
-            if annotate_lang else []
-        ),
     )
-    if annotate_lang:
-        # reliable-only langid over the just-extracted text, then drop the
-        # text again — lang rides the same projection stage as the extract
-        # UDF (map-only; downstream caches store one extra string column,
-        # never the text itself)
-        from spacetime_crawler_spark.operators.textstats import (
-            annotate_lang as _annotate_lang,
-        )
-
-        out = _annotate_lang(out, text_col="__ltext", lang_col="lang").drop(
-            "__ltext"
-        )
-    return out
 
 
 def init_frontier(spark: SparkSession, seeds: list[str],
@@ -306,7 +239,7 @@ def init_frontier(spark: SparkSession, seeds: list[str],
     seed_df = spark.createDataFrame([(s,) for s in seeds], "url string")
     canon = (
         seed_df.withColumn("url_norm", canonicalize_udf("url"))
-        .filter(_is_valid_expr("url_norm", cfg.allowed_host_suffixes))
+        .filter(_is_valid_expr("url_norm"))
         .select("url_norm")
         .distinct()
     )
@@ -323,7 +256,7 @@ def init_frontier(spark: SparkSession, seeds: list[str],
 
 def _bloom_state_matches(spark, io, rnd: int, cfg: CrawlConfig) -> bool:
     """True iff a bloom sidecar is committed at `rnd` AND was built under
-    this config's geometry.  n_parts is recorded as the bloom entry's row
+    the engine's geometry.  n_parts is recorded as the bloom entry's row
     count in the round manifest (the bucketing modulus — part_id ranges
     alone cannot distinguish pmod 32 from pmod 64); bits/hashes live in the
     rows themselves."""
@@ -336,8 +269,8 @@ def _bloom_state_matches(spark, io, rnd: int, cfg: CrawlConfig) -> bool:
     # rebuild over an empty/tiny seen set costs nothing, and never trusting
     # unverifiable state is the safe default)
     return bool(head) and (
-        head[0].nbits == cfg.bloom_bits_per_part
-        and head[0].nhashes == cfg.bloom_hashes
+        head[0].nbits == bloom.BITS_PER_PART
+        and head[0].nhashes == bloom.NUM_HASHES
     )
 
 
@@ -412,7 +345,7 @@ def run_crawl(
             # reads it back in O(P) instead of rebuilding from the seen set
             io.write("bloom", 0, bloom.delta_bitmaps_df(
                 io.read_uncommitted(spark, "seen", 0), cfg.n_parts,
-                cfg.bloom_bits_per_part, cfg.bloom_hashes,
+                bloom.BITS_PER_PART, bloom.NUM_HASHES,
             ))
             tables["bloom"] = cfg.n_parts
         io.commit(0, tables)
@@ -432,7 +365,7 @@ def run_crawl(
         # (and committed) at that round like any other.
         bloom_override = bloom.delta_bitmaps_df(
             read_seen_up_to(spark, io, start_round), cfg.n_parts,
-            cfg.bloom_bits_per_part, cfg.bloom_hashes,
+            bloom.BITS_PER_PART, bloom.NUM_HASHES,
         ).persist()
 
     for rnd in range(start_round + 1, cfg.rounds + 1):
@@ -469,9 +402,7 @@ def run_crawl(
         # F8+F9 fused — ONE parse per page produces text AND links; persisted
         # WITHOUT the html payload so both downstream consumers (lineage sink,
         # candidate pipeline) reuse the single Python pass.
-        enriched = extract_fetched(
-            fetched, annotate_lang=cfg.annotate_lang
-        ).persist()
+        enriched = extract_fetched(fetched).persist()
 
         fetch_log = enriched.select(
             F.lit(rnd).alias("round"),
@@ -485,7 +416,6 @@ def run_crawl(
             "status",
             "text_sha256",
             "content_len",
-            *(["lang"] if cfg.annotate_lang else []),
         )
         # both counts ride the write action as observed metrics (zero extra
         # jobs — no lineage recompute, no read-back)
@@ -507,7 +437,7 @@ def run_crawl(
         links = (
             enriched.filter("status = 200")
             .select("depth", F.explode("links").alias("link"))
-            .filter(_is_valid_expr("link", cfg.allowed_host_suffixes))
+            .filter(_is_valid_expr("link"))
         )
         # within-batch collapse: one row per url, min discovery depth
         candidates = _with_keys(
@@ -524,7 +454,7 @@ def run_crawl(
                 bloom_prev = bloom_override
             else:
                 bloom_prev = io.read(spark, "bloom", rnd - 1)
-            sidecar_bytes = cfg.n_parts * (cfg.bloom_bits_per_part // 8)
+            sidecar_bytes = cfg.n_parts * (bloom.BITS_PER_PART // 8)
             if sidecar_bytes <= cfg.bloom_broadcast_max_bytes:
                 # small sidecar: one broadcast, destroyed at round end
                 maybe_seen_udf, bloom_bcast = bloom.make_maybe_seen_udf(
@@ -613,7 +543,7 @@ def run_crawl(
             io.write("bloom", rnd, bloom.merge_bitmaps_df(
                 bloom_prev.unionByName(bloom.delta_bitmaps_df(
                     io.read_uncommitted(spark, "seen", rnd), cfg.n_parts,
-                    cfg.bloom_bits_per_part, cfg.bloom_hashes,
+                    bloom.BITS_PER_PART, bloom.NUM_HASHES,
                 ))
             ))
             tables["bloom"] = cfg.n_parts
@@ -677,18 +607,13 @@ def read_fetch_log(spark: SparkSession, io: ParquetManifestIO,
                    up_to_round: int) -> DataFrame:
     """Union of fetch_log rounds 1..up_to_round.  A gap (a round in range
     that was never committed) raises instead of silently truncating — the
-    commit protocol guarantees contiguity, so a hole means corruption.
-    allowMissingColumns: a crawl resumed with annotate_lang toggled on
-    writes later rounds one column wider (`lang`) than earlier ones —
-    the union fills the missing side with NULL (the same upgrade
-    semantics the Iceberg store's accept-any-schema append provides)
-    instead of failing the read."""
+    commit protocol guarantees contiguity, so a hole means corruption."""
     dfs = [io.read(spark, "fetch_log", rnd) for rnd in range(1, up_to_round + 1)]
     if not dfs:
         raise FileNotFoundError("no committed fetch_log rounds")
     out = dfs[0]
     for df in dfs[1:]:
-        out = out.unionByName(df, allowMissingColumns=True)
+        out = out.unionByName(df)
     return out
 
 

@@ -77,7 +77,7 @@ def f8_link_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
             canonicalize_udf("url").alias("url_norm"),
             F.explode(link_extract_udf("html", canonicalize_udf("url"))).alias("link"),
         )
-        .withColumn("valid", _is_valid_expr("link", ()))
+        .withColumn("valid", _is_valid_expr("link"))
         .select("url_norm", "link", "valid")
     )
 

@@ -53,35 +53,6 @@ def subdomain_histogram(fetch_log: DataFrame) -> DataFrame:
     )
 
 
-def language_histogram(
-    fetch_log: DataFrame, pages_latest: DataFrame
-) -> DataFrame:
-    """Per-language page counts over the crawled set — the rollup the
-    per-language budget / stratified-sample operators key on.  Prefers the
-    fetch_log's own `lang` column when the crawl ran with
-    CrawlConfig.annotate_lang; otherwise recomputes text through the F9
-    UDF (byte-identical by the engine invariant) and annotates here.
-    NULL lang (unreliable call) groups as 'und' so the histogram always
-    partitions the fetched set.  Shuffle carries one row per language."""
-    from spacetime_crawler_spark.operators.textstats import annotate_lang
-
-    if "lang" in fetch_log.columns:
-        tagged = (
-            fetch_log.filter(F.col("status") == 200)
-            .select("url_norm", "lang")
-            .distinct()
-        )
-    else:
-        tagged = annotate_lang(
-            _fetched_pages(fetch_log, pages_latest), text_col="text"
-        ).select("url_norm", "lang")
-    return (
-        tagged.groupBy(F.coalesce(F.col("lang"), F.lit("und")).alias("lang"))
-        .agg(F.count("*").alias("n_pages"))
-        .orderBy("lang")
-    )
-
-
 def longest_page(fetch_log: DataFrame, pages_latest: DataFrame) -> DataFrame:
     """A3 — url with the most words (ties → lexicographically first url)."""
     counted = _fetched_pages(fetch_log, pages_latest).select(
@@ -92,38 +63,6 @@ def longest_page(fetch_log: DataFrame, pages_latest: DataFrame) -> DataFrame:
         counted.withColumn("rn", F.row_number().over(w))
         .filter("rn = 1")
         .select("url_norm", "n_words")
-    )
-
-
-def host_link_edges(fetch_log: DataFrame, pages_latest: DataFrame) -> DataFrame:
-    """Host-level link graph of the crawled set: (src_host, dst_host,
-    n_links) over distinct fetched pages, restricted to hosts that were
-    themselves crawled (closed graph).  Links are recomputed from the html
-    through the same fused F8 extractor the engine used — one Python pass,
-    then native explode/parse/aggregate."""
-    from spacetime_crawler_spark.operators.udfs import page_extract_udf
-
-    ok = (
-        fetch_log.filter(F.col("status") == 200)
-        .select("url_norm", "url_hash", "host")
-        .distinct()
-    )
-    crawled_hosts = ok.select(F.col("host").alias("dst_host")).distinct()
-    with_links = ok.join(
-        pages_latest.select("url_norm", "url_hash", "html"), ["url_hash", "url_norm"]
-    ).select(
-        F.col("host").alias("src_host"),
-        F.explode(page_extract_udf("html", "url_norm").links).alias("link"),
-    )
-    return (
-        with_links.select(
-            "src_host",
-            F.lower(F.parse_url("link", F.lit("HOST"))).alias("dst_host"),
-        )
-        .filter(F.col("dst_host").isNotNull() & (F.col("dst_host") != F.col("src_host")))
-        .join(F.broadcast(crawled_hosts), "dst_host", "left_semi")
-        .groupBy("src_host", "dst_host")
-        .agg(F.count("*").alias("n_links"))
     )
 
 
@@ -199,28 +138,6 @@ def pagerank(
     )
 
 
-def host_pagerank(
-    fetch_log: DataFrame,
-    pages_latest: DataFrame,
-    iters: int = 10,
-    damping: float = 0.85,
-) -> DataFrame:
-    """PageRank over the crawled host graph — the score a frontier
-    prioritizer feeds back into scheduling (crawl what well-linked hosts
-    point at first).  Thin wrapper over the generic pagerank()."""
-    edges = host_link_edges(fetch_log, pages_latest).select(
-        F.col("src_host").alias("src"), F.col("dst_host").alias("dst")
-    )
-    nodes = (
-        fetch_log.filter(F.col("status") == 200)
-        .select(F.col("host").alias("node"))
-        .distinct()
-    )
-    return pagerank(nodes, edges, iters, damping).select(
-        F.col("node").alias("host"), "rank"
-    )
-
-
 def common_words(fetch_log: DataFrame, pages_latest: DataFrame, k: int = 50) -> DataFrame:
     """A4 — top-k words over fetched text, stopwords excluded."""
     return (
@@ -234,59 +151,3 @@ def common_words(fetch_log: DataFrame, pages_latest: DataFrame, k: int = 50) -> 
     )
 
 
-def anchor_text_agg(
-    fetch_log: DataFrame, pages_latest: DataFrame, min_inbound: int = 1
-) -> DataFrame:
-    """Inbound anchor-text aggregation — the link-context ranking signal a
-    web-scale corpus builds per TARGET url: how many crawled pages link to
-    it, from how many distinct hosts, and the dominant anchor string.
-
-    Deterministic top-anchor rule: highest inbound count wins, ties broken
-    by lexicographically-smallest anchor (empty-string anchors — image
-    links etc. — count toward n_inbound but never win the label unless
-    they are all there is).
-
-    Scale shape: the anchor UDF runs fused into the pages scan (one Arrow
-    crossing, same batch discipline as the F8/F9 path); the explode emits
-    narrow (target, src_host, anchor) rows — html never leaves the scan
-    stage.  Aggregation is two partial+final hash-agg chains on short
-    string keys (per-(target,anchor) counts rolled up by a struct-min
-    instead of a window — no per-group sort), plus one distinct-host agg;
-    the final single-key joins meet on the same target partitioning."""
-    from spacetime_crawler_spark.operators.udfs import anchor_extract_udf
-
-    ok = fetch_log.filter(F.col("status") == 200).select(
-        "url_norm", "url_hash", "host"
-    ).distinct()
-    src = ok.join(
-        pages_latest.select(
-            "url_norm",
-            "url_hash",
-            anchor_extract_udf("html", "url_norm").alias("anchors"),
-        ),
-        ["url_hash", "url_norm"],
-    )
-    pairs = src.select(
-        F.col("host").alias("src_host"),
-        F.explode("anchors").alias("an"),
-    ).select(
-        F.col("an.url").alias("target"),
-        "src_host",
-        F.col("an.anchor").alias("anchor"),
-    )
-    per_anchor = pairs.groupBy("target", "anchor").agg(
-        F.count(F.lit(1)).alias("n")
-    )
-    # min of (-n, anchor) = highest count, ties to the smallest anchor
-    best = per_anchor.groupBy("target").agg(
-        F.sum("n").cast("long").alias("n_inbound"),
-        F.min(F.struct((-F.col("n")).alias("neg_n"), F.col("anchor").alias("a")))
-        .getField("a")
-        .alias("top_anchor"),
-    )
-    hosts = pairs.groupBy("target").agg(
-        F.countDistinct("src_host").cast("long").alias("n_src_hosts")
-    )
-    return best.join(hosts, "target").filter(
-        F.col("n_inbound") >= F.lit(min_inbound)
-    ).select("target", "n_inbound", "n_src_hosts", "top_anchor")

@@ -13,6 +13,20 @@ import os
 from pyspark.sql import SparkSession
 
 
+def host_cpus() -> int:
+    """Cores this process may run on (honours affinity / cpusets, unlike
+    os.cpu_count)."""
+    return len(os.sched_getaffinity(0))
+
+
+def host_driver_mem() -> str:
+    """Default driver heap: half of MemTotal, capped at 24g."""
+    with open("/proc/meminfo") as f:
+        total_kb = next(int(line.split()[1]) for line in f
+                        if line.startswith("MemTotal:"))
+    return f"{min(24 * 1024, total_kb // 2048)}m"
+
+
 def get_spark(
     master: str | None = None,
     app_name: str = "spacetime_crawler_spark",
@@ -20,7 +34,7 @@ def get_spark(
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     if master is None:
-        cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+        cpus = os.environ.get("SPARK_GRAFT_CPUS") or host_cpus()
         master = f"local[{cpus}]"
     if shuffle_partitions is None:
         # local[N] → N-ish shuffle partitions; AQE coalesces further.
@@ -37,7 +51,8 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # html pages are fat rows — keep Arrow batches bounded (SURVEY §4).
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "2048")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
+        .config("spark.driver.memory",
+                os.environ.get("SPARK_GRAFT_DRIVER_MEM") or host_driver_mem())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(32 * 1024 * 1024))
         # runtime (injected) bloom filter: on the non-broadcast fetch path

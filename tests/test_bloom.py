@@ -10,7 +10,12 @@ import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from spacetime_crawler_spark.operators.bloom import _build_bitmap, _positions
+from spacetime_crawler_spark.operators.bloom import (
+    BITS_PER_PART,
+    NUM_HASHES,
+    _build_bitmap_fixed,
+    _positions,
+)
 
 
 def _test_membership(h1, h2, nbits, k, bits_bytes):
@@ -34,19 +39,22 @@ def _test_membership(h1, h2, nbits, k, bits_bytes):
 def test_no_false_negatives(keys):
     h1 = np.array([k[0] for k in keys], dtype=np.int64)
     h2 = np.array([k[1] for k in keys], dtype=np.int64)
-    nbits, k, bits = _build_bitmap(h1, h2, fpr=0.01)
-    assert _test_membership(h1, h2, nbits, k, bits).all()
+    bits = _build_bitmap_fixed(h1, h2, BITS_PER_PART, NUM_HASHES)
+    assert _test_membership(h1, h2, BITS_PER_PART, NUM_HASHES, bits).all()
 
 
 def test_fpr_in_range():
+    """At the documented per-bucket capacity (200k keys in 2^21 bits, 7
+    hashes) the FPR stays under 1%: theory (1 - e^(-7·200k/2^21))^7 ≈ 0.65%."""
+    assert (BITS_PER_PART, NUM_HASHES) == (1 << 21, 7)
     rng = np.random.RandomState(7)
-    n = 20_000
-    h1 = rng.randint(-(2**63), 2**63 - 1, size=n, dtype=np.int64)
-    h2 = rng.randint(-(2**31), 2**31 - 1, size=n, dtype=np.int64)
-    nbits, k, bits = _build_bitmap(h1[: n // 2], h2[: n // 2], fpr=0.01)
-    hits = _test_membership(h1[n // 2 :], h2[n // 2 :], nbits, k, bits)
+    n = 200_000
+    h1 = rng.randint(-(2**63), 2**63 - 1, size=2 * n, dtype=np.int64)
+    h2 = rng.randint(-(2**31), 2**31 - 1, size=2 * n, dtype=np.int64)
+    bits = _build_bitmap_fixed(h1[:n], h2[:n], BITS_PER_PART, NUM_HASHES)
+    hits = _test_membership(h1[n:], h2[n:], BITS_PER_PART, NUM_HASHES, bits)
     fpr = hits.mean()
-    assert fpr < 0.03, fpr
+    assert fpr < 0.01, fpr
 
 
 def test_merge_bitmaps_df_is_exact_or(spark):

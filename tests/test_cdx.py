@@ -56,7 +56,7 @@ def crawl_cdx(spark, tmp_path_factory):
     fetch_log = crawl_mod.read_fetch_log(spark, run.io, run.rounds_run).persist()
     path = str(tmp_path_factory.mktemp("cdx_idx") / "cdx")
     cdx.write_cdx_index(cdx.cdx_records(fetch_log), path, n_shards=4)
-    rows = cdx.read_cdx(spark, path).collect()
+    rows = spark.read.parquet(path).collect()
     pages.unpersist()
     return fetch_log, path, rows
 
@@ -89,7 +89,7 @@ def test_cdx_records_complete_and_deterministic(spark, crawl_cdx):
 def test_cdx_shards_are_globally_ordered(spark, crawl_cdx):
     _fetch_log, path, _rows = crawl_cdx
     per_file = (
-        cdx.read_cdx(spark, path)
+        spark.read.parquet(path)
         .select("surt", "ts", F.input_file_name().alias("f"))
         .collect()
     )

@@ -1,8 +1,10 @@
-"""C4 line cleaning + global exact-line dedup vs DuckDB oracles over a
-crafted multi-line fixture (the testdata documents are single-line, so the
-fixture plants everything the rules must hit: terminal-punctuation misses,
-short lines, javascript lines, code docs, lorem-ipsum docs, cross-doc and
-within-doc duplicate lines, short pass-through separators)."""
+"""C4 line cleaning, global exact-line dedup, boilerplate removal, PII
+redaction, blocklist/normalization and the web-ingest composite vs DuckDB
+oracles and pure-python references.  The C4 fixture is crafted multi-line
+text (the testdata documents are single-line, so the fixture plants
+everything the rules must hit: terminal-punctuation misses, short lines,
+javascript lines, code docs, lorem-ipsum docs, cross-doc and within-doc
+duplicate lines, short pass-through separators)."""
 
 from __future__ import annotations
 
@@ -424,70 +426,6 @@ def test_blocklist_and_normalize_plans_are_map_only(spark, tmp_path_factory):
         p = buf.getvalue()
         assert "Exchange" not in p, (op.__name__, p[:1500])
         assert "EvalPython" not in p, (op.__name__, p[:1500])
-
-
-# --- Gopher quality rules -------------------------------------------------------
-
-
-def test_gopher_quality_filter(spark, tmp_path_factory):
-    """Every documented rule fires at least once in the fixture; signals
-    and keep flag hash-compared against the DuckDB mirror."""
-    from spacetime_crawler_spark.operators.textstats import (
-        GOPHER_MIN_WORDS,
-        GOPHER_QUALITY_SQL,
-        gopher_quality_filter,
-    )
-
-    GOOD_SENT = ("the quick brown fox and that other one have to be of use "
-                 "with many plain words around here today ")
-    good = (GOOD_SENT * 5).strip()                      # ~85 words, all rules pass
-    GDOCS = [
-        (0, good),
-        (1, "too few words to pass the floor."),        # n_words < 50
-        (2, ("a " * 120).strip()),                      # mean_word_len < 3, no stops... also alpha ok
-        (3, (("#tag " * 30) + GOOD_SENT * 4).strip()),  # hash_ratio > 0.1
-        (4, ("\n".join("- bullet item " + str(i) for i in range(20))
-             + "\n" + GOOD_SENT * 4)),                  # bullet lines > 90%? 20/21 lines
-        (5, (GOOD_SENT * 4 + "\n"
-             + "\n".join(f"teaser {i} continues..." for i in range(10)))),  # ellipsis lines
-        (6, (("12345 9876 " * 30) + GOOD_SENT * 4).strip()),  # alpha frac: 60/~128 digits
-        (7, ""),                                        # empty: everything zero, dropped
-    ]
-    path = str(tmp_path_factory.mktemp("gopher") / "docs.parquet")
-    spark.createDataFrame(GDOCS, "doc_id long, text string").coalesce(1).write.parquet(path)
-    docs = spark.read.parquet(path)
-    got = gopher_quality_filter(docs)
-    con = duckdb.connect()
-    con.sql(f"CREATE VIEW docs AS SELECT * FROM '{path}/*.parquet'")
-    assert compare(got, con.sql(GOPHER_QUALITY_SQL).df()) == []
-    con.close()
-    rows = {r.doc_id: r for r in got.collect()}
-    assert rows[0].keep == 1
-    assert rows[1].keep == 0 and rows[1].n_words < GOPHER_MIN_WORDS
-    assert rows[2].keep == 0 and rows[2].mean_word_len < 3
-    assert rows[3].keep == 0 and rows[3].hash_ratio > 0.1
-    assert rows[5].keep == 0 and rows[5].ellipsis_line_frac > 0.3
-    assert rows[6].keep == 0 and rows[6].alpha_word_frac < 0.8
-    assert rows[7].keep == 0
-    # doc 4: 20 bullet lines of 21 total ≈ 0.952 > 0.9
-    assert rows[4].keep == 0 and rows[4].bullet_line_frac > 0.9
-
-
-def test_gopher_quality_plan_is_map_only(spark, tmp_path_factory):
-    import contextlib
-    import io as _io
-
-    from spacetime_crawler_spark.operators.textstats import gopher_quality_filter
-
-    path = str(tmp_path_factory.mktemp("gq") / "docs.parquet")
-    spark.createDataFrame([(0, "x")], "doc_id long, text string").write.parquet(path)
-    docs = spark.read.parquet(path)
-    buf = _io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        gopher_quality_filter(docs).explain(mode="formatted")
-    p = buf.getvalue()
-    assert "Exchange" not in p, p[:1500]
-    assert "EvalPython" not in p, p[:1500]
 
 
 def test_run_py_ingest_writes_training_docs(spark, monkeypatch, tmp_path):

@@ -61,15 +61,32 @@ def test_a4_common_words(setup):
     assert got == report["common_words"]
 
 
-def test_host_pagerank_matches_pure_python(setup):
-    """The distributed PageRank (fixed 10 iterations, dangling mass
-    redistributed uniformly) must match a pure-Python implementation run on
-    the SAME edge list, and conserve rank mass."""
+def test_host_pagerank_matches_pure_python(spark, setup):
+    """The generic PageRank kernel behind graph_pagerank (fixed 10
+    iterations, dangling mass redistributed uniformly), run over the
+    crawled host graph, must match a pure-Python implementation on the
+    SAME edge list and conserve rank mass."""
+    from spacetime_crawler_spark.functions.textextract import extract_links
+    from spacetime_crawler_spark.functions.urlnorm import get_host
+
     _, fetch_log, pages_latest = setup
-    edge_rows = crawl_reports.host_link_edges(fetch_log, pages_latest).collect()
-    edges = {(r.src_host, r.dst_host) for r in edge_rows}
-    nodes = sorted({r.host for r in fetch_log.filter("status = 200")
-                    .select("host").distinct().collect()})
+    ok = (
+        fetch_log.filter("status = 200")
+        .select("url_norm", "url_hash", "host")
+        .distinct()
+        .collect()
+    )
+    html_by_key = {
+        (r.url_hash, r.url_norm): bytes(r.html)
+        for r in pages_latest.select("url_norm", "url_hash", "html").collect()
+    }
+    nodes = sorted({r.host for r in ok})
+    edges = set()
+    for r in ok:
+        for link in extract_links(html_by_key[(r.url_hash, r.url_norm)], r.url_norm):
+            dst = get_host(link)
+            if dst in nodes and dst != r.host:
+                edges.add((r.host, dst))
     n, d = len(nodes), 0.85
     out = {}
     for s, t in edges:
@@ -85,60 +102,16 @@ def test_host_pagerank_matches_pure_python(setup):
         base = (1 - d) / n + d * dangling / n
         rank = {h: base + d * contrib[h] for h in nodes}
 
-    got = {r.host: r.rank
-           for r in crawl_reports.host_pagerank(fetch_log, pages_latest).collect()}
+    got = {
+        r.node: r.rank
+        for r in crawl_reports.pagerank(
+            spark.createDataFrame([(h,) for h in nodes], "node string"),
+            spark.createDataFrame(sorted(edges), "src string, dst string"),
+        ).collect()
+    }
     assert set(got) == set(nodes)
     assert abs(sum(got.values()) - 1.0) < 1e-6  # mass conserved
     for h in nodes:
         assert abs(got[h] - rank[h]) < 1e-6, (h, got[h], rank[h])
     # the graph must be non-trivial for this test to mean anything
     assert edges and len({v for v in got.values()}) > 1
-
-
-def test_anchor_text_agg_matches_pure_python(setup):
-    """anchor_text_agg over the engine's crawl output vs a pure-Python
-    aggregation over the SAME fetched set using the pinned extract_anchors
-    — counts, distinct source hosts, and the deterministic top-anchor
-    tie-break all must agree."""
-    from collections import defaultdict
-
-    from spacetime_crawler_spark.functions.textextract import extract_anchors
-
-    _, fetch_log, pages_latest = setup
-    ok = (
-        fetch_log.filter("status = 200")
-        .select("url_norm", "url_hash", "host")
-        .distinct()
-        .collect()
-    )
-    html_by_key = {
-        (r.url_hash, r.url_norm): bytes(r.html)
-        for r in pages_latest.select("url_norm", "url_hash", "html").collect()
-    }
-    n_in: dict[str, int] = defaultdict(int)
-    hosts: dict[str, set] = defaultdict(set)
-    per_anchor: dict[str, dict[str, int]] = defaultdict(lambda: defaultdict(int))
-    for r in ok:
-        html = html_by_key.get((r.url_hash, r.url_norm))
-        if html is None:
-            continue
-        for u, a in extract_anchors(html, r.url_norm):
-            n_in[u] += 1
-            hosts[u].add(r.host)
-            per_anchor[u][a] += 1
-    want = {
-        u: (
-            n_in[u],
-            len(hosts[u]),
-            min(per_anchor[u].items(), key=lambda kv: (-kv[1], kv[0]))[0],
-        )
-        for u in n_in
-    }
-    got = {
-        r.target: (r.n_inbound, r.n_src_hosts, r.top_anchor)
-        for r in crawl_reports.anchor_text_agg(fetch_log, pages_latest).collect()
-    }
-    assert len(got) > 0
-    assert got == want
-    # the synthetic corpus carries real anchor labels — the signal is live
-    assert any(v[2] for v in got.values())

@@ -111,7 +111,10 @@ def test_scores_match_duckdb(spark, sf_dir, model):
 
 
 def test_buckets_match_duckdb(spark, sf_dir, model):
-    out = lm.lm_quality_demo(spark, sf_dir)
+    from spacetime_crawler_spark.sources.tables import load_table
+
+    docs = load_table(spark, sf_dir, "documents")
+    out = lm.lm_ppl_buckets(lm.lm_quality_score(docs, model), docs)
     con = duck_connection(sf_dir)
     con.register(
         "lm_model", pd.DataFrame(model.grams, columns=["gram", "qlogp"])

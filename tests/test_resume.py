@@ -203,6 +203,23 @@ def test_resume_with_changed_bloom_geometry_rebuilds(spark, tiny, tmp_path_facto
     assert run_b.io.manifest("bloom", run_b.rounds_run)["rows"] == 16
 
 
+def test_bloom_state_rejects_other_bit_geometry(spark, tiny, tmp_path_factory,
+                                                monkeypatch):
+    """A committed sidecar whose bits-per-part or hash count differ from the
+    engine's constants is never reused on resume (its bit positions were
+    computed under another modulus / hash family)."""
+    from spacetime_crawler_spark.operators import bloom
+
+    run, state_dir = _run(spark, tiny, tmp_path_factory.mktemp("geo_bits"), 1)
+    cfg = CrawlConfig(state_dir=state_dir)
+    assert crawl_mod._bloom_state_matches(spark, run.io, 1, cfg)
+    monkeypatch.setattr(bloom, "NUM_HASHES", bloom.NUM_HASHES + 1)
+    assert not crawl_mod._bloom_state_matches(spark, run.io, 1, cfg)
+    monkeypatch.undo()
+    monkeypatch.setattr(bloom, "BITS_PER_PART", bloom.BITS_PER_PART * 2)
+    assert not crawl_mod._bloom_state_matches(spark, run.io, 1, cfg)
+
+
 def test_resume_past_completed_run_reports_committed_rounds(spark, tiny,
                                                             tmp_path_factory):
     """A resume that adds zero new rounds must still expose the committed

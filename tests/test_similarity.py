@@ -7,8 +7,12 @@ from spacetime_crawler_spark.operators import multimodal, similarity, textstats
 SF_DIR = "/root/testdata/sf0.01"
 
 
-def test_ann_buckets_balanced(spark):
-    rows = similarity.sim_ann_buckets(spark, SF_DIR).collect()
+def test_ann_buckets_balanced(spark, tmp_path):
+    """The materialized ANN index holds every vector once per table, and
+    each table's sign-bit buckets are balanced."""
+    index_dir = str(tmp_path / "ann_idx")
+    similarity.build_ann_index(spark, SF_DIR, index_dir)
+    rows = spark.read.parquet(index_dir).select("vec_id", "table", "bucket").collect()
     n_vecs = len({r.vec_id for r in rows})
     assert len(rows) == n_vecs * similarity.LSH_TABLES
     per_table = {}

@@ -98,55 +98,6 @@ def test_extract_page_on_synth_world():
             assert links == extract_links(row["html"], row["url"])
 
 
-# --- anchor extraction --------------------------------------------------------
-
-
-def test_extract_anchors_goldens():
-    from spacetime_crawler_spark.functions.textextract import extract_anchors
-
-    html = (
-        '<html><body>'
-        '<a href="/a">Click  \n here</a>'
-        '<a href="/b"><b>bold</b> link</a>'
-        '<a>no href</a>'
-        '<a href="/c"></a>'
-        '<script>var x = "<a href=/junk>nope</a>";</script>'
-        '<a href="/d">first<a href="/e">implicit close'
-        '</body></html>'
-    )
-    got = extract_anchors(html, "http://site.example.com/page")
-    assert got == [
-        ("http://site.example.com/a", "Click here"),
-        ("http://site.example.com/b", "bold link"),
-        ("http://site.example.com/c", ""),
-        ("http://site.example.com/d", "first"),
-        ("http://site.example.com/e", "implicit close"),
-    ]
-
-
-def test_extract_anchors_href_sequence_equals_extract_links():
-    """The spec invariant: anchor extraction sees exactly the F8 link
-    sequence — same parser rules, same canonicalization."""
-    from spacetime_crawler_spark.functions.textextract import (
-        extract_anchors,
-        extract_links,
-    )
-    from spacetime_crawler_spark.sources import synth
-
-    p = synth.world("tiny", n_pages=60)
-    base = "http://host0001.example.com/p"
-    cases = [synth.html_of_page(i, p) for i in range(40)]
-    cases += [
-        "",
-        None,
-        b"\xff\xfe garbage <a href='/x'>t",
-        '<a href="/unclosed">tail text',
-    ]
-    for html in cases:
-        urls = [u for u, _ in extract_anchors(html, base)]
-        assert urls == extract_links(html, base)
-
-
 # --- main-content extraction (boilerplate removal) ------------------------------
 
 

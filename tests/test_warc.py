@@ -7,8 +7,6 @@ from __future__ import annotations
 import gzip
 import os
 
-from pyspark.sql import functions as F
-
 from spacetime_crawler_spark.plans import crawl as crawl_mod
 from spacetime_crawler_spark.plans.crawl import CrawlConfig, run_crawl
 from spacetime_crawler_spark.sources import synth, warc
@@ -214,94 +212,6 @@ def test_warc_ingest_extract_text_populates_lang(spark, tmp_path):
     # default path unchanged: no parse, NULL text/lang
     raw = warc.read_warc_pages(spark, str(d)).collect()
     assert all(r.text is None and r.lang is None for r in raw)
-
-
-def test_crawl_annotate_lang_and_language_histogram(spark, tmp_path):
-    """CrawlConfig.annotate_lang wires langid into the crawl loop: a crawl
-    over a multilingual WARC yields a lang-populated fetch_log that equals
-    reliable-langid over the same (re-extracted) text, and the per-language
-    crawl report agrees between its fast path (fetch_log.lang) and its
-    recompute path (F9 + annotate over pages)."""
-    from spacetime_crawler_spark.operators.textstats import annotate_lang
-    from spacetime_crawler_spark.plans import crawl_reports
-    from spacetime_crawler_spark.plans.crawl import prepare_pages
-
-    p, rows, expected = _multilingual_pages(spark)
-    d = tmp_path / "cc"
-    os.makedirs(d)
-    (d / "seg.warc.gz").write_bytes(_warc_bytes(rows, gzip_members=True))
-    pages = warc.read_warc_pages(spark, str(d))
-    # spread seeds so the politeness-bounded fetch set spans many hosts —
-    # the 8-sentence cycle then guarantees language diversity in the log
-    seeds = synth.spread_seed_urls(p, n_seeds=60)
-
-    cfg = CrawlConfig(
-        state_dir=str(tmp_path / "s"), rounds=2, round_budget_s=8.0,
-        annotate_lang=True,
-    )
-    run = run_crawl(spark, pages, seeds, cfg)
-    log = crawl_mod.read_fetch_log(spark, run.io, run.rounds_run)
-    assert "lang" in log.columns
-    fetched = log.filter(F.col("status") == 200)
-    assert fetched.count() > 0
-
-    # fetch_log.lang ≡ reliable langid over the same page text
-    pages_latest = prepare_pages(spark, pages).persist()
-    want = {
-        r.url_norm: r.lang
-        for r in annotate_lang(
-            crawl_reports._fetched_pages(log, pages_latest), text_col="text"
-        ).collect()
-    }
-    got = {r.url_norm: r.lang for r in fetched.select("url_norm", "lang").collect()}
-    assert got == want
-    # the fixture really exercises multiple languages + the NULL case
-    assert len({v for v in got.values() if v is not None}) >= 4
-    assert None in got.values()
-
-    # report: fast path (lang column) ≡ recompute path (drop the column)
-    fast = {(r.lang, r.n_pages) for r in
-            crawl_reports.language_histogram(log, pages_latest).collect()}
-    slow = {(r.lang, r.n_pages) for r in
-            crawl_reports.language_histogram(
-                log.drop("lang"), pages_latest
-            ).collect()}
-    assert fast == slow and len(fast) >= 4
-    pages_latest.unpersist()
-
-
-def test_resume_with_lang_toggled_on_reads_mixed_schema_log(spark, tmp_path):
-    """A crawl resumed with annotate_lang newly enabled writes later
-    fetch_log rounds one column wider; read_fetch_log must union the
-    mixed-schema rounds (lang = NULL for pre-toggle rounds) instead of
-    failing — the parquet-side twin of the Iceberg accept-any-schema
-    upgrade path."""
-    p, rows, _expected = _multilingual_pages(spark)
-    d = tmp_path / "cc"
-    os.makedirs(d)
-    (d / "seg.warc.gz").write_bytes(_warc_bytes(rows, gzip_members=True))
-    pages = warc.read_warc_pages(spark, str(d))
-    seeds = synth.spread_seed_urls(p, n_seeds=60)
-
-    state = str(tmp_path / "s")
-    run_crawl(spark, pages, seeds, CrawlConfig(
-        state_dir=state, rounds=1, round_budget_s=8.0, annotate_lang=False,
-    ))
-    run2 = run_crawl(spark, pages, seeds, CrawlConfig(
-        state_dir=state, rounds=2, round_budget_s=8.0, annotate_lang=True,
-    ), resume=True)
-    assert run2.rounds_run == 2
-
-    log = crawl_mod.read_fetch_log(spark, run2.io, run2.rounds_run)
-    assert "lang" in log.columns
-    r1 = log.filter(F.col("round") == 1)
-    assert r1.count() > 0
-    assert r1.filter(F.col("lang").isNotNull()).count() == 0
-    r2 = log.filter((F.col("round") == 2) & (F.col("status") == 200))
-    assert r2.count() > 0  # the resumed round really ran and fetched
-    # and its rows carry real annotations (the fixture's sentence cycle
-    # makes most pages reliably identifiable)
-    assert r2.filter(F.col("lang").isNotNull()).count() > 0
 
 
 def test_warc_oversize_file_guard(spark, tmp_path):
