@@ -16,10 +16,10 @@ insert-only — cuckoo's deletions buy nothing (SURVEY §4.3).
 Sidecar lifecycle (round 2 design): the sidecar is a per-round STATE TABLE
 (P rows of (part_id, nbits, nhashes, n_items, bits)) committed atomically
 with frontier/seen — resume reads it back in O(P) instead of rebuilding
-from the full seen set.  Maintenance is distributed (union previous rows
-with the round's delta bitmaps, OR per part_id in a grouped-map task); the
-driver never has to hold the bitmaps.  Membership testing is size-gated:
-small sidecars ride one broadcast (destroyed after the round); past
+from the full seen set.  Maintenance is distributed (the previous rows
+cogroup with the round's new keys on part_id and each group ORs them in one
+pass); the driver never has to hold the bitmaps.  Membership testing is
+size-gated: small sidecars ride one broadcast (destroyed after the round); past
 `bloom_broadcast_max_bytes` the candidates COGROUP with the sidecar rows on
 part_id, so each task receives only the bitmaps of its own buckets — the
 shard-routing design SURVEY §4.3 calls for at the 10^10 tier.
@@ -68,56 +68,56 @@ def _build_bitmap_fixed(
     return bits.tobytes()
 
 
-def delta_bitmaps_df(
-    delta: DataFrame, n_parts: int, nbits: int, k: int
+def update_bitmaps_df(
+    prev: DataFrame | None, new_keys: DataFrame, n_parts: int,
+    nbits: int = BITS_PER_PART, k: int = NUM_HASHES,
 ) -> DataFrame:
-    """Per-partition bitmaps of ONE round's newly-seen keys at fixed
-    geometry, as a DataFrame (≤P small rows) — NOT collected.  Incremental
-    bloom maintenance: OR these into the running sidecar table instead of
-    rebuilding from the full seen set — per-round bloom cost becomes O(new),
-    not O(total), which is what survives a 10^10-URL seen set."""
-
-    def build(pdf: pd.DataFrame) -> pd.DataFrame:
-        part = int(pdf["part_id"].iloc[0])
-        bits = _build_bitmap_fixed(
-            pdf["url_hash"].to_numpy(), pdf["h2"].to_numpy(), nbits, k
-        )
-        return pd.DataFrame({
-            "part_id": [part], "nbits": [nbits], "nhashes": [k],
-            "n_items": [len(pdf)], "bits": [bits],
-        })
-
-    keyed = delta.select(
+    """The next sidecar in ONE grouped pass: the previous sidecar rows and
+    the round's newly-seen keys cogroup on part_id = pmod(url_hash, P), and
+    each group ORs its previous bitmap with its new keys' bits.  This is
+    incremental maintenance — O(new) hashing plus a ≤P-row bitmap exchange,
+    never a rebuild from the full seen set.  prev=None (round 0, the resume
+    rebuild) builds every bucket from new_keys alone.  A bucket gets a row
+    iff it had a previous row or has a new key."""
+    keyed = new_keys.select(
         F.pmod("url_hash", F.lit(n_parts)).cast("int").alias("part_id"),
         "url_hash",
         "h2",
     )
-    return keyed.groupBy("part_id").applyInPandas(build, schema=BLOOM_SCHEMA)
+    if prev is None:
+        # an empty native relation: the no-sidecar case runs the same
+        # cogroup, and no Python RDD is built for it
+        prev = new_keys.sparkSession.range(0).select(*[
+            F.lit(None).cast(f.dataType).alias(f.name) for f in BLOOM_SCHEMA.fields
+        ])
 
-
-def merge_bitmaps_df(rows: DataFrame) -> DataFrame:
-    """OR together all bitmap rows sharing a part_id (same geometry) —
-    distributed sidecar maintenance: union(previous sidecar, delta bitmaps)
-    → one merged row per partition bucket.  Shuffles only ≤2P small rows."""
-
-    def merge(pdf: pd.DataFrame) -> pd.DataFrame:
-        nbits = int(pdf["nbits"].iloc[0])
-        k = int(pdf["nhashes"].iloc[0])
-        assert (pdf["nbits"] == nbits).all() and (pdf["nhashes"] == k).all(), (
-            "bloom geometry mismatch"
-        )
+    def update(prev_pdf: pd.DataFrame, keys_pdf: pd.DataFrame) -> pd.DataFrame:
+        # OR-ing bitmaps of another geometry would test bit positions
+        # against the wrong modulus — a silent false negative; ValueError,
+        # not assert, so the check survives `python -O`
+        if not ((prev_pdf["nbits"] == nbits).all()
+                and (prev_pdf["nhashes"] == k).all()):
+            raise ValueError("bloom sidecar geometry differs from the update's")
         acc = np.zeros(nbits // 8, dtype=np.uint8)
-        for b in pdf["bits"]:
+        for b in prev_pdf["bits"]:
             acc |= np.frombuffer(b, dtype=np.uint8)
+        if len(keys_pdf):
+            acc |= np.frombuffer(_build_bitmap_fixed(
+                keys_pdf["url_hash"].to_numpy(), keys_pdf["h2"].to_numpy(),
+                nbits, k,
+            ), dtype=np.uint8)
+        part = (prev_pdf if len(prev_pdf) else keys_pdf)["part_id"].iloc[0]
         return pd.DataFrame({
-            "part_id": [int(pdf["part_id"].iloc[0])],
-            "nbits": [nbits],
-            "nhashes": [k],
-            "n_items": [int(pdf["n_items"].sum())],
+            "part_id": [int(part)], "nbits": [nbits], "nhashes": [k],
+            "n_items": [int(prev_pdf["n_items"].sum()) + len(keys_pdf)],
             "bits": [acc.tobytes()],
         })
 
-    return rows.groupBy("part_id").applyInPandas(merge, schema=BLOOM_SCHEMA)
+    return (
+        prev.groupBy("part_id")
+        .cogroup(keyed.groupBy("part_id"))
+        .applyInPandas(update, schema=BLOOM_SCHEMA)
+    )
 
 
 def flag_maybe_seen_cogrouped(
@@ -148,7 +148,7 @@ def flag_maybe_seen_cogrouped(
         else:
             nbits = int(bloom_pdf["nbits"].iloc[0])
             k = int(bloom_pdf["nhashes"].iloc[0])
-            # uniform-geometry guard (same contract as merge_bitmaps_df):
+            # uniform-geometry guard (same contract as update_bitmaps_df):
             # OR-ing bitmaps built under different nbits/nhashes would
             # compute bit positions against the wrong modulus — a silent
             # bloom FALSE NEGATIVE that re-admits seen URLs.  A mixed

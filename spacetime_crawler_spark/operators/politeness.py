@@ -22,6 +22,7 @@ Scale design:
 
 from __future__ import annotations
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -31,6 +32,8 @@ from spacetime_crawler_spark.operators.udfs import robots_parse_udf
 
 SALT_BUCKETS = 8
 
+# the gated columns the scheduler keeps, in SCHEDULE_SCHEMA order
+_SCHEDULE_IN = ("host", "url_norm", "url_hash", "h2", "depth", "crawl_delay")
 SCHEDULE_SCHEMA = (
     "host string, url_norm string, url_hash bigint, h2 int, depth int,"
     " crawl_delay double, fetch_seq int, due_s double"
@@ -143,19 +146,19 @@ def schedule_round(gated: DataFrame, round_budget_s: float) -> DataFrame:
 
     # Phase 3 — the mandated applyInPandas per-host priority queue: groups
     # are ≤ quota rows, so pandas materialization is bounded regardless of
-    # host skew.
+    # host skew.  numpy orders the group (lexsort's last key is primary;
+    # unicode arrays compare by code point, like Python str) and one frame
+    # is built from the ordered columns.
     def assign_schedule(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(["depth", "url_norm"], kind="mergesort")
-        delay = pdf["crawl_delay"].iloc[0]
-        n = len(pdf)
-        pdf = pdf.assign(
-            fetch_seq=range(1, n + 1),
-            due_s=[delay * s for s in range(1, n + 1)],
-        )
-        return pdf[
-            ["host", "url_norm", "url_hash", "h2", "depth", "crawl_delay",
-             "fetch_seq", "due_s"]
-        ]
+        order = np.lexsort((
+            pdf["url_norm"].to_numpy(dtype=str), pdf["depth"].to_numpy()
+        ))
+        seq = np.arange(1, len(order) + 1)
+        out = {c: pdf[c].to_numpy()[order] for c in _SCHEDULE_IN}
+        out["fetch_seq"] = seq.astype(np.int32)
+        # delay·seq in float64, bitwise equal to the Python float product
+        out["due_s"] = pdf["crawl_delay"].iat[0] * seq.astype(np.float64)
+        return pd.DataFrame(out)
 
     return capped.groupBy("host").applyInPandas(
         assign_schedule, schema=SCHEDULE_SCHEMA

@@ -20,15 +20,27 @@ CREATED with bucket(P, url_hash) DDL (sources/io_tables.py::iceberg_layout),
 so under storage-partitioned joins that exchange disappears entirely.
 Lineage never spans rounds — every round re-reads committed state, the
 Spark analogue of the reference's save-file sync.
+
+A round is one concurrent batch of writes plus one commit.  The writes run
+on a small thread pool: the fetch_log sink next to the candidate →
+frontier chain; the seen, bloom and (every K rounds) seen_snapshot writes
+join the batch as soon as the frontier write has cached the round's new
+rows, which is all they read.  Every write is joined before the round's
+single io.commit, so the commit protocol is unchanged: a failed write
+leaves the round uncommitted, and resume re-runs it.  Prep (robots rules,
+the page-key index and round 0's writes) is one batch the same way.
 """
 
 from __future__ import annotations
 
 import time
+from concurrent.futures import Future, ThreadPoolExecutor, wait
 from dataclasses import dataclass, field
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.util import inheritable_thread_target
 
 from spacetime_crawler_spark.operators import bloom
 from spacetime_crawler_spark.operators.politeness import (
@@ -42,7 +54,7 @@ from spacetime_crawler_spark.operators.udfs import (
     canonicalize_udf,
     page_extract_udf,
 )
-from spacetime_crawler_spark.functions.urlnorm import BLACKLIST_RLIKE
+from spacetime_crawler_spark.functions.urlnorm import BLACKLIST_RLIKE, canonicalize_url
 from spacetime_crawler_spark.sources.io_tables import ParquetManifestIO
 
 FRONTIER_COLS = ("url_norm", "url_hash", "h2", "host", "depth")
@@ -78,10 +90,23 @@ class RoundMetrics:
     bloom_skipped: int = 0
     urls_new: int = 0
     wall_s: float = 0.0
-    # per-phase wall breakdown (driver-observed): which parts of a round
-    # scale with cores (parallel work W) vs stay fixed (per-round cost F) —
-    # the diagnostic that drives the scaling-efficiency work
+    # per-write wall spans (driver-observed): each entry is its own write's
+    # span — including the planning and driver jobs it runs — from start
+    # to return.  A round's writes run concurrently, so the spans overlap
+    # and their sum is not the round's wall time (wall_s is)
     phase_s: dict = field(default_factory=dict)
+
+
+# the committed `metrics` table: one row per RoundMetrics, fields in order
+_METRICS_SCHEMA = pa.schema([
+    ("round", pa.int32()),
+    *[(name, pa.int64()) for name in (
+        "urls_selected", "urls_fetched_ok", "urls_404", "candidates",
+        "bloom_skipped", "urls_new",
+    )],
+    ("wall_s", pa.float64()),
+    ("phase_s", pa.map_(pa.string(), pa.float64())),
+])
 
 
 @dataclass
@@ -231,23 +256,19 @@ def init_frontier(spark: SparkSession, seeds: list[str],
     """Seeds → (frontier, seen) at round 0 (admission-at-discovery, like the
     reference's add_url).
 
-    The canonicalized seed set is materialized ONCE (eager localCheckpoint):
-    without it, the frontier and seen writes each re-ship the driver-side
-    seed list to executors and re-run the canonicalize UDF + distinct — at
-    100k+ seeds that doubles round-0's fixed cost for no reason, and on a
-    real cluster it doubles the driver→executor seed transfer."""
-    seed_df = spark.createDataFrame([(s,) for s in seeds], "url string")
-    canon = (
-        seed_df.withColumn("url_norm", canonicalize_udf("url"))
-        .filter(_is_valid_expr("url_norm"))
-        .select("url_norm")
-        .distinct()
-    )
-    frontier = _with_keys(canon).withColumn(
+    The seed list already lives on the driver, so it is canonicalized there
+    with the pinned canonicalize_url and shipped as one Arrow table: a
+    Python UDF stage would only send it through a worker and back.  The
+    result is a local relation, so the round-0 frontier, seen and bloom
+    writes each re-read it for free — no materialization job."""
+    canon = spark.createDataFrame(pa.table({
+        "url_norm": pa.array(
+            list(dict.fromkeys(map(canonicalize_url, seeds))), pa.string()
+        ),
+    }))
+    frontier = _with_keys(canon.filter(_is_valid_expr("url_norm"))).withColumn(
         "host", F.lower(F.parse_url("url_norm", F.lit("HOST")))
-    ).withColumn("depth", F.lit(0)).select(*FRONTIER_COLS).localCheckpoint(
-        eager=True
-    )
+    ).withColumn("depth", F.lit(0)).select(*FRONTIER_COLS)
     seen = frontier.select("url_norm", "url_hash", "h2").withColumn(
         "round_seen", F.lit(0)
     )
@@ -274,6 +295,94 @@ def _bloom_state_matches(spark, io, rnd: int, cfg: CrawlConfig) -> bool:
     )
 
 
+# --- one round's batch of concurrent writes -----------------------------------
+
+# the largest batches: prep (robots rules, the page-key index and round 0's
+# frontier, seen and bloom writes) and a compacting round (fetch_log,
+# frontier, seen, bloom and seen_snapshot)
+_BATCH_THREADS = 5
+
+
+def _submit(spark: SparkSession, pool: ThreadPoolExecutor, *tasks) -> list[Future]:
+    """Start each no-argument task on the pool.  Tasks inherit the caller's
+    Spark local properties (job description, job group) and tags, so the
+    jobs they run are labelled as if the caller ran them."""
+    return [pool.submit(inheritable_thread_target(spark)(t)) for t in tasks]
+
+
+def _join(futures: list[Future]) -> list:
+    """Wait for EVERY future, then return their results in order.  If any
+    raised, the first failure (in submission order) is re-raised only once
+    all of them have finished, so no write of a failed batch is still
+    running when its round is abandoned uncommitted."""
+    wait(futures)
+    return [f.result() for f in futures]
+
+
+def _timed(phase_s: dict, key: str, task):
+    """task, recording its own wall span in phase_s[key] when it returns."""
+    def run():
+        t = time.monotonic()
+        out = task()
+        phase_s[key] = round(time.monotonic() - t, 3)
+        return out
+    return run
+
+
+def _observed_write(io, table: str, rnd: int, df: DataFrame, *extra) -> dict:
+    """Write (table, rnd) with its row count `n` — and any `extra`
+    aggregates — observed at the root of the written query; returns the
+    observed values.  No read-back or recompute job."""
+    obs = Observation()
+    io.write(table, rnd, df.observe(obs, F.count(F.lit(1)).alias("n"), *extra))
+    return obs.get
+
+
+def _dedup_candidates(
+    spark: SparkSession,
+    candidates: DataFrame,
+    seen: DataFrame,
+    bloom_prev: DataFrame | None,
+    cfg: CrawlConfig,
+    m: RoundMetrics,
+):
+    """F3 — bloom prefilter (definite negatives skip the exact anti-join),
+    then the exact left_anti vs seen, both sides partitioned by url_hash.
+    Returns (new_urls, flagged, bloom_bcast): `flagged` is the persisted
+    candidates + maybe_seen cache (None without the bloom), `bloom_bcast`
+    the sidecar broadcast to destroy once the round is committed (None on
+    the cogroup path)."""
+    flagged = bloom_bcast = None
+    if bloom_prev is not None:
+        sidecar_bytes = cfg.n_parts * (bloom.BITS_PER_PART // 8)
+        if sidecar_bytes <= cfg.bloom_broadcast_max_bytes:
+            # small sidecar: one broadcast, destroyed at round end
+            maybe_seen_udf, bloom_bcast = bloom.make_maybe_seen_udf(
+                spark, bloom.collect_sidecar(bloom_prev), cfg.n_parts
+            )
+            flagged = candidates.withColumn(
+                "maybe_seen", maybe_seen_udf("url_hash", "h2")
+            ).persist()
+        else:
+            # large sidecar: cogroup on part_id — each task receives only
+            # its buckets' bitmaps, never the whole sidecar
+            flagged = bloom.flag_maybe_seen_cogrouped(
+                candidates, bloom_prev, cfg.n_parts
+            ).persist()
+        to_check = flagged.filter(F.col("maybe_seen")).drop("maybe_seen")
+        definitely_new = flagged.filter(~F.col("maybe_seen")).drop("maybe_seen")
+    else:
+        m.candidates = candidates.count()
+        to_check = candidates
+    checked_new = to_check.repartition(cfg.n_parts, "url_hash").join(
+        seen.repartition(cfg.n_parts, "url_hash"),
+        ["url_hash", "url_norm"],
+        "left_anti",
+    )
+    new_urls = checked_new if flagged is None else definitely_new.unionByName(checked_new)
+    return new_urls, flagged, bloom_bcast
+
+
 def run_crawl(
     spark: SparkSession,
     pages: DataFrame,
@@ -283,9 +392,10 @@ def run_crawl(
     io=None,
 ) -> CrawlRun:
     """io: any object honoring the state-IO contract (write/commit/read/
-    read_uncommitted/manifest/committed_rounds/last_committed_round/reset) —
+    manifest/committed_rounds/last_committed_round/reset) —
     ParquetManifestIO by default, IcebergIO on a real cluster (both in
-    sources/io_tables.py)."""
+    sources/io_tables.py).  io.write may be called from several threads at
+    once, always for different tables."""
     io = io if io is not None else ParquetManifestIO(cfg.state_dir)
     # bucketed-store wiring check: a store whose bucket(P, url_hash) DDL
     # modulus differs from cfg.n_parts would silently create a layout the
@@ -299,306 +409,282 @@ def run_crawl(
             " engine's repartitioning (construct the store with"
             " n_buckets=cfg.n_parts)"
         )
-    run = CrawlRun(io=io)
+    with ThreadPoolExecutor(_BATCH_THREADS, thread_name_prefix="crawl-batch") as pool:
+        run = CrawlRun(io=io)
+        page_keys = prepare_page_keys(spark, pages).persist()  # narrow, no html
+        robots_rules = build_robots_rules(pages).persist()
 
-    page_keys = prepare_page_keys(spark, pages).persist()  # narrow, no html
-    robots_rules = build_robots_rules(pages).persist()
-    robots_rules.count()  # materialize the small side once
-
-    start_round = 0
-    if resume:
-        # the round manifest commits frontier+seen+fetch_log atomically, so
-        # frontier's last committed round IS the run's last consistent round
-        last = io.last_committed_round("frontier")
-        if last is not None:
-            start_round = last
-        # a resume that adds no new rounds must still report the committed
-        # frontier round, so read_fetch_log(io, run.rounds_run) sees the run
-        run.rounds_run = start_round
-    else:
-        # fence against stale committed rounds from an earlier run reusing
-        # this state_dir (they would otherwise union into read_seen/
-        # read_fetch_log silently)
-        io.reset()
-    if start_round == 0:
-        frontier, seen = init_frontier(spark, seeds, cfg)
-        # row counts for written tables ride the write actions as observed
-        # metrics, never a read-back or lineage-recompute job (per-round
-        # driver job count is the fixed cost F that caps local scaling
-        # efficiency).  The two counts that can't be observations — the
-        # bloom-path candidate stats (cheap flagged-cache aggregate) and the
-        # non-bloom candidates.count() — are called out where they run.
-        obs_f0, obs_s0 = Observation(), Observation()
-        io.write("frontier", 0,
-                 frontier.observe(obs_f0, F.count(F.lit(1)).alias("n")))
-        # `seen` is stored as per-round DELTAS (round=N holds only the URLs
-        # first seen in round N): writes are O(new), never O(total) — the
-        # snapshot-rewrite alternative re-writes the whole 10^10-key set
-        # every round.  Readers union the latest compacted snapshot plus the
-        # ≤K tail deltas (see read_seen_up_to); Iceberg backend compacts
-        # natively.
-        io.write("seen", 0, seen.repartition(cfg.n_parts, "url_hash")
-                 .observe(obs_s0, F.count(F.lit(1)).alias("n")))
-        tables = {"frontier": obs_f0.get["n"], "seen": obs_s0.get["n"]}
-        if cfg.use_bloom:
-            # the bloom sidecar is itself a committed state table: resume
-            # reads it back in O(P) instead of rebuilding from the seen set
-            io.write("bloom", 0, bloom.delta_bitmaps_df(
-                io.read_uncommitted(spark, "seen", 0), cfg.n_parts,
-                bloom.BITS_PER_PART, bloom.NUM_HASHES,
-            ))
-            tables["bloom"] = cfg.n_parts
-        io.commit(0, tables)
-    bloom_override: DataFrame | None = None
-    if (
-        cfg.use_bloom
-        and start_round > 0
-        and not _bloom_state_matches(spark, io, start_round, cfg)
-    ):
-        # resumed state without a bloom table, or one built under a DIFFERENT
-        # geometry (n_parts / bits / hashes — reusing it would mis-bucket
-        # membership tests and re-admit seen URLs): rebuild once from seen,
-        # IN MEMORY ONLY.  Never rewrite the already-committed round's bloom
-        # slice — a crash mid-rewrite would leave committed-but-partial
-        # state, exactly what the round-manifest protocol forbids.  The
-        # rebuilt sidecar feeds the first resumed round and is then written
-        # (and committed) at that round like any other.
-        bloom_override = bloom.delta_bitmaps_df(
-            read_seen_up_to(spark, io, start_round), cfg.n_parts,
-            bloom.BITS_PER_PART, bloom.NUM_HASHES,
-        ).persist()
-
-    for rnd in range(start_round + 1, cfg.rounds + 1):
-        t0 = time.monotonic()
-        m = RoundMetrics(round=rnd)
-        round_persists: list[DataFrame] = []
-        # the committed manifest already records last round's frontier row
-        # count — an isEmpty() probe job here would be pure fixed cost
-        prev_frontier_rows = io.manifest("frontier", rnd - 1)["rows"]
-        if prev_frontier_rows == 0:
-            break
-        frontier = io.read(spark, "frontier", rnd - 1)
-        seen = read_seen_up_to(spark, io, rnd - 1)
-
-        # F6 + F7 — gate and schedule
-        gated = robots_gate(frontier, robots_rules).persist()
-        selected = schedule_round(gated, cfg.round_budget_s).persist()
-        leftover = leftover_after_schedule(gated, selected)
-
-        # F5 — adaptive fetch: broadcast the quota-bounded selected set while
-        # small (html never exchanged at all); past the gate, shuffled hash
-        # joins on narrow keys.  The cheap bound (last round's committed
-        # frontier row count, free from the manifest) avoids an extra job in
-        # the common case; only when the frontier outgrows the gate do we pay
-        # one count() on the (persisted) selected set for an exact decision.
-        sel_bound = prev_frontier_rows
-        if sel_bound > cfg.fetch_broadcast_max_rows:
-            sel_bound = selected.count()
-        broadcast_ok = sel_bound <= cfg.fetch_broadcast_max_rows
-        fetched = fetch_join_round(
-            spark, pages, page_keys, selected, broadcast_selected=broadcast_ok
-        )
-
-        # F8+F9 fused — ONE parse per page produces text AND links; persisted
-        # WITHOUT the html payload so both downstream consumers (lineage sink,
-        # candidate pipeline) reuse the single Python pass.
-        enriched = extract_fetched(fetched).persist()
-
-        fetch_log = enriched.select(
-            F.lit(rnd).alias("round"),
-            F.spark_partition_id().alias("part_id"),
-            "host",
-            "url_norm",
-            "url_hash",
-            "depth",
-            "fetch_seq",
-            "due_s",
-            "status",
-            "text_sha256",
-            "content_len",
-        )
-        # both counts ride the write action as observed metrics (zero extra
-        # jobs — no lineage recompute, no read-back)
-        t_ph = time.monotonic()
-        obs_log = Observation()
-        io.write("fetch_log", rnd, fetch_log.observe(
-            obs_log,
-            F.count(F.lit(1)).alias("n"),
-            F.sum((F.col("status") == 200).cast("long")).alias("ok"),
-        ))
-        log_stats = obs_log.get
-        m.phase_s["fetch_extract_write"] = round(time.monotonic() - t_ph, 3)
-        t_ph = time.monotonic()
-        m.urls_selected = log_stats["n"]
-        m.urls_fetched_ok = log_stats["ok"] or 0
-        m.urls_404 = m.urls_selected - m.urls_fetched_ok
-
-        # F1 — native validity filter over the already-extracted links
-        links = (
-            enriched.filter("status = 200")
-            .select("depth", F.explode("links").alias("link"))
-            .filter(_is_valid_expr("link"))
-        )
-        # within-batch collapse: one row per url, min discovery depth
-        candidates = _with_keys(
-            links.groupBy(F.col("link").alias("url_norm")).agg(
-                (F.min("depth") + 1).alias("depth")
-            )
-        )
-
-        # F3 — bloom prefilter (definite-negatives skip the exact anti-join),
-        # then exact left_anti vs seen, both sides partitioned by url_hash.
-        bloom_bcast = None
-        if cfg.use_bloom:
-            if rnd == start_round + 1 and bloom_override is not None:
-                bloom_prev = bloom_override
-            else:
-                bloom_prev = io.read(spark, "bloom", rnd - 1)
-            sidecar_bytes = cfg.n_parts * (bloom.BITS_PER_PART // 8)
-            if sidecar_bytes <= cfg.bloom_broadcast_max_bytes:
-                # small sidecar: one broadcast, destroyed at round end
-                maybe_seen_udf, bloom_bcast = bloom.make_maybe_seen_udf(
-                    spark, bloom.collect_sidecar(bloom_prev), cfg.n_parts
-                )
-                flagged = candidates.withColumn(
-                    "maybe_seen", maybe_seen_udf("url_hash", "h2")
-                ).persist()
-            else:
-                # large sidecar: cogroup on part_id — each task receives only
-                # its buckets' bitmaps, never the whole sidecar
-                flagged = bloom.flag_maybe_seen_cogrouped(
-                    candidates, bloom_prev, cfg.n_parts
-                ).persist()
-            round_persists.append(flagged)
-            definitely_new = flagged.filter(~F.col("maybe_seen")).drop("maybe_seen")
-            to_check = flagged.filter(F.col("maybe_seen")).drop("maybe_seen")
-            checked_new = to_check.repartition(cfg.n_parts, "url_hash").join(
-                seen.repartition(cfg.n_parts, "url_hash"),
-                ["url_hash", "url_norm"],
-                "left_anti",
-            )
-            new_urls = definitely_new.unionByName(checked_new)
+        start_round = 0
+        if resume:
+            # the round manifest commits frontier+seen+fetch_log atomically, so
+            # frontier's last committed round IS the run's last consistent round
+            last = io.last_committed_round("frontier")
+            if last is not None:
+                start_round = last
+            # a resume that adds no new rounds must still report the committed
+            # frontier round, so read_fetch_log(io, run.rounds_run) sees the run
+            run.rounds_run = start_round
         else:
-            m.candidates = candidates.count()
-            new_urls = candidates.repartition(cfg.n_parts, "url_hash").join(
-                seen.repartition(cfg.n_parts, "url_hash"),
-                ["url_hash", "url_norm"],
-                "left_anti",
+            # fence against stale committed rounds from an earlier run reusing
+            # this state_dir (they would otherwise union into read_seen/
+            # read_fetch_log silently)
+            io.reset()
+
+        # prep: one batch builds the small robots side and the page-key
+        # index — only if a round will run — next to round 0's writes
+        prep = []
+        if start_round < cfg.rounds and (
+            start_round == 0 or io.manifest("frontier", start_round)["rows"] > 0
+        ):
+            prep += [robots_rules.count, page_keys.count]
+        tables: dict[str, int] = {}
+        if start_round == 0:
+            frontier, seen = init_frontier(spark, seeds, cfg)
+
+            # row counts for written tables ride the write actions as
+            # observed metrics, never a read-back or lineage-recompute job
+            # (per-round driver job count is the fixed cost F that caps
+            # local scaling efficiency)
+            def write_frontier0():
+                tables["frontier"] = _observed_write(
+                    io, "frontier", 0, frontier)["n"]
+
+            def write_seen0():
+                # `seen` is stored as per-round DELTAS (round=N holds only
+                # the URLs first seen in round N): writes are O(new), never
+                # O(total).  Readers union the latest compacted snapshot
+                # plus the ≤K tail deltas (see read_seen_up_to)
+                tables["seen"] = _observed_write(
+                    io, "seen", 0, seen.repartition(cfg.n_parts, "url_hash"))["n"]
+
+            def write_bloom0():
+                # the bloom sidecar is itself a committed state table:
+                # resume reads it back in O(P) instead of rebuilding it
+                io.write("bloom", 0, bloom.update_bitmaps_df(
+                    None, frontier, cfg.n_parts))
+                tables["bloom"] = cfg.n_parts
+
+            prep += [write_frontier0, write_seen0]
+            if cfg.use_bloom:
+                prep.append(write_bloom0)
+        _join(_submit(spark, pool, *prep))
+        if start_round == 0:
+            io.commit(0, tables)
+
+        bloom_override: DataFrame | None = None
+        if (
+            cfg.use_bloom
+            and start_round > 0
+            and not _bloom_state_matches(spark, io, start_round, cfg)
+        ):
+            # resumed state without a bloom table, or one built under a DIFFERENT
+            # geometry (n_parts / bits / hashes — reusing it would mis-bucket
+            # membership tests and re-admit seen URLs): rebuild once from seen,
+            # IN MEMORY ONLY.  Never rewrite the already-committed round's bloom
+            # slice — a crash mid-rewrite would leave committed-but-partial
+            # state, exactly what the round-manifest protocol forbids.  The
+            # rebuilt sidecar feeds the first resumed round and is then written
+            # (and committed) at that round like any other.
+            bloom_override = bloom.update_bitmaps_df(
+                None, read_seen_up_to(spark, io, start_round), cfg.n_parts
+            ).persist()
+
+        for rnd in range(start_round + 1, cfg.rounds + 1):
+            t0 = time.monotonic()
+            m = RoundMetrics(round=rnd)
+            # the committed manifest already records last round's frontier row
+            # count — an isEmpty() probe job here would be pure fixed cost
+            prev_frontier_rows = io.manifest("frontier", rnd - 1)["rows"]
+            if prev_frontier_rows == 0:
+                break
+            frontier = io.read(spark, "frontier", rnd - 1)
+            seen = read_seen_up_to(spark, io, rnd - 1)
+            bloom_prev = None
+            if cfg.use_bloom:
+                if rnd == start_round + 1 and bloom_override is not None:
+                    bloom_prev = bloom_override
+                else:
+                    bloom_prev = io.read(spark, "bloom", rnd - 1)
+
+            # F6 + F7 — gate and schedule
+            gated = robots_gate(frontier, robots_rules).persist()
+            selected = schedule_round(gated, cfg.round_budget_s).persist()
+            leftover = leftover_after_schedule(gated, selected)
+
+            # F5 — adaptive fetch: broadcast the quota-bounded selected set while
+            # small (html never exchanged at all); past the gate, shuffled hash
+            # joins on narrow keys.  The cheap bound (last round's committed
+            # frontier row count, free from the manifest) avoids an extra job in
+            # the common case; only when the frontier outgrows the gate do we pay
+            # one count() on the (persisted) selected set for an exact decision.
+            sel_bound = prev_frontier_rows
+            if sel_bound > cfg.fetch_broadcast_max_rows:
+                sel_bound = selected.count()
+            broadcast_ok = sel_bound <= cfg.fetch_broadcast_max_rows
+            fetched = fetch_join_round(
+                spark, pages, page_keys, selected, broadcast_selected=broadcast_ok
             )
 
-        new_frontier_rows = new_urls.withColumn(
-            "host", F.lower(F.parse_url("url_norm", F.lit("HOST")))
-        ).select(*FRONTIER_COLS).persist()
+            # F8+F9 fused — ONE parse per page produces text AND links; persisted
+            # WITHOUT the html payload so both downstream consumers (lineage sink,
+            # candidate pipeline) reuse the single Python pass.
+            enriched = extract_fetched(fetched).persist()
 
-        # F11 — merge: leftover ∪ newly discovered (min depth per url)
-        next_frontier = (
-            leftover.select(*FRONTIER_COLS)
-            .unionByName(new_frontier_rows)
-            .groupBy("url_norm", "url_hash", "h2", "host")
-            .agg(F.min("depth").alias("depth"))
-            .select(*FRONTIER_COLS)
-        )
-        seen_delta = new_frontier_rows.select(
-            "url_norm", "url_hash", "h2"
-        ).withColumn("round_seen", F.lit(rnd))
+            fetch_log = enriched.select(
+                F.lit(rnd).alias("round"),
+                F.spark_partition_id().alias("part_id"),
+                "host",
+                "url_norm",
+                "url_hash",
+                "depth",
+                "fetch_seq",
+                "due_s",
+                "status",
+                "text_sha256",
+                "content_len",
+            )
 
-        # The frontier write is the round's one lineage-materializing action
-        # (it populates the new_frontier_rows cache); the seen write then
-        # reads that cache.  Row counts for the manifest ride both writes as
-        # observed metrics — the old read-back count() and urls_new count()
-        # jobs are gone.
-        m.phase_s["bloom_read_plan"] = round(time.monotonic() - t_ph, 3)
-        t_ph = time.monotonic()
-        obs_front, obs_seen = Observation(), Observation()
-        io.write("frontier", rnd,
-                 next_frontier.observe(obs_front, F.count(F.lit(1)).alias("n")))
-        n_frontier = obs_front.get["n"]
-        if cfg.use_bloom:
-            # the frontier write above just materialized the flagged cache,
-            # so this aggregate is a cache scan, not a recompute — a cheap
-            # stats job where the pre-round-3 version paid the full
-            # candidate-pipeline compute serially before the write
-            cstats = flagged.agg(
-                F.count("*").alias("n"),
-                F.sum(F.col("maybe_seen").cast("long")).alias("maybes"),
-            ).collect()[0]
-            m.candidates = cstats.n
-            m.bloom_skipped = m.candidates - (cstats.maybes or 0)
-        m.phase_s["frontier_write"] = round(time.monotonic() - t_ph, 3)
-        t_ph = time.monotonic()
-        io.write("seen", rnd,
-                 seen_delta.repartition(cfg.n_parts, "url_hash")
-                 .observe(obs_seen, F.count(F.lit(1)).alias("n")))
-        m.urls_new = obs_seen.get["n"]
-        m.phase_s["seen_write"] = round(time.monotonic() - t_ph, 3)
-        t_ph = time.monotonic()
-        tables = {
-            "frontier": n_frontier,
-            "seen": m.urls_new,  # delta count; snapshot is full
-            "fetch_log": m.urls_selected,
-        }
-        if cfg.use_bloom:
-            # distributed sidecar maintenance: previous rows ∪ this round's
-            # delta bitmaps, OR'd per bucket — O(new) work + ≤2P-row shuffle
-            io.write("bloom", rnd, bloom.merge_bitmaps_df(
-                bloom_prev.unionByName(bloom.delta_bitmaps_df(
-                    io.read_uncommitted(spark, "seen", rnd), cfg.n_parts,
-                    bloom.BITS_PER_PART, bloom.NUM_HASHES,
-                ))
+            # F1 — native validity filter over the already-extracted links
+            links = (
+                enriched.filter("status = 200")
+                .select("depth", F.explode("links").alias("link"))
+                .filter(_is_valid_expr("link"))
+            )
+            # within-batch collapse: one row per url, min discovery depth
+            candidates = _with_keys(
+                links.groupBy(F.col("link").alias("url_norm")).agg(
+                    (F.min("depth") + 1).alias("depth")
+                )
+            )
+
+            def write_fetch_log():
+                # both counts ride the write action as observed metrics
+                return _observed_write(
+                    io, "fetch_log", rnd, fetch_log,
+                    F.sum((F.col("status") == 200).cast("long")).alias("ok"),
+                )
+
+            def write_frontier():
+                # F3 dedup, then F11 merge: leftover ∪ newly discovered (min
+                # depth per url).  This write is the round's one lineage-
+                # materializing action for the candidate side: it fills the
+                # flagged and new_frontier_rows caches the next batch reads.
+                new_urls, flagged, bloom_bcast = _dedup_candidates(
+                    spark, candidates, seen, bloom_prev, cfg, m
+                )
+                new_rows = new_urls.withColumn(
+                    "host", F.lower(F.parse_url("url_norm", F.lit("HOST")))
+                ).select(*FRONTIER_COLS).persist()
+                next_frontier = (
+                    leftover.select(*FRONTIER_COLS)
+                    .unionByName(new_rows)
+                    .groupBy("url_norm", "url_hash", "h2", "host")
+                    .agg(F.min("depth").alias("depth"))
+                    .select(*FRONTIER_COLS)
+                )
+                n = _observed_write(io, "frontier", rnd, next_frontier)["n"]
+                return n, new_rows, flagged, bloom_bcast
+
+            # the round's one batch: the fetch_log sink next to the candidate →
+            # frontier chain; seen, bloom and compaction need only the rows the
+            # frontier write cached, so they join the batch as soon as it
+            # returns — never a read-back of the uncommitted seen delta
+            futures = _submit(
+                spark, pool,
+                _timed(m.phase_s, "fetch_extract_write", write_fetch_log),
+                _timed(m.phase_s, "frontier_write", write_frontier),
+            )
+            tables: dict[str, int] = {}
+            try:
+                n_frontier, new_frontier_rows, flagged, bloom_bcast = futures[1].result()
+                seen_delta = new_frontier_rows.select(
+                    "url_norm", "url_hash", "h2"
+                ).withColumn("round_seen", F.lit(rnd))
+
+                def write_seen():
+                    tables["seen"] = _observed_write(  # delta count
+                        io, "seen", rnd,
+                        seen_delta.repartition(cfg.n_parts, "url_hash"),
+                    )["n"]
+
+                def write_bloom():
+                    # distributed sidecar maintenance: previous rows cogrouped
+                    # with this round's new keys, OR'd per bucket in one pass
+                    io.write("bloom", rnd, bloom.update_bitmaps_df(
+                        bloom_prev, new_frontier_rows, cfg.n_parts
+                    ))
+                    tables["bloom"] = cfg.n_parts
+
+                def write_snapshot():
+                    # compaction: one full snapshot so seen readers union ≤K+1
+                    # files instead of O(rounds); committed with the round
+                    tables["seen_snapshot"] = _observed_write(
+                        io, "seen_snapshot", rnd,
+                        seen.unionByName(seen_delta)
+                        .repartition(cfg.n_parts, "url_hash"),
+                    )["n"]
+
+                later = [_timed(m.phase_s, "seen_write", write_seen)]
+                if cfg.use_bloom:
+                    later.append(_timed(m.phase_s, "bloom_write", write_bloom))
+                if cfg.seen_compact_every and rnd % cfg.seen_compact_every == 0:
+                    later.append(_timed(m.phase_s, "compact_write", write_snapshot))
+                futures += _submit(spark, pool, *later)
+                if flagged is not None:
+                    # the frontier write filled the flagged cache, so this
+                    # aggregate is a cache scan, running next to the writes
+                    cstats = flagged.agg(
+                        F.count("*").alias("n"),
+                        F.sum(F.col("maybe_seen").cast("long")).alias("maybes"),
+                    ).collect()[0]
+                    m.candidates = cstats.n
+                    m.bloom_skipped = m.candidates - (cstats.maybes or 0)
+            finally:
+                # every submitted write finishes before the round either
+                # commits or is abandoned with the first error
+                wait(futures)
+            log_stats = _join(futures)[0]
+            m.urls_selected = log_stats["n"]
+            m.urls_fetched_ok = log_stats["ok"] or 0
+            m.urls_404 = m.urls_selected - m.urls_fetched_ok
+            tables.update(fetch_log=m.urls_selected, frontier=n_frontier)
+            m.urls_new = tables["seen"]
+            m.wall_s = time.monotonic() - t0
+            io.commit(rnd, tables)
+            run.metrics.append(m)
+            run.rounds_run = rnd
+
+            for df in (gated, selected, enriched, new_frontier_rows, flagged):
+                if df is not None:
+                    df.unpersist()
+            if bloom_bcast is not None:
+                # all round outputs are committed — free this round's sidecar
+                # broadcast so driver/executor memory stays O(1 sidecar), not
+                # O(rounds × sidecar)
+                bloom_bcast.destroy()
+            if bloom_override is not None and rnd == start_round + 1:
+                bloom_override.unpersist()
+                bloom_override = None
+            if n_frontier == 0:
+                break
+
+        # F12 — one metrics snapshot for the whole run (off the per-round
+        # critical path; per-round lineage lives in fetch_log already)
+        if run.metrics:
+            # phase_s rides along as a map column so the committed table carries
+            # the same W-vs-F diagnostic the driver sees (RoundMetrics.phase_s) —
+            # a cluster operator can read scaling behavior off the state table
+            # without driver logs.  Built as an Arrow table: a local relation,
+            # no Python worker.
+            metrics_df = spark.createDataFrame(pa.Table.from_pylist(
+                [vars(m) for m in run.metrics], schema=_METRICS_SCHEMA
             ))
-            tables["bloom"] = cfg.n_parts
-            m.phase_s["bloom_write"] = round(time.monotonic() - t_ph, 3)
-        if cfg.seen_compact_every and rnd % cfg.seen_compact_every == 0:
-            # compaction: one full snapshot so seen readers union ≤K+1 files
-            # instead of O(rounds); committed atomically with the round
-            snapshot = seen.unionByName(io.read_uncommitted(spark, "seen", rnd))
-            obs_snap = Observation()
-            io.write(
-                "seen_snapshot", rnd,
-                snapshot.repartition(cfg.n_parts, "url_hash")
-                .observe(obs_snap, F.count(F.lit(1)).alias("n")),
-            )
-            tables["seen_snapshot"] = obs_snap.get["n"]
-        m.wall_s = time.monotonic() - t0
-        io.commit(rnd, tables)
-        run.metrics.append(m)
-        run.rounds_run = rnd
+            io.write("metrics", run.rounds_run, metrics_df)
+            io.commit(run.rounds_run, {"metrics": len(run.metrics)})
 
-        for df in (gated, selected, enriched, new_frontier_rows, *round_persists):
-            df.unpersist()
-        if bloom_bcast is not None:
-            # all round outputs are committed — free this round's sidecar
-            # broadcast so driver/executor memory stays O(1 sidecar), not
-            # O(rounds × sidecar)
-            bloom_bcast.destroy()
-        if bloom_override is not None and rnd == start_round + 1:
-            bloom_override.unpersist()
-            bloom_override = None
-        if n_frontier == 0:
-            break
-
-    # F12 — one metrics snapshot for the whole run (off the per-round
-    # critical path; per-round lineage lives in fetch_log already)
-    if run.metrics:
-        # phase_s rides along as a map column so the committed table carries
-        # the same W-vs-F diagnostic the driver sees (RoundMetrics.phase_s) —
-        # a cluster operator can read scaling behavior off the state table
-        # without driver logs
-        metrics_df = spark.createDataFrame(
-            [(m.round, m.urls_selected, m.urls_fetched_ok, m.urls_404,
-              m.candidates, m.bloom_skipped, m.urls_new, m.wall_s,
-              dict(m.phase_s))
-             for m in run.metrics],
-            "round int, urls_selected long, urls_fetched_ok long, urls_404 long,"
-            " candidates long, bloom_skipped long, urls_new long, wall_s double,"
-            " phase_s map<string,double>",
-        )
-        io.write("metrics", run.rounds_run, metrics_df)
-        io.commit(run.rounds_run, {"metrics": len(run.metrics)})
-
-    page_keys.unpersist()
-    robots_rules.unpersist()
-    return run
+        page_keys.unpersist()
+        robots_rules.unpersist()
+        return run
 
 
 # --- result readers (shared by tests / bench / analytics) ----------------------

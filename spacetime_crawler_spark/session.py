@@ -12,6 +12,8 @@ import os
 
 from pyspark.sql import SparkSession
 
+from spacetime_crawler_spark import worker_daemon
+
 
 def host_cpus() -> int:
     """Cores this process may run on (honours affinity / cpusets, unlike
@@ -60,6 +62,9 @@ def get_spark(
         # join keys, pruning unmatched html rows BEFORE the exchange — the
         # shuffled bytes become O(fetched html), not O(all html)
         .config("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
+        # Python workers fork from a daemon that has already imported
+        # pandas, pyarrow and the engine's UDF modules (worker_daemon.py)
+        .config("spark.python.daemon.module", worker_daemon.__name__)
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -125,11 +125,6 @@ class ParquetManifestIO:
             raise FileNotFoundError(f"round {rnd} of {table} was never committed")
         return spark.read.parquet(self._round_dir(table, rnd))
 
-    def read_uncommitted(self, spark: SparkSession, table: str, rnd: int) -> DataFrame:
-        """Read data written this round BEFORE its commit (writer-side only:
-        cheaper than recomputing lineage for counts)."""
-        return spark.read.parquet(self._round_dir(table, rnd))
-
     def manifest(self, table: str, rnd: int) -> dict:
         """Per-table manifest view (rows + commit time) from the round
         manifest; raises FileNotFoundError if (table, round) is uncommitted."""
@@ -261,9 +256,10 @@ class IcebergIO:
         m = self._commit_map().get(rnd)
         if m is None or table not in m:
             raise FileNotFoundError(f"round {rnd} of {table} was never committed")
-        return self.read_uncommitted(spark, table, rnd)
+        return self._round_slice(table, rnd)
 
-    def read_uncommitted(self, spark: SparkSession, table: str, rnd: int) -> DataFrame:
+    def _round_slice(self, table: str, rnd: int) -> DataFrame:
+        """The `_state_round = rnd` rows of `table`, committed or not."""
         from pyspark.sql import functions as F
 
         df = self.store.read(table)

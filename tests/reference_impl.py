@@ -89,6 +89,20 @@ class PagesWorld:
         return None, None  # no robots row → allow-all, default delay
 
 
+def host_schedule(
+    entries: list[tuple[int, str]], crawl_delay: float, round_budget_s: float
+) -> tuple[list[tuple[int, int, str]], list[tuple[int, str]]]:
+    """The per-host order rule: one host's allowed (depth, url_norm)
+    entries in (depth, url_norm) order; the first
+    quota = floor(round_budget_s / crawl_delay) are fetched this round as
+    (fetch_seq, depth, url_norm), fetch_seq 1..q; the rest stay over quota."""
+    ordered = sorted(entries)
+    quota = int(round_budget_s / crawl_delay)
+    selected = [(seq, depth, url)
+                for seq, (depth, url) in enumerate(ordered[:quota], start=1)]
+    return selected, ordered[quota:]
+
+
 def crawl(
     world_rows: list[dict],
     seeds: list[str],
@@ -130,14 +144,14 @@ def crawl(
 
         for host in sorted(by_host):
             delay, rules = host_rules(host)
-            quota = int(round_budget_s / delay)
             allowed = []
-            for depth, url in sorted(by_host[host]):
+            for depth, url in by_host[host]:
                 path = urlsplit(url).path or "/"
                 if rules is None or robots_allowed(path, rules):
                     allowed.append((depth, url))
                 # disallowed: dropped permanently (stays in seen)
-            for seq, (depth, url) in enumerate(allowed[:quota], start=1):
+            selected, over_quota = host_schedule(allowed, delay, round_budget_s)
+            for seq, depth, url in selected:
                 row = pages.fetch(url)
                 if row is None:
                     result.fetch_log.append(FetchRecord(
@@ -155,7 +169,7 @@ def crawl(
                         d = discovered.get(link)
                         discovered[link] = depth + 1 if d is None else min(d, depth + 1)
             # over-quota leftover stays with its depth
-            for depth, url in allowed[quota:]:
+            for depth, url in over_quota:
                 next_frontier[url] = min(depth, next_frontier.get(url, depth))
 
         for url, depth in discovered.items():

@@ -57,10 +57,10 @@ def test_fpr_in_range():
     assert fpr < 0.01, fpr
 
 
-def test_merge_bitmaps_df_is_exact_or(spark):
-    """Distributed sidecar maintenance: union of delta bitmap rows OR'd per
-    bucket ≡ one bitmap built from the union of the keys."""
-    import pandas as pd
+def test_update_bitmaps_df_is_exact_or(spark):
+    """Distributed sidecar maintenance: updating a sidecar with a second key
+    set (one cogrouped pass, OR per bucket) ≡ one sidecar built from the
+    union of the keys — also for buckets only one of the two sides has."""
     from pyspark.sql import functions as F
 
     from spacetime_crawler_spark.operators import bloom
@@ -72,18 +72,29 @@ def test_merge_bitmaps_df_is_exact_or(spark):
     df2 = spark.range(400, 900).select(
         F.xxhash64("id").alias("url_hash"), F.hash("id").alias("h2")
     )
-    both = df1.unionByName(df2)
-    merged = bloom.collect_sidecar(
-        bloom.merge_bitmaps_df(
-            bloom.delta_bitmaps_df(df1, n_parts, nbits, k).unionByName(
-                bloom.delta_bitmaps_df(df2, n_parts, nbits, k)
-            )
-        )
+    first = bloom.update_bitmaps_df(None, df1, n_parts, nbits, k).persist()
+    updated = bloom.collect_sidecar(
+        bloom.update_bitmaps_df(first, df2, n_parts, nbits, k)
     )
-    direct = bloom.collect_sidecar(bloom.delta_bitmaps_df(both, n_parts, nbits, k))
-    assert set(merged) == set(direct)
+    direct = bloom.collect_sidecar(
+        bloom.update_bitmaps_df(None, df1.unionByName(df2), n_parts, nbits, k)
+    )
+    assert set(updated) == set(direct) == set(range(n_parts))
     for part in direct:
-        assert merged[part] == direct[part]
+        assert updated[part] == direct[part]
+    # buckets with a previous row but no new key keep their bitmap
+    one_bucket = df2.filter(F.pmod("url_hash", F.lit(n_parts)) == 0)
+    kept = bloom.collect_sidecar(
+        bloom.update_bitmaps_df(first, one_bucket, n_parts, nbits, k)
+    )
+    before = bloom.collect_sidecar(first)
+    assert set(kept) == set(before)
+    for part in (1, 2, 3):
+        assert kept[part] == before[part]
+    first.unpersist()
+    # n_items counts every key OR'd in
+    rows = bloom.update_bitmaps_df(None, df1, n_parts, nbits, k).collect()
+    assert sum(r.n_items for r in rows) == 500
 
 
 def test_cogrouped_membership_equals_broadcast(spark):
@@ -104,7 +115,7 @@ def test_cogrouped_membership_equals_broadcast(spark):
         F.xxhash64("id").alias("url_hash"),
         F.hash("id").alias("h2"),
     )
-    bloom_df = bloom.delta_bitmaps_df(seen, n_parts, nbits, k).persist()
+    bloom_df = bloom.update_bitmaps_df(None, seen, n_parts, nbits, k).persist()
     udf, bcast = bloom.make_maybe_seen_udf(
         spark, bloom.collect_sidecar(bloom_df), n_parts
     )

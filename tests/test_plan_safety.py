@@ -94,3 +94,70 @@ def test_crawl_driver_collects_are_pinned_and_bounded(spark, tmp_path):
     # the guard must actually exercise the hot sites it exists to pin
     assert ("crawl.py", "run_crawl") in seen_sites
     assert ("bloom.py", "collect_sidecar") in seen_sites
+
+
+# --- Python crossings: only where a kernel runs ---------------------------------
+
+_PYTHON_NODE = ("Python", "Pandas", "InArrow")
+
+
+def _plan_nodes(df) -> list[str]:
+    """Node names of df's optimized logical plan.  A cached relation is a
+    leaf here, so the plan that filled a cache is not counted again."""
+    names, todo = [], [df._jdf.queryExecution().optimizedPlan()]
+    while todo:
+        node = todo.pop()
+        names.append(node.nodeName())
+        children = node.children()
+        todo.extend(children.apply(i) for i in range(children.size()))
+    return names
+
+
+def _assert_no_python(names: list[str]) -> None:
+    """No Python evaluation node, and no LogicalRDD — the relation a
+    Python-RDD createDataFrame (or a checkpoint) reads from."""
+    assert not [n for n in names if any(p in n for p in _PYTHON_NODE)], names
+    assert "LogicalRDD" not in names, names
+
+
+def test_seed_frontier_and_metrics_plans_cross_no_python(spark, tmp_path):
+    """Seeds are canonicalized on the driver and the metrics table is built
+    on the driver: both reach Spark as Arrow-built local relations, so
+    neither plan evaluates Python nor reads a Python RDD.  One round's bloom
+    maintenance is a single cogrouped pass over the previous sidecar and the
+    round's new keys."""
+    from spacetime_crawler_spark.plans import crawl as crawl_mod
+    from spacetime_crawler_spark.sources.io_tables import ParquetManifestIO
+
+    p = synth.world("tiny", n_pages=400)
+    pages = synth.generate_pages_df(spark, p).persist()
+    seeds = synth.seed_urls(p)
+    cfg = CrawlConfig(state_dir=str(tmp_path / "st"), rounds=1,
+                      round_budget_s=8.0, n_parts=N_PARTS)
+
+    frontier, seen = crawl_mod.init_frontier(spark, seeds, cfg)
+    _assert_no_python(_plan_nodes(frontier))
+    _assert_no_python(_plan_nodes(seen))
+    assert frontier.count() > 0
+
+    class CapturingIO(ParquetManifestIO):
+        def __init__(self, root):
+            super().__init__(root)
+            self.plans = {}
+
+        def write(self, table, rnd, df):
+            # the plan while the round's caches are still registered
+            self.plans[(table, rnd)] = _plan_nodes(df)
+            return super().write(table, rnd, df)
+
+    io = CapturingIO(cfg.state_dir)
+    run = run_crawl(spark, pages, seeds, cfg, io=io)
+    pages.unpersist()
+    assert run.rounds_run == 1
+    _assert_no_python(io.plans[("metrics", 1)])
+    # round 0 builds the sidecar with no previous one, round 1 updates it
+    for rnd in (0, 1):
+        bloom_plan = io.plans[("bloom", rnd)]
+        assert bloom_plan.count("FlatMapCoGroupsInPandas") == 1, bloom_plan
+        assert "FlatMapGroupsInPandas" not in bloom_plan, bloom_plan
+        assert "LogicalRDD" not in bloom_plan, bloom_plan

@@ -4,6 +4,8 @@ with the same seed must be identical."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 
 from spacetime_crawler_spark.plans import crawl as crawl_mod
@@ -234,7 +236,6 @@ def test_resume_past_completed_run_reports_committed_rounds(spark, tiny,
 def test_fresh_run_fences_stale_state(spark, tiny, tmp_path_factory):
     """resume=False in a reused state_dir must not leak committed rounds
     from the earlier (longer) run into read_seen/read_fetch_log."""
-    import os
 
     tmp = tmp_path_factory.mktemp("fence")
     run_long, state_dir = _run(spark, tiny, tmp, ROUNDS)
@@ -276,3 +277,77 @@ def test_metrics_table_carries_phase_breakdown(spark, tiny, tmp_path_factory):
         # every round spends time in the core phases
         for phase in ("fetch_extract_write", "frontier_write", "seen_write"):
             assert phase in r.phase_s, (m.round, r.phase_s)
+
+
+def test_failed_write_in_round_batch_leaves_round_uncommitted(spark, tiny,
+                                                              tmp_path_factory):
+    """A round's writes run as one concurrent batch.  When one of them
+    raises, run_crawl re-raises only after every submitted write has
+    finished, the round gets no manifest, no batch thread outlives the call,
+    and a resume ends in the same state as an uninterrupted run."""
+    import threading
+    import time
+
+    from bench import state_digest
+    from spacetime_crawler_spark.sources.io_tables import ParquetManifestIO
+
+    class FailingBloomIO(ParquetManifestIO):
+        """Round 1's seen write is slow; its bloom write raises at once,
+        while the seen write is still running."""
+
+        def __init__(self, root):
+            super().__init__(root)
+            self.spans = {}  # table -> (start, end) of round-1 writes
+            self.raised_at = None
+
+        def write(self, table, rnd, df):
+            if rnd != 1:
+                return super().write(table, rnd, df)
+            start = time.monotonic()
+            try:
+                if table == "bloom":
+                    self.raised_at = time.monotonic()
+                    raise RuntimeError("injected bloom write failure")
+                if table == "seen":
+                    time.sleep(2.0)
+                return super().write(table, rnd, df)
+            finally:
+                self.spans[table] = (start, time.monotonic())
+
+    p, pages, seeds = tiny
+    state_dir = str(tmp_path_factory.mktemp("batch_fail"))
+    io = FailingBloomIO(state_dir)
+    with pytest.raises(RuntimeError, match="injected bloom write failure"):
+        run_crawl(spark, pages, seeds,
+                  CrawlConfig(state_dir=state_dir, rounds=ROUNDS,
+                              round_budget_s=BUDGET), io=io)
+    caught_at = time.monotonic()
+
+    # every submitted write of the batch ran, and all had ended before the
+    # error reached the caller — the seen write outlasted the failure
+    assert set(io.spans) == {"fetch_log", "frontier", "seen", "bloom"}
+    assert all(end <= caught_at for _, end in io.spans.values())
+    assert io.spans["seen"][1] > io.raised_at
+    # the failed round was never committed
+    assert io.last_committed_round("frontier") == 0
+    assert not os.path.exists(io._manifest_path(1))
+    # the batch pool was shut down with the call
+    assert not [t for t in threading.enumerate()
+                if t.name.startswith("crawl-batch")]
+
+    run_full, _ = _run(spark, tiny, tmp_path_factory.mktemp("batch_full"), ROUNDS)
+    run_res, _ = _run(spark, tiny, None, ROUNDS, resume=True, state_dir=state_dir)
+    assert run_res.rounds_run == run_full.rounds_run
+
+    def digests(run):
+        return (
+            state_digest(crawl_mod.read_seen(spark, run.io),
+                         ["url_norm", "round_seen"]),
+            state_digest(
+                crawl_mod.read_fetch_log(spark, run.io, run.rounds_run),
+                ["round", "host", "fetch_seq", "url_norm", "status",
+                 "text_sha256", "due_s"],
+            ),
+        )
+
+    assert digests(run_res) == digests(run_full)
