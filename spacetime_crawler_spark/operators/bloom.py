@@ -20,7 +20,7 @@ from the full seen set.  Maintenance is distributed (the previous rows
 cogroup with the round's new keys on part_id and each group ORs them in one
 pass); the driver never has to hold the bitmaps.  Membership testing is
 size-gated: small sidecars ride one broadcast (destroyed after the round); past
-`bloom_broadcast_max_bytes` the candidates COGROUP with the sidecar rows on
+`crawl.BLOOM_BROADCAST_MAX_BYTES` the candidates COGROUP with the sidecar rows on
 part_id, so each task receives only the bitmaps of its own buckets — the
 shard-routing design SURVEY §4.3 calls for at the 10^10 tier.
 """

@@ -1,8 +1,7 @@
 """Corpus cleaning stages: boilerplate removal, PII redaction and the C4
 line rules (Raffel et al. 2020, public spec) used by the web-ingest
-composite (operators/pipeline.py::pipeline_web_ingest), plus global
-exact-line/paragraph dedup, a term blocklist, text normalization and
-charset annotation, all re-expressed as native Spark column programs.
+composite (operators/pipeline.py::pipeline_web_ingest), plus charset
+annotation, all re-expressed as native Spark column programs.
 
 Each operator is df-in/df-out so it composes with the curation pipeline
 and runs equally over the documents table, crawl output, or WARC-ingested
@@ -87,117 +86,6 @@ SELECT * FROM cleaned
 WHERE n_lines_kept >= {MIN_KEPT_LINES}
   AND NOT contains(text_clean, '{{')
   AND NOT contains(lower(text_clean), 'lorem ipsum')
-"""
-
-
-# --- global exact-line dedup --------------------------------------------------
-
-def dedup_lines_global(
-    docs: DataFrame, min_line_chars: int = 10, delimiter: str = "\n"
-) -> DataFrame:
-    """Corpus-wide exact line dedup: every line of every doc is kept only
-    at its FIRST occurrence — first = smallest (doc_id, pos) over the
-    line's md5 — then docs are reassembled in original line order
-    (RefinedWeb/MassiveText-style; lines shorter than min_line_chars pass
-    through untouched so headings and blank separators aren't globally
-    collapsed).  Emits (doc_id, text_dedup, n_lines_kept, n_lines_dropped)
-    for docs retaining ≥1 line.
-
-    ``delimiter`` generalizes the unit: '\\n' (default) dedups lines,
-    '\\n\\n' dedups paragraphs — see dedup_paragraphs_global.  The value
-    is treated as a LITERAL both for splitting (quoted with \\Q…\\E so a
-    '.' or '|' separator cannot silently become a regex) and rejoining.
-
-    Scale shape: the duplicate-set side is a partial+final hash agg of
-    min(struct(doc_id, pos)) keyed on the 16-byte line md5 — no window,
-    no per-key sort; the equi-join back meets the lines on the same md5
-    partitioning.  Reassembly is one groupBy(doc_id) whose collect_list is
-    bounded by a single document's line count."""
-    if "\\E" in delimiter:
-        raise ValueError("delimiter must not contain the \\E quote terminator")
-    delim_re = f"\\Q{delimiter}\\E"
-    lines = docs.select(
-        "doc_id",
-        F.posexplode(F.split("text", delim_re)).alias("pos", "line"),
-    )
-    long_lines = lines.where(F.length("line") >= F.lit(min_line_chars))
-    firsts = long_lines.groupBy(F.md5("line").alias("k")).agg(
-        F.min(F.struct("doc_id", "pos")).alias("first")
-    )
-    kept_long = (
-        long_lines.join(firsts, F.md5(F.col("line")) == F.col("k"))
-        .where(
-            (F.col("doc_id") == F.col("first.doc_id"))
-            & (F.col("pos") == F.col("first.pos"))
-        )
-        .select("doc_id", "pos", "line")
-    )
-    short_lines = lines.where(F.length("line") < F.lit(min_line_chars))
-    kept = kept_long.unionByName(short_lines)
-    n_total = docs.select(
-        "doc_id",
-        F.size(F.split("text", delim_re)).cast("int").alias("n_lines"),
-    )
-    out = (
-        kept.groupBy("doc_id")
-        .agg(
-            F.array_join(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("pos", "line"))),
-                    lambda s: s["line"],
-                ),
-                delimiter,
-            ).alias("text_dedup"),
-            F.count(F.lit(1)).cast("int").alias("n_lines_kept"),
-        )
-        .join(n_total, "doc_id")
-        .select(
-            "doc_id",
-            "text_dedup",
-            "n_lines_kept",
-            (F.col("n_lines") - F.col("n_lines_kept"))
-            .cast("int")
-            .alias("n_lines_dropped"),
-        )
-    )
-    return out
-
-
-def dedup_paragraphs_global(
-    docs: DataFrame, min_paragraph_chars: int = 10
-) -> DataFrame:
-    """Corpus-wide exact PARAGRAPH dedup ('\\n\\n' units) — the
-    MassiveText variant of dedup_lines_global; identical plan shape."""
-    return dedup_lines_global(docs, min_paragraph_chars, delimiter="\n\n")
-
-
-# DuckDB mirror — format with min_chars and delim (a SQL expression,
-# e.g. "chr(10)" for lines or "chr(10)||chr(10)" for paragraphs).
-DEDUP_LINES_SQL = """
-WITH lines AS (
-  SELECT doc_id,
-         CAST(generate_subscripts(string_split(text, {delim}), 1) - 1 AS BIGINT) AS pos,
-         unnest(string_split(text, {delim})) AS line
-  FROM docs
-), ranked AS (
-  SELECT doc_id, pos, line,
-         CASE WHEN len(line) >= {min_chars}
-              THEN row_number() OVER (PARTITION BY md5(line)
-                                      ORDER BY doc_id, pos)
-              ELSE 1 END AS rn
-  FROM lines
-), kept AS (
-  SELECT doc_id, pos, line FROM ranked WHERE rn = 1
-), totals AS (
-  SELECT doc_id, CAST(len(string_split(text, {delim})) AS INT) AS n_lines
-  FROM docs
-)
-SELECT k.doc_id,
-       string_agg(k.line, {delim} ORDER BY k.pos) AS text_dedup,
-       CAST(COUNT(*) AS INT) AS n_lines_kept,
-       CAST(ANY_VALUE(t.n_lines) - COUNT(*) AS INT) AS n_lines_dropped
-FROM kept k JOIN totals t USING (doc_id)
-GROUP BY k.doc_id
 """
 
 
@@ -292,114 +180,6 @@ REDACT_PII_SQL = (
     f"       (n_emails + n_ips + CAST(len(regexp_extract_all(t2, '{PII_PHONE_RE}')) AS INT)) > 0 AS has_pii\n"
     "FROM s2\n"
 )
-
-
-# --- blocklist (badwords) gate --------------------------------------------------
-
-# Demo default — real deployments inject their own list (C4 uses the
-# externally-maintained "bad words" list; shipping one here would pin
-# slurs into the codebase).  The MECHANISM is what's pinned and tested.
-BLOCKLIST_DEFAULT = ("badterm", "blockedword", "forbiddenphrase")
-
-
-def filter_blocklist(
-    docs: DataFrame, terms: tuple[str, ...] = BLOCKLIST_DEFAULT
-) -> DataFrame:
-    """C4-style blocklist gate: flag a doc iff any lowercased
-    whitespace-token — after trimming surrounding ASCII punctuation —
-    equals a blocked term.  Token-equality (not substring / regex) is
-    deliberate: list terms need no escaping, 'class' never matches a
-    blocked 'ass', and the check is one array intersect; the punctuation
-    trim makes 'badterm.' and '(badterm)' hit.
-
-    Emits (doc_id, n_blocked_hits, blocked) — a flag surface, so callers
-    choose drop vs quarantine vs audit.
-
-    Scale shape: map-only — split + higher-order filter against a literal
-    array, inside whole-stage codegen; no shuffle, no UDF."""
-    toks = (
-        "filter(transform(split(lower(text), '\\\\s+'),"
-        " x -> trim(BOTH '.,;:!?\"()[]' FROM x)), x -> x != '')"
-    )
-    lits = ", ".join("'" + t.lower().replace("'", "''") + "'" for t in terms)
-    hits = F.expr(f"size(filter({toks}, x -> x IN ({lits})))").cast("int")
-    return docs.select(
-        "doc_id",
-        hits.alias("n_blocked_hits"),
-        (hits > F.lit(0)).alias("blocked"),
-    )
-
-
-def blocklist_sql(terms: tuple[str, ...] = BLOCKLIST_DEFAULT) -> str:
-    lits = ", ".join("'" + t.lower().replace("'", "''") + "'" for t in terms)
-    toks = (
-        "list_filter(list_transform(regexp_split_to_array(lower(text), '\\s+'),"
-        " x -> trim(x, '.,;:!?\"()[]')), x -> x <> '')"
-    )
-    return f"""
-SELECT doc_id,
-       CAST(len(list_filter({toks}, x -> x IN ({lits}))) AS INT) AS n_blocked_hits,
-       len(list_filter({toks}, x -> x IN ({lits}))) > 0 AS blocked
-FROM docs
-"""
-
-
-# --- text normalization ---------------------------------------------------------
-
-def normalize_text(docs: DataFrame) -> DataFrame:
-    """Whitespace/control normalization — the pre-tokenizer scrub every
-    webtext pipeline runs.  Pinned spec, applied in order:
-
-      1. normalize line endings: \\r\\n and lone \\r → \\n
-      2. delete remaining C0 control chars except \\t and \\n (plus DEL)
-      3. collapse runs of spaces/tabs to one space
-      4. trim spaces around newlines (' *\\n *' → '\\n')
-      5. collapse 3+ consecutive newlines to exactly two
-      6. strip ALL leading/trailing whitespace (including newlines —
-         plain trim() only strips spaces)
-
-    No backreferences or lookaround in any pattern, so Java regex (Spark)
-    and RE2 (DuckDB oracle) compile them identically.  Unicode NFC is
-    deliberately OUT of spec: Spark has no native normalizer, and a
-    pandas-UDF crossing for it would cost more than it cleans on
-    already-UTF-8 crawl text; documents needing NFC should normalize at
-    ingest.  Emits (doc_id, text_norm, n_chars_removed).
-
-    Scale shape: map-only regexp chain inside whole-stage codegen."""
-    t0 = F.col("text")
-    t1 = F.regexp_replace(t0, r"\r\n?", "\n")
-    t2 = F.regexp_replace(t1, r"[\x00-\x08\x0B\x0C\x0E-\x1F\x7F]", "")
-    t3 = F.regexp_replace(t2, r"[ \t]+", " ")
-    t4 = F.regexp_replace(t3, r" *\n *", "\n")
-    t5 = F.regexp_replace(t4, r"\n{3,}", "\n\n")
-    t5 = F.regexp_replace(t5, r"^\s+|\s+$", "")
-    return docs.select(
-        "doc_id",
-        t5.alias("text_norm"),
-        (F.length(t0) - F.length(t5)).cast("int").alias("n_chars_removed"),
-    )
-
-
-# NB: RE2 replacement strings do not interpret '\n' (it is silently
-# dropped) — newline insertions must be chr(10) SQL expressions.
-NORMALIZE_TEXT_SQL = r"""
-WITH n AS (
-  SELECT doc_id, text,
-         regexp_replace(regexp_replace(
-           regexp_replace(
-             regexp_replace(
-               regexp_replace(
-                 regexp_replace(text, '\r\n?', chr(10), 'g'),
-                 '[\x00-\x08\x0B\x0C\x0E-\x1F\x7F]', '', 'g'),
-               '[ \t]+', ' ', 'g'),
-             ' *\n *', chr(10), 'g'),
-           '\n{3,}', chr(10)||chr(10), 'g'), '^\s+|\s+$', '', 'g') AS text_norm
-  FROM docs
-)
-SELECT doc_id, text_norm,
-       CAST(len(text) - len(text_norm) AS INT) AS n_chars_removed
-FROM n
-"""
 
 
 # --- charset annotation -----------------------------------------------------------

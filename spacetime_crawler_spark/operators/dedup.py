@@ -80,24 +80,6 @@ FROM documents
 """
 
 
-def dedup_exact_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Duplicate groups: md5(text) → members.  Narrow shuffle key (the hash,
-    not the text) — the 100 TB pattern.  Keeps min(doc_id) as the canonical
-    survivor (first-writer-wins, mirroring the crawler's URL-seen rule)."""
-    docs = load_table(spark, sf_dir, "documents")
-    return (
-        docs.groupBy(F.md5("text").alias("text_md5"))
-        .agg(F.count("*").alias("n"), F.min("doc_id").alias("keep_doc_id"))
-        .filter(F.col("n") > 1)
-    )
-
-
-DEDUP_EXACT_GROUPS_SQL = """
-SELECT md5(text) AS text_md5, COUNT(*) AS n, MIN(doc_id) AS keep_doc_id
-FROM documents GROUP BY 1 HAVING COUNT(*) > 1
-"""
-
-
 # --- n-gram Jaccard (exact verify path) ----------------------------------------
 
 def _shingle_docs(docs: DataFrame) -> DataFrame:
@@ -317,20 +299,16 @@ def _minhash_signatures(sh: DataFrame, num_perm: int = MINHASH_NUM_PERM) -> Data
     )
 
 
-def _capped_bands(
-    sigs: DataFrame, id_alias: str, bucket_cap: int
-) -> DataFrame:
-    """(doc_id, sig) → (id_alias, band, bucket) rows with overfull
+def _capped_bands(sigs: DataFrame, bucket_cap: int) -> DataFrame:
+    """(doc_id, sig) → (doc_id, band, bucket) rows with overfull
     (band, bucket) groups removed — the SECOND half of the candidate-
-    generation policy (the first is _band_bucket_expr), shared by the
-    batch self-join and the incremental probe so the two paths can never
-    disagree on which buckets participate.  Bucket sizes come from a
-    window over the SAME (band, bucket) exchange the downstream join
+    generation policy (the first is _band_bucket_expr).  Bucket sizes come
+    from a window over the SAME (band, bucket) exchange the downstream join
     uses — no separate groupBy + anti-join passes."""
     from pyspark.sql import Window
 
     bands = sigs.select(
-        F.col("doc_id").alias(id_alias),
+        "doc_id",
         F.posexplode(F.expr(_band_bucket_expr("sig"))).alias("band", "bucket"),
     )
     return (
@@ -348,8 +326,7 @@ def _band_bucket_expr(
     num_perm: int = MINHASH_NUM_PERM,
 ) -> str:
     """ARRAY<BIGINT>[bands] of band-bucket codes from a signature column —
-    the ONE place the banding rule lives (the batch LSH join and the
-    incremental probe must never disagree on bucket layout)."""
+    the ONE place the banding rule lives."""
     rows = num_perm // bands
     return (
         f"transform(sequence(0, {bands - 1}),"
@@ -378,7 +355,7 @@ def minhash_lsh_pairs(
     if cleanup is not None:
         cleanup.append(sh)
     sigs = _minhash_signatures(sh)
-    cold = _capped_bands(sigs, "doc_id", bucket_cap)
+    cold = _capped_bands(sigs, bucket_cap)
     a = cold.alias("a")
     b = cold.alias("b")
     candidates = (
@@ -515,48 +492,6 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
       )
     """
     return docs.select("doc_id", F.expr(simhash_expr).alias("simhash"))
-
-
-def simhash_near_pairs(
-    spark: SparkSession, sf_dir: str, max_hamming: int = 7
-) -> DataFrame:
-    """Near-dup pairs by SimHash Hamming distance, candidate-generated by
-    8-bit chunk equality (pigeonhole: ≤7 differing bits ⇒ at least one of 8
-    chunks equal, so recall is EXACT for max_hamming ≤ 7) — an equi-join on
-    (chunk_idx, chunk_value), never all-pairs."""
-    sigs = dedup_simhash(spark, sf_dir)
-    chunks = sigs.select(
-        "doc_id",
-        "simhash",
-        F.posexplode(
-            F.expr(
-                "transform(sequence(0, 7),"
-                " c -> (shiftrightunsigned(simhash, c * 8) & 255))"
-            )
-        ).alias("chunk_idx", "chunk_val"),
-    )
-    a = chunks.alias("a")
-    b = chunks.alias("b")
-    cands = (
-        a.join(
-            b,
-            (F.col("a.chunk_idx") == F.col("b.chunk_idx"))
-            & (F.col("a.chunk_val") == F.col("b.chunk_val"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-            F.col("a.simhash").alias("sh_a"),
-            F.col("b.simhash").alias("sh_b"),
-        )
-        .distinct()
-    )
-    return (
-        cands.withColumn("hamming", F.bit_count(F.expr("sh_a ^ sh_b")))
-        .filter(F.col("hamming") <= max_hamming)
-        .select("doc_a", "doc_b", "hamming")
-    )
 
 
 # --- embedding-cosine near-dup -----------------------------------------------------
@@ -991,149 +926,4 @@ SELECT k.doc_id,
        CAST(ANY_VALUE(t.n_spans) - COUNT(*) AS INT) AS n_spans_dropped
 FROM kept k JOIN totals t USING (doc_id)
 GROUP BY k.doc_id
-"""
-
-
-# --- incremental minhash dedup (fresh shard vs a stored signature index) -----------
-
-def minhash_signatures(docs: DataFrame) -> DataFrame:
-    """(doc_id, text) → (doc_id, sig ARRAY<BIGINT>[num_perm]): the storable
-    dedup index.  This is what a production pipeline persists per crawl
-    snapshot — 32 longs per document instead of the document — so that next
-    month's shard dedups against ten years of corpus without the corpus.
-    Docs too short to shingle produce NO row (pinned: they are never
-    near-dup candidates, matching the batch LSH path)."""
-    return _minhash_signatures(_shingle_docs(docs))
-
-
-def minhash_dedup_incremental(
-    new_docs: DataFrame,
-    corpus_sigs: DataFrame,
-    threshold: float = 0.7,
-    bucket_cap: int = LSH_BUCKET_CAP,
-    cleanup: list[DataFrame] | None = None,
-) -> DataFrame:
-    """Flag documents of a fresh shard that near-duplicate an already-
-    indexed corpus: (doc_id, dup_of, est_jaccard), one row per flagged NEW
-    doc with its best corpus match (highest estimate, ties → lowest corpus
-    doc_id).  The verdict is the standard signature estimator — the
-    fraction of agreeing minhash components — so the historical TEXT is
-    never read, only `corpus_sigs` (see minhash_signatures).  Within-shard
-    duplicates are a separate concern: run minhash_lsh_pairs on the shard.
-
-    Scale shape: candidates come from a (band, bucket) equi-join between
-    the shard's band codes and the index's — both sides banded by the ONE
-    shared _band_bucket_expr, both sides carrying (id, band, bucket) only
-    (signatures join back by id afterwards, so the band shuffle never
-    carries arrays).  (band, bucket) groups larger than bucket_cap on
-    EITHER side are excluded before the join (boilerplate collapse — same
-    policy and constant as the batch path), so no bucket goes quadratic.
-    The estimate is one zip_with fold per surviving candidate pair."""
-    # the shard's signatures are consumed twice (banding + the score join)
-    # and cost a tokenize+explode+agg — persist with the module's cleanup
-    # discipline (corpus_sigs is caller-provided, typically a parquet read
-    # of the materialized index: re-scanning it is the cheap path)
-    new_sigs = minhash_signatures(new_docs).persist()
-    if cleanup is not None:
-        cleanup.append(new_sigs)
-    from pyspark.sql import Window
-
-    candidates = (
-        _capped_bands(new_sigs, "doc_id", bucket_cap)
-        .join(_capped_bands(corpus_sigs, "dup_of", bucket_cap),
-              ["band", "bucket"])
-        .select("doc_id", "dup_of")
-        .distinct()
-    )
-    est = (
-        f"aggregate(zip_with(sig_new, sig_old, (x, y) -> IF(x = y, 1, 0)),"
-        f" 0, (s, v) -> s + v) / cast({MINHASH_NUM_PERM} as double)"
-    )
-    scored = (
-        candidates.join(
-            new_sigs.select("doc_id", F.col("sig").alias("sig_new")), "doc_id"
-        )
-        .join(
-            corpus_sigs.select(
-                F.col("doc_id").alias("dup_of"), F.col("sig").alias("sig_old")
-            ),
-            "dup_of",
-        )
-        .withColumn("est_jaccard", F.round(F.expr(est), 4))
-        .filter(F.col("est_jaccard") >= threshold)
-    )
-    rank = Window.partitionBy("doc_id").orderBy(
-        F.desc("est_jaccard"), F.asc("dup_of")
-    )
-    return (
-        scored.withColumn("rn", F.row_number().over(rank))
-        .filter(F.col("rn") == 1)
-        .select("doc_id", "dup_of", "est_jaccard")
-    )
-
-
-def contamination_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-document contamination REPORT — the graded companion of the
-    binary decontaminate_against_eval gate: every non-eval doc's window
-    count, eval-hit count, and contaminated fraction (what a release
-    audit publishes, and what threshold-tuning reads).  Plan: per-doc
-    totals are map-only off the docs scan (size of the window array —
-    never an aggregate of the exploded relation); hits reuse the bounded
-    eval-span broadcast probe; one narrow left join stitches them."""
-    docs = spread(load_table(spark, sf_dir, "documents"))
-    is_eval = _eval_pred()
-    totals = docs.filter(~is_eval).select(
-        "doc_id", F.expr(_SPARK_TOKENS).alias("t")
-    ).select(
-        "doc_id", F.size(F.expr(_SPARK_SPANS)).alias("n_windows")
-    )
-    spans = _doc_spans(docs)
-    eval_spans = spans.filter(is_eval).select("span").distinct()
-    hits = (
-        spans.filter(~is_eval)
-        .join(F.broadcast(eval_spans), "span")
-        .groupBy("doc_id")
-        .agg(F.count(F.lit(1)).alias("n_eval_hits"))
-    )
-    return (
-        totals.join(hits, "doc_id", "left")
-        .select(
-            "doc_id",
-            "n_windows",
-            F.coalesce("n_eval_hits", F.lit(0)).alias("n_eval_hits"),
-            F.when(
-                F.col("n_windows") > 0,
-                F.round(
-                    F.coalesce("n_eval_hits", F.lit(0))
-                    / F.col("n_windows"),
-                    4,
-                ),
-            ).otherwise(F.lit(0.0)).alias("frac_contaminated"),
-        )
-        .orderBy("doc_id")
-    )
-
-
-CONTAMINATION_STATS_SQL = f"""
-WITH t AS (SELECT doc_id, {_DUCK_TOKENS} AS w FROM documents),
-s AS (SELECT doc_id, unnest({_DUCK_SPANS}) AS span FROM t),
-e AS (SELECT DISTINCT span FROM s
-      WHERE doc_id % {EVAL_DOC_MODULUS} = 0 AND doc_id < {EVAL_DOC_LIMIT}),
-totals AS (
-  SELECT doc_id, len({_DUCK_SPANS}) AS n_windows FROM t
-  WHERE NOT (doc_id % {EVAL_DOC_MODULUS} = 0 AND doc_id < {EVAL_DOC_LIMIT})
-),
-hits AS (
-  SELECT s.doc_id, COUNT(*) AS n_eval_hits
-  FROM s JOIN e USING (span)
-  WHERE NOT (s.doc_id % {EVAL_DOC_MODULUS} = 0 AND s.doc_id < {EVAL_DOC_LIMIT})
-  GROUP BY s.doc_id
-)
-SELECT t.doc_id, t.n_windows,
-       coalesce(h.n_eval_hits, 0) AS n_eval_hits,
-       CASE WHEN t.n_windows > 0
-            THEN ROUND(CAST(coalesce(h.n_eval_hits, 0) AS DOUBLE) / t.n_windows, 4)
-            ELSE 0.0 END AS frac_contaminated
-FROM totals t LEFT JOIN hits h USING (doc_id)
-ORDER BY t.doc_id
 """

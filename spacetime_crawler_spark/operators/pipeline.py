@@ -179,197 +179,6 @@ def pipeline_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- per-domain document budget (C4-style host cap) ---------------------------
-
-DOMAIN_BUDGET_DEFAULT = 40
-_BUDGET_SALT_BUCKETS = 8
-
-
-def domain_budget_cap(
-    docs: DataFrame, cap: int = DOMAIN_BUDGET_DEFAULT
-) -> DataFrame:
-    """Keep at most `cap` documents per source domain, preferring longer
-    documents — the C4/RefinedWeb rule that stops a single boilerplate-heavy
-    host from dominating the training mix.
-
-    Pinned order: (n_tokens DESC, doc_id ASC) — token count is the shared
-    quality expression (textstats.SPARK_N_TOKENS, so the rule cannot drift
-    from text_quality_score) and doc_id makes the kept SET deterministic on
-    any cluster size.
-
-    Scale shape: the same two-phase salted ranking as the frontier
-    scheduler (politeness.schedule_round) — at 100 TB one host can hold
-    10^8 pages, and a single row_number window would sort that entire
-    partition on one task.  Phase 1 ranks within (source, salt-of-doc_id)
-    buckets and keeps ≤ cap each, bounding any task's sort at
-    ~|domain|/S rows; phase 2 ranks exactly over ≤ S·cap survivors per
-    source.  Both exchanges carry (source, n_tokens, doc_id) — never text."""
-    ranked_cols = [F.desc("n_tokens"), F.asc("doc_id")]
-    scored = docs.select(
-        "doc_id", F.col("source"), F.expr(SPARK_N_TOKENS).alias("n_tokens")
-    )
-    salted = Window.partitionBy(
-        "source", F.pmod("doc_id", F.lit(_BUDGET_SALT_BUCKETS))
-    ).orderBy(*ranked_cols)
-    pre = (
-        scored.withColumn("prn", F.row_number().over(salted))
-        .filter(F.col("prn") <= F.lit(cap))
-        .drop("prn")
-    )
-    exact = Window.partitionBy("source").orderBy(*ranked_cols)
-    return (
-        pre.withColumn("rn", F.row_number().over(exact))
-        .filter(F.col("rn") <= F.lit(cap))
-        .select("doc_id", "source", "n_tokens", F.col("rn").cast("int").alias("rn"))
-    )
-
-
-# DuckDB mirror over the documents view — the in-test oracle
-# (tests/test_pipeline.py); not a driver row (the 50-row artifact cap is
-# taken).  The oracle is the UNsalted single window: phase 1 only discards
-# rows that phase 2 would rank > cap, so the two must agree exactly.
-DOMAIN_BUDGET_SQL = f"""
-SELECT doc_id, source, n_tokens, CAST(rn AS INT) AS rn FROM (
-  SELECT doc_id, source, CAST(len(wtok) AS INT) AS n_tokens,
-         row_number() OVER (
-           PARTITION BY source
-           ORDER BY CAST(len(wtok) AS INT) DESC, doc_id ASC
-         ) AS rn
-  FROM (SELECT doc_id, source, {_DUCK_TOKENS} AS wtok FROM documents)
-) WHERE rn <= {{cap}}
-"""
-
-
-# --- per-source token budget (corpus mixing) ----------------------------------
-
-TOKEN_BUDGET_DEFAULT = 1_500
-
-
-def corpus_token_budget(
-    docs: DataFrame, budget_tokens: int = TOKEN_BUDGET_DEFAULT
-) -> DataFrame:
-    """Cap each source's contribution to the training mix at a TOKEN budget
-    (the unit data mixes are actually specified in), not a document count:
-    docs are admitted in the deterministic md5(doc_id) order until the
-    source's running token total would pass the budget.
-
-    Pinned rule: keep a doc iff its INCLUSIVE running sum ≤ budget — the
-    doc that crosses the boundary is dropped, as is everything after it in
-    the hash order.  The md5 order makes the admitted SET a uniform,
-    reproducible sample of the source, independent of storage order and
-    cluster size (same portable-determinism trick as the stratified
-    sampler).
-
-    Scale shape: one window cumsum per source — a single hash exchange on
-    the source key plus a per-source sort on the 32-char hash.  A running
-    sum is inherently sequential per key, so unlike the domain cap there is
-    no salted two-phase shortcut; for a pathological mega-source, pre-prune
-    with domain_budget_cap or run per-partition budgets.  Exchanges carry
-    (source, n_tokens, hash) — never text."""
-    w = (
-        Window.partitionBy("source")
-        .orderBy("h32", "doc_id")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    scored = docs.select(
-        "doc_id",
-        "source",
-        F.expr(SPARK_N_TOKENS).alias("n_tokens"),
-        F.md5(F.col("doc_id").cast("string")).alias("h32"),
-    )
-    return (
-        scored.withColumn("cum_tokens", F.sum("n_tokens").over(w).cast("long"))
-        .where(F.col("cum_tokens") <= F.lit(budget_tokens))
-        .select("doc_id", "source", "n_tokens", "cum_tokens")
-    )
-
-
-# --- training-sequence packing ------------------------------------------------
-
-PACK_MAX_TOKENS = 256
-PACK_BUCKETS = 16
-
-_PACK_SCHEMA = (
-    "doc_id long, bucket int, seq_id long, seq_pos int, n_tokens int"
-)
-
-
-def pack_sequences(
-    docs: DataFrame,
-    max_tokens: int = PACK_MAX_TOKENS,
-    n_buckets: int = PACK_BUCKETS,
-) -> DataFrame:
-    """Pack documents into fixed-token-budget training sequences — the
-    step between a curated corpus and a dataloader.  Deterministically
-    parallel: docs hash into n_buckets independent streams
-    (pmod(xxhash64(doc_id), n_buckets)); within a bucket they are packed
-    in md5(doc_id) order by the greedy NEXT-FIT rule — a doc joins the
-    current sequence if it fits, else opens the next one.  A doc larger
-    than max_tokens gets a sequence of its own (truncation is the
-    tokenizer's concern, not the packer's).
-
-    Output: one row per doc — (doc_id, bucket, seq_id, seq_pos, n_tokens)
-    with seq_id bucket-local; (bucket, seq_id) is the globally unique
-    sequence key.  Bit-identical on any cluster size: both the bucket
-    assignment and the within-bucket order are pure functions of doc_id.
-
-    Scale shape: token counts are computed JVM-side BEFORE the Arrow
-    crossing; the pandas groups carry three narrow columns, never text,
-    and each group holds ~|corpus|/n_buckets rows — size n_buckets so a
-    group fits an executor (at 100 TB that is a few thousand buckets, and
-    the packing loop stays O(group) with O(1) state)."""
-    import pandas as pd
-
-    def pack(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(["h32", "doc_id"], kind="mergesort")
-        seq_ids, seq_pos = [], []
-        cur_seq, cur_pos, cur_tokens = 0, 0, 0
-        for n in pdf["n_tokens"]:
-            if cur_pos > 0 and cur_tokens + n > max_tokens:
-                cur_seq, cur_pos, cur_tokens = cur_seq + 1, 0, 0
-            seq_ids.append(cur_seq)
-            seq_pos.append(cur_pos)
-            cur_pos += 1
-            cur_tokens += n
-        return pd.DataFrame(
-            {
-                "doc_id": pdf["doc_id"],
-                "bucket": pdf["bucket"],
-                "seq_id": seq_ids,
-                "seq_pos": seq_pos,
-                "n_tokens": pdf["n_tokens"],
-            }
-        )
-
-    scored = docs.select(
-        "doc_id",
-        F.pmod(F.xxhash64("doc_id"), F.lit(n_buckets)).cast("int").alias(
-            "bucket"
-        ),
-        F.md5(F.col("doc_id").cast("string")).alias("h32"),
-        F.expr(SPARK_N_TOKENS).cast("int").alias("n_tokens"),
-    )
-    return scored.groupBy("bucket").applyInPandas(pack, schema=_PACK_SCHEMA)
-
-
-# DuckDB mirror over the documents view — the in-test oracle
-# (tests/test_dedup.py); not a driver row (the 50-row artifact cap is taken).
-CORPUS_TOKEN_BUDGET_SQL = f"""
-SELECT doc_id, source, n_tokens, cum_tokens FROM (
-  SELECT doc_id, source, n_tokens,
-         CAST(SUM(n_tokens) OVER (
-           PARTITION BY source ORDER BY h32, doc_id
-           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW
-         ) AS BIGINT) AS cum_tokens
-  FROM (
-    SELECT doc_id, source, CAST(len({_DUCK_TOKENS}) AS INT) AS n_tokens,
-           md5(CAST(doc_id AS VARCHAR)) AS h32
-    FROM documents
-  )
-) WHERE cum_tokens <= {{budget}}
-"""
-
-
 _SAMPLE_CASE_DUCK = " ".join(
     f"WHEN lang = '{lang}' THEN '{hx}'" for lang, hx in SAMPLE_RATE_HEX.items()
 )
@@ -396,8 +205,8 @@ def pipeline_web_ingest(pages: DataFrame) -> DataFrame:
                                   ≥5 words, no javascript; doc floor)
           → language annotation  (annotate_lang — reliable-only, else NULL)
 
-    emitting (url, lang, text, n_tokens) ready for the dedup/budget/
-    packing stages of pipeline_training_set.
+    emitting (url, lang, text, n_tokens) ready for the dedup stages of
+    pipeline_training_set.
 
     Input is one capture per url (crawl/F5 output); revisit collapsing is
     the as-of join's job, not re-done here.  Note the synthetic world's
@@ -438,98 +247,3 @@ def pipeline_web_ingest(pages: DataFrame) -> DataFrame:
         "text",
         F.expr(SPARK_N_TOKENS).alias("n_tokens"),
     )
-
-
-# --- deterministic train/val/test split -----------------------------------------
-
-# Hex thresholds over the 256-way md5 bucket: [00, VAL) → val,
-# [VAL, TEST) → test, [TEST, ff] → train.  0x0a/256 ≈ 3.9% val,
-# (0x14-0x0a)/256 ≈ 3.9% test, rest train — pinned demo fractions;
-# deployments pass their own.
-SPLIT_VAL_HEX = "0a"
-SPLIT_TEST_HEX = "14"
-
-
-def pipeline_split(
-    docs: DataFrame,
-    val_hex: str = SPLIT_VAL_HEX,
-    test_hex: str = SPLIT_TEST_HEX,
-) -> DataFrame:
-    """Deterministic train/validation/test split — the last step before
-    packing: split membership is a pure function of doc_id (first two hex
-    chars of md5), so it is reproducible bit-for-bit on any cluster size,
-    stable under re-runs and resumes, and a document can never migrate
-    between splits when the corpus grows (the property random splits
-    lack).  Emits (doc_id, split).
-
-    Scale shape: map-only — one hash + two comparisons per row inside
-    whole-stage codegen; no shuffle, no RNG, no driver work."""
-    if not (len(val_hex) == len(test_hex) == 2 and val_hex <= test_hex):
-        raise ValueError("need 2-hex-char thresholds with val_hex <= test_hex")
-    bucket = F.expr(_sample_bucket_expr("doc_id"))
-    return docs.select(
-        "doc_id",
-        F.when(bucket < F.lit(val_hex), F.lit("val"))
-        .when(bucket < F.lit(test_hex), F.lit("test"))
-        .otherwise(F.lit("train"))
-        .alias("split"),
-    )
-
-
-def pipeline_split_sql(
-    val_hex: str = SPLIT_VAL_HEX, test_hex: str = SPLIT_TEST_HEX
-) -> str:
-    b = "substring(md5(CAST(doc_id AS VARCHAR)), 1, 2)"
-    return f"""
-SELECT doc_id,
-       CASE WHEN {b} < '{val_hex}' THEN 'val'
-            WHEN {b} < '{test_hex}' THEN 'test'
-            ELSE 'train' END AS split
-FROM docs
-"""
-
-
-# --- semantic prune (SemDeDup stage) ----------------------------------------------
-
-def pipeline_semantic_prune(
-    docs: DataFrame,
-    vectors: DataFrame,
-    k: int | None = None,
-    n_iter: int | None = None,
-    tau: float | None = None,
-) -> DataFrame:
-    """Drop documents whose embedding SemDeDup marks as a semantic
-    duplicate; keep every doc without a vector (embeddings usually cover a
-    corpus subset — coverage is an upstream budget decision, and "no
-    vector" must not mean "silently dropped").  Joins on doc_id = vec_id.
-
-    Scale shape: semdedup's own (clustered, bounded-quadratic) work plus
-    ONE left join of docs against the (vec_id, keep) verdict — the verdict
-    relation carries two narrow columns, never text or vectors, and is
-    broadcast (applyInPandas output has no Catalyst stats, so without the
-    hint the planner sort-merge-joins and shuffles the text side).  The
-    broadcast is bounded by the VECTOR count, not the corpus: ~9 bytes a
-    row holds to ~10^8 embedded docs; past that, write the verdicts out
-    and bucket-join on doc_id instead.  Compose AFTER exact/near-dup text
-    dedup: embedding dedup is the coarsest, most expensive signal, so it
-    should see the smallest corpus."""
-    from spacetime_crawler_spark.operators.semdedup import (
-        K_CLUSTERS,
-        N_ITER,
-        TAU_SEMANTIC,
-        semdedup,
-    )
-
-    verdicts = semdedup(
-        vectors,
-        k=K_CLUSTERS if k is None else k,
-        n_iter=N_ITER if n_iter is None else n_iter,
-        tau=TAU_SEMANTIC if tau is None else tau,
-    ).select(F.col("vec_id").alias("doc_id"), "keep")
-    # broadcast explicitly: the verdicts come out of applyInPandas, for
-    # which Catalyst has no size statistics — without the hint the planner
-    # sort-merge-joins and the docs side (text included) shuffles, exactly
-    # what this operator's contract forbids (plan-asserted in tests)
-    return docs.join(F.broadcast(verdicts), "doc_id", "left").filter(
-        F.coalesce(F.col("keep"), F.lit(True))
-    ).drop("keep")

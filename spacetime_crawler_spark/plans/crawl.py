@@ -35,6 +35,7 @@ from __future__ import annotations
 
 import time
 from concurrent.futures import Future, ThreadPoolExecutor, wait
+from contextlib import ExitStack
 from dataclasses import dataclass, field
 
 import pyarrow as pa
@@ -59,6 +60,16 @@ from spacetime_crawler_spark.sources.io_tables import ParquetManifestIO
 
 FRONTIER_COLS = ("url_norm", "url_hash", "h2", "host", "depth")
 
+# fetch-join strategy gate: broadcast the selected set while it's small,
+# fall back to a shuffled hash join past this many rows (the 10^10-tier
+# regime where the winner set exceeds broadcast size)
+FETCH_BROADCAST_MAX_ROWS = 2_000_000
+# sidecar membership gate: broadcast the whole sidecar up to this size,
+# cogroup candidates with the sidecar rows on part_id above it (each task
+# then holds only its buckets' bitmaps) — past 256 parts at the fixed
+# bloom.BITS_PER_PART
+BLOOM_BROADCAST_MAX_BYTES = 64 << 20
+
 
 @dataclass
 class CrawlConfig:
@@ -67,14 +78,6 @@ class CrawlConfig:
     round_budget_s: float = 30.0
     n_parts: int = 32
     use_bloom: bool = True
-    # fetch-join strategy gate: broadcast the selected set while it's small,
-    # fall back to a shuffled hash join past this many rows (the 10^10-tier
-    # regime where the winner set exceeds broadcast size)
-    fetch_broadcast_max_rows: int = 2_000_000
-    # sidecar membership gate: broadcast the whole sidecar below this size,
-    # cogroup candidates with the sidecar rows on part_id above it (each
-    # task then holds only its buckets' bitmaps)
-    bloom_broadcast_max_bytes: int = 64 << 20
     # rewrite `seen` as one compacted snapshot every K rounds so readers
     # union ≤K+1 files instead of O(rounds); 0 disables compaction
     seen_compact_every: int = 8
@@ -338,6 +341,13 @@ def _observed_write(io, table: str, rnd: int, df: DataFrame, *extra) -> dict:
     return obs.get
 
 
+def _cache(held: ExitStack, df: DataFrame) -> DataFrame:
+    """df.persist(), unpersisted when `held` closes — on success or error."""
+    df = df.persist()
+    held.callback(df.unpersist)
+    return df
+
+
 def _dedup_candidates(
     spark: SparkSession,
     candidates: DataFrame,
@@ -345,30 +355,32 @@ def _dedup_candidates(
     bloom_prev: DataFrame | None,
     cfg: CrawlConfig,
     m: RoundMetrics,
+    held: ExitStack,
 ):
     """F3 — bloom prefilter (definite negatives skip the exact anti-join),
     then the exact left_anti vs seen, both sides partitioned by url_hash.
-    Returns (new_urls, flagged, bloom_bcast): `flagged` is the persisted
-    candidates + maybe_seen cache (None without the bloom), `bloom_bcast`
-    the sidecar broadcast to destroy once the round is committed (None on
-    the cogroup path)."""
-    flagged = bloom_bcast = None
+    Returns (new_urls, flagged): `flagged` is the cached candidates +
+    maybe_seen (None without the bloom).  The cache and the sidecar
+    broadcast are released when `held` closes."""
+    flagged = None
     if bloom_prev is not None:
         sidecar_bytes = cfg.n_parts * (bloom.BITS_PER_PART // 8)
-        if sidecar_bytes <= cfg.bloom_broadcast_max_bytes:
+        if sidecar_bytes <= BLOOM_BROADCAST_MAX_BYTES:
             # small sidecar: one broadcast, destroyed at round end
             maybe_seen_udf, bloom_bcast = bloom.make_maybe_seen_udf(
                 spark, bloom.collect_sidecar(bloom_prev), cfg.n_parts
             )
+            held.callback(bloom_bcast.destroy)
             flagged = candidates.withColumn(
                 "maybe_seen", maybe_seen_udf("url_hash", "h2")
-            ).persist()
+            )
         else:
             # large sidecar: cogroup on part_id — each task receives only
             # its buckets' bitmaps, never the whole sidecar
             flagged = bloom.flag_maybe_seen_cogrouped(
                 candidates, bloom_prev, cfg.n_parts
-            ).persist()
+            )
+        flagged = _cache(held, flagged)
         to_check = flagged.filter(F.col("maybe_seen")).drop("maybe_seen")
         definitely_new = flagged.filter(~F.col("maybe_seen")).drop("maybe_seen")
     else:
@@ -380,7 +392,7 @@ def _dedup_candidates(
         "left_anti",
     )
     new_urls = checked_new if flagged is None else definitely_new.unionByName(checked_new)
-    return new_urls, flagged, bloom_bcast
+    return new_urls, flagged
 
 
 def run_crawl(
@@ -409,10 +421,14 @@ def run_crawl(
             " engine's repartitioning (construct the store with"
             " n_buckets=cfg.n_parts)"
         )
-    with ThreadPoolExecutor(_BATCH_THREADS, thread_name_prefix="crawl-batch") as pool:
+    # `held` releases every cache and broadcast the run still holds when the
+    # call ends, returning or raising; it closes after the pool has joined
+    with ExitStack() as held, ThreadPoolExecutor(
+        _BATCH_THREADS, thread_name_prefix="crawl-batch"
+    ) as pool:
         run = CrawlRun(io=io)
-        page_keys = prepare_page_keys(spark, pages).persist()  # narrow, no html
-        robots_rules = build_robots_rules(pages).persist()
+        page_keys = _cache(held, prepare_page_keys(spark, pages))  # narrow, no html
+        robots_rules = _cache(held, build_robots_rules(pages))
 
         start_round = 0
         if resume:
@@ -471,24 +487,6 @@ def run_crawl(
         if start_round == 0:
             io.commit(0, tables)
 
-        bloom_override: DataFrame | None = None
-        if (
-            cfg.use_bloom
-            and start_round > 0
-            and not _bloom_state_matches(spark, io, start_round, cfg)
-        ):
-            # resumed state without a bloom table, or one built under a DIFFERENT
-            # geometry (n_parts / bits / hashes — reusing it would mis-bucket
-            # membership tests and re-admit seen URLs): rebuild once from seen,
-            # IN MEMORY ONLY.  Never rewrite the already-committed round's bloom
-            # slice — a crash mid-rewrite would leave committed-but-partial
-            # state, exactly what the round-manifest protocol forbids.  The
-            # rebuilt sidecar feeds the first resumed round and is then written
-            # (and committed) at that round like any other.
-            bloom_override = bloom.update_bitmaps_df(
-                None, read_seen_up_to(spark, io, start_round), cfg.n_parts
-            ).persist()
-
         for rnd in range(start_round + 1, cfg.rounds + 1):
             t0 = time.monotonic()
             m = RoundMetrics(round=rnd)
@@ -497,18 +495,36 @@ def run_crawl(
             prev_frontier_rows = io.manifest("frontier", rnd - 1)["rows"]
             if prev_frontier_rows == 0:
                 break
+            # the round's caches and broadcasts: released once it commits,
+            # or by `held` if anything in the round raises
+            round_held = held.enter_context(ExitStack())
             frontier = io.read(spark, "frontier", rnd - 1)
             seen = read_seen_up_to(spark, io, rnd - 1)
             bloom_prev = None
             if cfg.use_bloom:
-                if rnd == start_round + 1 and bloom_override is not None:
-                    bloom_prev = bloom_override
+                if (
+                    start_round > 0
+                    and rnd == start_round + 1
+                    and not _bloom_state_matches(spark, io, start_round, cfg)
+                ):
+                    # resumed state without a bloom table, or one built under a
+                    # DIFFERENT geometry (n_parts / bits / hashes — reusing it
+                    # would mis-bucket membership tests and re-admit seen
+                    # URLs): rebuild once from seen, IN MEMORY ONLY.  Never
+                    # rewrite the already-committed round's bloom slice — a
+                    # crash mid-rewrite would leave committed-but-partial
+                    # state, exactly what the round-manifest protocol forbids.
+                    # The rebuilt sidecar is written (and committed) at this
+                    # round like any other.
+                    bloom_prev = _cache(round_held, bloom.update_bitmaps_df(
+                        None, seen, cfg.n_parts
+                    ))
                 else:
                     bloom_prev = io.read(spark, "bloom", rnd - 1)
 
             # F6 + F7 — gate and schedule
-            gated = robots_gate(frontier, robots_rules).persist()
-            selected = schedule_round(gated, cfg.round_budget_s).persist()
+            gated = _cache(round_held, robots_gate(frontier, robots_rules))
+            selected = _cache(round_held, schedule_round(gated, cfg.round_budget_s))
             leftover = leftover_after_schedule(gated, selected)
 
             # F5 — adaptive fetch: broadcast the quota-bounded selected set while
@@ -518,9 +534,9 @@ def run_crawl(
             # the common case; only when the frontier outgrows the gate do we pay
             # one count() on the (persisted) selected set for an exact decision.
             sel_bound = prev_frontier_rows
-            if sel_bound > cfg.fetch_broadcast_max_rows:
+            if sel_bound > FETCH_BROADCAST_MAX_ROWS:
                 sel_bound = selected.count()
-            broadcast_ok = sel_bound <= cfg.fetch_broadcast_max_rows
+            broadcast_ok = sel_bound <= FETCH_BROADCAST_MAX_ROWS
             fetched = fetch_join_round(
                 spark, pages, page_keys, selected, broadcast_selected=broadcast_ok
             )
@@ -528,7 +544,7 @@ def run_crawl(
             # F8+F9 fused — ONE parse per page produces text AND links; persisted
             # WITHOUT the html payload so both downstream consumers (lineage sink,
             # candidate pipeline) reuse the single Python pass.
-            enriched = extract_fetched(fetched).persist()
+            enriched = _cache(round_held, extract_fetched(fetched))
 
             fetch_log = enriched.select(
                 F.lit(rnd).alias("round"),
@@ -569,12 +585,12 @@ def run_crawl(
                 # depth per url).  This write is the round's one lineage-
                 # materializing action for the candidate side: it fills the
                 # flagged and new_frontier_rows caches the next batch reads.
-                new_urls, flagged, bloom_bcast = _dedup_candidates(
-                    spark, candidates, seen, bloom_prev, cfg, m
+                new_urls, flagged = _dedup_candidates(
+                    spark, candidates, seen, bloom_prev, cfg, m, round_held
                 )
-                new_rows = new_urls.withColumn(
+                new_rows = _cache(round_held, new_urls.withColumn(
                     "host", F.lower(F.parse_url("url_norm", F.lit("HOST")))
-                ).select(*FRONTIER_COLS).persist()
+                ).select(*FRONTIER_COLS))
                 next_frontier = (
                     leftover.select(*FRONTIER_COLS)
                     .unionByName(new_rows)
@@ -583,7 +599,7 @@ def run_crawl(
                     .select(*FRONTIER_COLS)
                 )
                 n = _observed_write(io, "frontier", rnd, next_frontier)["n"]
-                return n, new_rows, flagged, bloom_bcast
+                return n, new_rows, flagged
 
             # the round's one batch: the fetch_log sink next to the candidate →
             # frontier chain; seen, bloom and compaction need only the rows the
@@ -596,7 +612,7 @@ def run_crawl(
             )
             tables: dict[str, int] = {}
             try:
-                n_frontier, new_frontier_rows, flagged, bloom_bcast = futures[1].result()
+                n_frontier, new_frontier_rows, flagged = futures[1].result()
                 seen_delta = new_frontier_rows.select(
                     "url_norm", "url_hash", "h2"
                 ).withColumn("round_seen", F.lit(rnd))
@@ -653,18 +669,9 @@ def run_crawl(
             io.commit(rnd, tables)
             run.metrics.append(m)
             run.rounds_run = rnd
-
-            for df in (gated, selected, enriched, new_frontier_rows, flagged):
-                if df is not None:
-                    df.unpersist()
-            if bloom_bcast is not None:
-                # all round outputs are committed — free this round's sidecar
-                # broadcast so driver/executor memory stays O(1 sidecar), not
-                # O(rounds × sidecar)
-                bloom_bcast.destroy()
-            if bloom_override is not None and rnd == start_round + 1:
-                bloom_override.unpersist()
-                bloom_override = None
+            # all round outputs are committed — free the round's caches and
+            # sidecar broadcast so memory stays O(1 round), not O(rounds)
+            round_held.close()
             if n_frontier == 0:
                 break
 
@@ -681,9 +688,6 @@ def run_crawl(
             ))
             io.write("metrics", run.rounds_run, metrics_df)
             io.commit(run.rounds_run, {"metrics": len(run.metrics)})
-
-        page_keys.unpersist()
-        robots_rules.unpersist()
         return run
 
 

@@ -29,13 +29,9 @@ QueryFn = Callable[[SparkSession, str], DataFrame]
 # pinned in tests/test_driver_contract.py — with redundant demo entries
 # consolidated away rather than letting a component's driver-visible row
 # vanish: a1_approx_unique_pages (HLL bound pinned in
-# test_approx_count_distinct_error_bound) and the exact-dedup pair (oracle
-# compares pinned in test_dedup_exact_stats_oracle /
-# test_dedup_exact_groups_oracle — the driver's sf0.01 corpus has zero
-# exact-dup groups, so the groups driver row was an empty compare; its
-# slot went to text_repetition_stats, a 500-row hash-green check) live on
-# as pytest-only coverage; dedup_exact_stats also runs in bench.py's
-# HEADLINE suite.
+# test_approx_count_distinct_error_bound) and dedup_exact_stats (oracle
+# compare pinned in test_dedup_exact_stats_oracle) live on as pytest-only
+# coverage; dedup_exact_stats also runs in bench.py's HEADLINE suite.
 DRIVER_QUERY_CAP = 50
 
 SPARK_QUERIES: dict[str, QueryFn] = {

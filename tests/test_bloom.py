@@ -135,7 +135,8 @@ def test_cogrouped_membership_equals_broadcast(spark):
         assert via_cogroup[f"http://x.com/{i}"]
 
 
-def test_engine_dedup_same_with_and_without_bloom(spark, tmp_path_factory):
+def test_engine_dedup_same_with_and_without_bloom(spark, tmp_path_factory,
+                                                  monkeypatch):
     """use_bloom is purely an optimization: final seen/fetch_log identical."""
     from spacetime_crawler_spark.plans import crawl as crawl_mod
     from spacetime_crawler_spark.plans.crawl import CrawlConfig, run_crawl
@@ -146,15 +147,15 @@ def test_engine_dedup_same_with_and_without_bloom(spark, tmp_path_factory):
     seeds = synth.seed_urls(p)
 
     states = []
-    # (use_bloom, bloom_broadcast_max_bytes): broadcast path, forced-cogroup
+    # (use_bloom, BLOOM_BROADCAST_MAX_BYTES): broadcast path, forced-cogroup
     # path, and bloom off — all must produce identical committed state
     for i, (use_bloom, max_bytes) in enumerate(
         [(True, 64 << 20), (True, 0), (False, 64 << 20)]
     ):
         d = str(tmp_path_factory.mktemp(f"bloom_{i}"))
+        monkeypatch.setattr(crawl_mod, "BLOOM_BROADCAST_MAX_BYTES", max_bytes)
         cfg = CrawlConfig(state_dir=d, rounds=3, round_budget_s=8.0,
-                          use_bloom=use_bloom,
-                          bloom_broadcast_max_bytes=max_bytes)
+                          use_bloom=use_bloom)
         run = run_crawl(spark, pages, seeds, cfg)
         seen = sorted(
             (r.url_norm, r.round_seen)

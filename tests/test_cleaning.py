@@ -1,10 +1,9 @@
-"""C4 line cleaning, global exact-line dedup, boilerplate removal, PII
-redaction, blocklist/normalization and the web-ingest composite vs DuckDB
-oracles and pure-python references.  The C4 fixture is crafted multi-line
-text (the testdata documents are single-line, so the fixture plants
-everything the rules must hit: terminal-punctuation misses, short lines,
-javascript lines, code docs, lorem-ipsum docs, cross-doc and within-doc
-duplicate lines, short pass-through separators)."""
+"""C4 line cleaning, boilerplate removal, PII redaction and the web-ingest
+composite vs DuckDB oracles and pure-python references.  The C4 fixture is
+crafted multi-line text (the testdata documents are single-line, so the
+fixture plants everything the rules must hit: terminal-punctuation misses,
+short lines, javascript lines, code docs, lorem-ipsum docs, cross-doc and
+within-doc duplicate lines, short pass-through separators)."""
 
 from __future__ import annotations
 
@@ -71,45 +70,6 @@ def test_clean_lines_c4_is_map_only(spark, fixture):
     p = buf.getvalue()
     assert "Exchange" not in p, p[:2000]
     assert "BatchEvalPython" not in p and "ArrowEvalPython" not in p, p[:2000]
-
-
-def test_dedup_lines_global_matches_duckdb(spark, fixture):
-    docs, con = fixture
-    got = cleaning.dedup_lines_global(docs)
-    oracle = con.sql(
-        cleaning.DEDUP_LINES_SQL.format(min_chars=10, delim="chr(10)")
-    ).df()
-    assert compare(got, oracle) == []
-
-
-def test_dedup_lines_global_semantics(spark, fixture):
-    docs, _ = fixture
-    rows = {r.doc_id: r for r in cleaning.dedup_lines_global(docs).collect()}
-    # every doc retains at least its unique lines
-    assert set(rows) == {d for d, _ in DOCS}
-    # DUP survives only at its first occurrence: doc 0
-    dup_hits = sorted(d for d, r in rows.items() if DUP in r.text_dedup)
-    assert dup_hits == [0]
-    # doc 5 held two DUP copies (both lost to doc 0) but keeps its short
-    # '---' separator and its unique closing line
-    assert rows[5].n_lines_dropped == 2
-    assert "---" in rows[5].text_dedup
-    # short separators pass through untouched in every doc
-    assert rows[6].text_dedup == "---\nunique line for document six, happily terminal."
-    # doc 0 owns every first occurrence of its lines: nothing dropped,
-    # order preserved after reassembly
-    assert rows[0].n_lines_dropped == 0
-    assert rows[0].text_dedup.startswith(GOOD)
-
-
-def test_dedup_lines_first_occurrence_is_doc0(spark, fixture):
-    """(doc_id, pos) ordering: DUP appears in docs 0, 1, 2, 5 (twice) —
-    only doc 0's copy survives."""
-    docs, _ = fixture
-    rows = {r.doc_id: r for r in cleaning.dedup_lines_global(docs).collect()}
-    assert DUP in rows[0].text_dedup
-    for d in (1, 2, 5):
-        assert DUP not in rows[d].text_dedup
 
 
 # --- boilerplate removal --------------------------------------------------------
@@ -218,38 +178,6 @@ def test_redact_pii_plan_is_map_only(spark, pii_fixture):
     assert "EvalPython" not in p, p[:2000]
 
 
-# --- paragraph-level dedup ------------------------------------------------------
-
-PARA = "a paragraph of boilerplate text\nthat spans two physical lines and repeats."
-
-PARA_DOCS = [
-    (0, f"{PARA}\n\nunique first-document paragraph, long enough to count."),
-    (1, f"intro paragraph only in document one.\n\n{PARA}"),
-    (2, f"{PARA}\n\n--\n\n{PARA}"),  # short separator passes through
-]
-
-
-def test_dedup_paragraphs_global(spark, tmp_path_factory):
-    path = str(tmp_path_factory.mktemp("paras") / "docs.parquet")
-    spark.createDataFrame(PARA_DOCS, "doc_id long, text string").coalesce(1).write.parquet(path)
-    docs = spark.read.parquet(path)
-    got = cleaning.dedup_paragraphs_global(docs)
-    con = duckdb.connect()
-    con.sql(f"CREATE VIEW docs AS SELECT * FROM '{path}/*.parquet'")
-    oracle = con.sql(
-        cleaning.DEDUP_LINES_SQL.format(min_chars=10, delim="chr(10)||chr(10)")
-    ).df()
-    assert compare(got, oracle) == []
-    con.close()
-    rows = {r.doc_id: r for r in got.collect()}
-    # the repeated multi-line paragraph survives only in doc 0 — a LINE
-    # dedup could never see it as one unit
-    assert PARA in rows[0].text_dedup
-    assert PARA not in rows[1].text_dedup and PARA not in rows[2].text_dedup
-    # doc 2 lost both copies but keeps its short separator
-    assert rows[2].n_lines_dropped == 2 and rows[2].text_dedup == "--"
-
-
 # --- web ingest composite -------------------------------------------------------
 
 
@@ -349,85 +277,6 @@ def test_pipeline_web_ingest_plan_is_map_only(spark):
     assert "BatchEvalPython" not in p, p[:2000]
 
 
-# --- blocklist gate -------------------------------------------------------------
-
-
-def test_filter_blocklist(spark, tmp_path_factory):
-    BDOCS = [
-        (0, "perfectly ordinary text with nothing wrong."),
-        (1, "contains badterm right here."),
-        (2, "BadTerm capitalized and blockedword twice blockedword."),
-        # substring is NOT a hit — token equality only
-        (3, "notabadterm and badterms are different tokens."),
-        # surrounding punctuation is trimmed before the compare
-        (5, "quoted (badterm) and terminal badterm. both hit"),
-        (4, ""),
-    ]
-    path = str(tmp_path_factory.mktemp("block") / "docs.parquet")
-    spark.createDataFrame(BDOCS, "doc_id long, text string").coalesce(1).write.parquet(path)
-    docs = spark.read.parquet(path)
-    got = cleaning.filter_blocklist(docs)
-    con = duckdb.connect()
-    con.sql(f"CREATE VIEW docs AS SELECT * FROM '{path}/*.parquet'")
-    assert compare(got, con.sql(cleaning.blocklist_sql()).df()) == []
-    con.close()
-    rows = {r.doc_id: r for r in got.collect()}
-    assert [rows[i].blocked for i in range(6)] == [False, True, True, False, False, True]
-    assert rows[2].n_blocked_hits == 3  # BadTerm + blockedword ×2 (one with a trailing period)
-    assert rows[5].n_blocked_hits == 2
-
-
-# --- text normalization ---------------------------------------------------------
-
-
-def test_normalize_text(spark, tmp_path_factory):
-    NDOCS = [
-        (0, "plain text stays put.\nsecond line."),
-        (1, "tabs\tand   runs  of \t spaces"),
-        (2, "spaces around  \n   newlines\n\n\n\n\ntoo many blanks"),
-        (3, "ctrl\x00chars\x08gone\x1f but \ttab-as-space and newline\nstay"),
-        (4, "   leading and trailing   "),
-        (5, ""),
-        # review regressions: CRLF/CR normalize to \n; edge NEWLINES are
-        # stripped too (plain trim only eats spaces)
-        (6, "windows line one.\r\nwindows line two.\rclassic mac"),
-        (7, "\n\nedge newlines around the body.\n\n"),
-    ]
-    path = str(tmp_path_factory.mktemp("norm") / "docs.parquet")
-    spark.createDataFrame(NDOCS, "doc_id long, text string").coalesce(1).write.parquet(path)
-    docs = spark.read.parquet(path)
-    got = cleaning.normalize_text(docs)
-    con = duckdb.connect()
-    con.sql(f"CREATE VIEW docs AS SELECT * FROM '{path}/*.parquet'")
-    assert compare(got, con.sql(cleaning.NORMALIZE_TEXT_SQL).df()) == []
-    con.close()
-    rows = {r.doc_id: r for r in got.collect()}
-    assert rows[0].text_norm == NDOCS[0][1] and rows[0].n_chars_removed == 0
-    assert rows[1].text_norm == "tabs and runs of spaces"
-    assert rows[2].text_norm == "spaces around\nnewlines\n\ntoo many blanks"
-    assert rows[3].text_norm == "ctrlcharsgone but tab-as-space and newline\nstay"
-    assert rows[4].text_norm == "leading and trailing"
-    assert rows[5].text_norm == ""
-    assert rows[6].text_norm == "windows line one.\nwindows line two.\nclassic mac"
-    assert rows[7].text_norm == "edge newlines around the body." and rows[7].n_chars_removed == 4
-
-
-def test_blocklist_and_normalize_plans_are_map_only(spark, tmp_path_factory):
-    import contextlib
-    import io as _io
-
-    path = str(tmp_path_factory.mktemp("mp") / "docs.parquet")
-    spark.createDataFrame([(0, "x")], "doc_id long, text string").write.parquet(path)
-    docs = spark.read.parquet(path)
-    for op in (cleaning.filter_blocklist, cleaning.normalize_text):
-        buf = _io.StringIO()
-        with contextlib.redirect_stdout(buf):
-            op(docs).explain(mode="formatted")
-        p = buf.getvalue()
-        assert "Exchange" not in p, (op.__name__, p[:1500])
-        assert "EvalPython" not in p, (op.__name__, p[:1500])
-
-
 def test_run_py_ingest_writes_training_docs(spark, monkeypatch, tmp_path):
     """run.py --ingest DIR writes DIR/training_docs with the composite's
     schema and reports the count in the summary (0 over the synthetic
@@ -460,35 +309,3 @@ def test_run_py_ingest_writes_training_docs(spark, monkeypatch, tmp_path):
     out = spark.read.parquet(str(tmp_path / "cur" / "training_docs"))
     assert out.columns == ["url", "lang", "text", "n_tokens"]
     assert summary["ingest_docs"] == out.count() == 0
-
-
-# --- deterministic split --------------------------------------------------------
-
-
-def test_pipeline_split(spark, tmp_path_factory):
-    from spacetime_crawler_spark.operators.pipeline import (
-        pipeline_split,
-        pipeline_split_sql,
-    )
-
-    path = str(tmp_path_factory.mktemp("split") / "docs.parquet")
-    spark.range(0, 2000).selectExpr("id AS doc_id", "'t' AS text").coalesce(1).write.parquet(path)
-    docs = spark.read.parquet(path)
-    got = pipeline_split(docs)
-    con = duckdb.connect()
-    con.sql(f"CREATE VIEW docs AS SELECT * FROM '{path}/*.parquet'")
-    assert compare(got, con.sql(pipeline_split_sql()).df()) == []
-    con.close()
-    counts = {r.split: r["count"] for r in got.groupBy("split").count().collect()}
-    # every doc in exactly one split; fractions near 1/256-bucket expectation
-    assert sum(counts.values()) == 2000
-    assert 0.02 < counts["val"] / 2000 < 0.06
-    assert 0.02 < counts["test"] / 2000 < 0.06
-    # determinism: same assignment on a re-run over a differently-partitioned scan
-    again = {r.doc_id: r.split for r in pipeline_split(docs.repartition(7)).collect()}
-    first = {r.doc_id: r.split for r in got.collect()}
-    assert again == first
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError):
-        pipeline_split(docs, val_hex="20", test_hex="10")

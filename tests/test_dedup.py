@@ -139,30 +139,6 @@ def test_simhash_deterministic_and_locality(spark, exact_pairs):
     assert max(near) < sorted(background)[len(background) // 2]
 
 
-def test_simhash_near_pairs_exact_within_radius(spark, exact_pairs):
-    """The 8×8-bit chunk candidate join guarantees EXACT recall for Hamming
-    ≤ 7 (pigeonhole) — verify against brute force over the signatures, and
-    that the radius-7 pairs are dominated by planted near-dups."""
-    sigs = {r.doc_id: r.simhash for r in dedup.dedup_simhash(spark, SF_DIR).collect()}
-
-    def ham(a: int, b: int) -> int:
-        return bin((a ^ b) & ((1 << 64) - 1)).count("1")
-
-    ids = sorted(sigs)
-    brute = {
-        (a, b)
-        for i, a in enumerate(ids)
-        for b in ids[i + 1 :]
-        if ham(sigs[a], sigs[b]) <= 7
-    }
-    pairs = dedup.simhash_near_pairs(spark, SF_DIR).collect()
-    found = {(r.doc_a, r.doc_b) for r in pairs}
-    assert found == brute
-    # most radius-7 pairs are the planted near-dups (background min was 16)
-    assert found <= set(exact_pairs)
-    assert len(found) >= len(exact_pairs) // 2
-
-
 def test_new_pipeline_ops_plan_shapes(spark, sf_dir):
     """100 TB plan-shape assertions for the round-4 operators:
     decontamination probes a BROADCAST eval-span set (the big side never
@@ -257,25 +233,6 @@ def test_decontaminate_sliding_superset_of_grid(spark):
     assert grid <= slid
 
 
-def test_dedup_exact_groups_oracle(spark):
-    """dedup_exact_groups yielded its driver slot to text_repetition_stats
-    (the sf0.01 corpus has no exact-dup groups, so its driver row compared
-    two empty frames); the oracle compare lives here instead.  Non-empty
-    dup-group behavior is pinned by pipeline_training_set's oracle-green
-    md5 dedup stage over the same md5(text) key."""
-    from tests.oracle_harness import compare, duck_connection
-
-    duck = duck_connection(SF_DIR)
-    try:
-        problems = compare(
-            dedup.dedup_exact_groups(spark, SF_DIR),
-            duck.sql(dedup.DEDUP_EXACT_GROUPS_SQL).df(),
-        )
-        assert not problems, problems
-    finally:
-        duck.close()
-
-
 def test_dedup_exact_stats_oracle(spark):
     """dedup_exact_stats lost its driver row to the 50-key artifact cap
     (registry.py DRIVER_QUERY_CAP); its oracle check lives here instead so
@@ -291,126 +248,6 @@ def test_dedup_exact_stats_oracle(spark):
         assert not problems, problems
     finally:
         duck.close()
-
-
-def test_domain_budget_cap_matches_duckdb(spark):
-    """The C4-style per-domain cap vs the UNsalted single-window oracle in
-    DuckDB — proves phase 1 of the salted two-phase ranking never discards
-    a row the exact rank would keep.  cap=3 < docs-per-source at sf0.01, so
-    the cap actually bites."""
-    import duckdb
-
-    from spacetime_crawler_spark.operators import pipeline as pl
-    from spacetime_crawler_spark.sources.tables import load_table
-    from tests.oracle_harness import compare, duck_connection
-
-    docs = load_table(spark, SF_DIR, "documents")
-    got = pl.domain_budget_cap(docs, cap=3)
-    con = duck_connection(SF_DIR)
-    oracle = con.sql(pl.DOMAIN_BUDGET_SQL.format(cap=3)).df()
-    assert compare(got, oracle) == []
-    con.close()
-    # the cap bites: fewer rows out than in, exactly ≤3 per source
-    rows = got.collect()
-    assert 0 < len(rows) < docs.count()
-    per_src: dict[str, int] = {}
-    for r in rows:
-        per_src[r.source] = per_src.get(r.source, 0) + 1
-    assert all(n <= 3 for n in per_src.values())
-
-
-def test_domain_budget_cap_plan_shape(spark):
-    """Scale shape: two window sorts (salted pre-rank + exact rank), both
-    exchanges keyed on narrow columns — the text column must not appear in
-    any exchange (it is consumed by the token-count projection below the
-    first shuffle)."""
-    import contextlib
-    import io as _io
-
-    from spacetime_crawler_spark.operators import pipeline as pl
-    from spacetime_crawler_spark.sources.tables import load_table
-
-    docs = load_table(spark, SF_DIR, "documents")
-    df = pl.domain_budget_cap(docs, cap=3)
-    buf = _io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        df.explain(mode="formatted")
-    p = buf.getvalue()
-    assert p.count("Window") >= 2, p[:2000]
-    # formatted mode puts exchange keys on their own Arguments: lines
-    for line in p.splitlines():
-        if "hashpartitioning" in line:
-            assert "text#" not in line, line
-
-
-def test_corpus_token_budget_matches_duckdb(spark):
-    """Per-source token-budget admission vs the identical DuckDB window
-    cumsum — budget chosen so every source gets cut mid-stream."""
-    from spacetime_crawler_spark.operators import pipeline as pl
-    from spacetime_crawler_spark.sources.tables import load_table
-    from tests.oracle_harness import compare, duck_connection
-
-    docs = load_table(spark, SF_DIR, "documents")
-    got = pl.corpus_token_budget(docs, budget_tokens=500)
-    con = duck_connection(SF_DIR)
-    oracle = con.sql(pl.CORPUS_TOKEN_BUDGET_SQL.format(budget=500)).df()
-    assert compare(got, oracle) == []
-    con.close()
-    rows = got.collect()
-    assert 0 < len(rows) < docs.count()  # the budget bites
-    per_src: dict[str, int] = {}
-    for r in rows:
-        per_src[r.source] = max(per_src.get(r.source, 0), r.cum_tokens)
-    assert all(v <= 500 for v in per_src.values())
-
-
-def test_pack_sequences_matches_pure_python(spark):
-    """pack_sequences ≡ a pure-python next-fit recompute over the same
-    (bucket, md5-order, token-count) inputs, plus the packing invariants:
-    every doc exactly once; no sequence exceeds max_tokens unless it is a
-    single oversized doc; next-fit means a doc never fits in the sequence
-    it split from."""
-    from collections import defaultdict
-
-    from spacetime_crawler_spark.operators import pipeline as pl
-    from spacetime_crawler_spark.operators.textstats import SPARK_N_TOKENS
-    from spacetime_crawler_spark.sources.tables import load_table
-
-    MAX = 120
-    docs = load_table(spark, SF_DIR, "documents")
-    inputs = docs.selectExpr(
-        "doc_id",
-        f"cast(pmod(xxhash64(doc_id), {pl.PACK_BUCKETS}) as int) as bucket",
-        "md5(cast(doc_id as string)) as h32",
-        f"cast({SPARK_N_TOKENS} as int) as n_tokens",
-    ).collect()
-
-    by_bucket: dict[int, list] = defaultdict(list)
-    for r in inputs:
-        by_bucket[r.bucket].append(r)
-    want = {}
-    for b, rs in by_bucket.items():
-        rs.sort(key=lambda r: (r.h32, r.doc_id))
-        seq, pos, tok = 0, 0, 0
-        for r in rs:
-            if pos > 0 and tok + r.n_tokens > MAX:
-                seq, pos, tok = seq + 1, 0, 0
-            want[r.doc_id] = (b, seq, pos, r.n_tokens)
-            pos += 1
-            tok += r.n_tokens
-
-    got_rows = pl.pack_sequences(docs, max_tokens=MAX).collect()
-    got = {r.doc_id: (r.bucket, r.seq_id, r.seq_pos, r.n_tokens) for r in got_rows}
-    assert got == want  # every doc exactly once, identical assignment
-
-    seq_tokens: dict[tuple, int] = defaultdict(int)
-    seq_len: dict[tuple, int] = defaultdict(int)
-    for r in got_rows:
-        seq_tokens[(r.bucket, r.seq_id)] += r.n_tokens
-        seq_len[(r.bucket, r.seq_id)] += 1
-    overfull = [k for k, v in seq_tokens.items() if v > MAX]
-    assert all(seq_len[k] == 1 for k in overfull)  # only oversized singletons
-    assert len(seq_tokens) > 1  # packing actually split sequences
 
 
 # --- duplicate-span removal -----------------------------------------------------
@@ -465,117 +302,3 @@ def test_remove_duplicate_spans(spark, tmp_path_factory):
     # partial window passes through untouched
     assert rows[3].text_spandedup == "just a few words"
     assert rows[3].n_spans_dropped == 0
-
-
-# --- incremental minhash dedup ---------------------------------------------------
-
-def _shard_and_corpus(spark):
-    """Corpus of three distinct docs + a fresh shard containing: an exact
-    copy, a light edit, an unrelated doc, and a too-short doc."""
-    base = (
-        "alpha beta gamma delta epsilon zeta eta theta iota kappa "
-        "lambda mu nu xi omicron pi rho sigma tau upsilon"
-    )
-    other = (
-        "one two three four five six seven eight nine ten eleven twelve "
-        "thirteen fourteen fifteen sixteen seventeen eighteen nineteen twenty"
-    )
-    corpus = spark.createDataFrame(
-        [(100, base), (101, other), (102, "solo unique text never repeated "
-                                          "anywhere with many words inside")],
-        "doc_id bigint, text string",
-    )
-    edited = base.replace("sigma", "sigmoid")
-    shard = spark.createDataFrame(
-        [(0, base), (1, edited), (2, "completely different content with "
-                                     "no overlap at all in any shingle"),
-         (3, "short")],  # single token -> zero shingles -> no signature
-        "doc_id bigint, text string",
-    )
-    return shard, corpus
-
-
-def test_minhash_incremental_flags_cross_shard_dups(spark):
-    shard, corpus = _shard_and_corpus(spark)
-    sigs = dedup.minhash_signatures(corpus)
-    got = {
-        r["doc_id"]: (r["dup_of"], r["est_jaccard"])
-        for r in dedup.minhash_dedup_incremental(shard, sigs, threshold=0.5).collect()
-    }
-    assert got[0] == (100, 1.0)  # exact copy: all components agree
-    assert got[1][0] == 100 and 0.5 <= got[1][1] < 1.0  # light edit
-    assert 2 not in got  # unrelated
-    assert 3 not in got  # too short to shingle -> never a candidate
-
-
-def test_minhash_incremental_estimate_matches_signatures(spark):
-    """est_jaccard must equal the python-computed agreeing-component
-    fraction of the two signatures (the pinned estimator)."""
-    shard, corpus = _shard_and_corpus(spark)
-    corpus_sigs = dedup.minhash_signatures(corpus)
-    sig_of = {r["doc_id"]: list(r["sig"]) for r in corpus_sigs.collect()}
-    sig_of.update(
-        {r["doc_id"]: list(r["sig"])
-         for r in dedup.minhash_signatures(shard).collect()}
-    )
-    for r in dedup.minhash_dedup_incremental(shard, corpus_sigs, threshold=0.0).collect():
-        a, b = sig_of[r["doc_id"]], sig_of[r["dup_of"]]
-        # compare on the exact integer agreement count: python round() is
-        # banker's half-even while Spark ROUND is HALF_UP, and ties like
-        # 17/32 = 0.53125 would diverge at 4dp
-        agree = sum(1 for x, y in zip(a, b) if x == y)
-        assert abs(r["est_jaccard"] * len(a) - agree) < 0.01 * len(a)
-
-
-def test_minhash_incremental_best_match_rule(spark):
-    """A shard doc near two corpus docs keeps the highest estimate; exact
-    ties resolve to the lowest corpus doc_id."""
-    text = ("red orange yellow green blue indigo violet cyan magenta white "
-            "black brown pink gray silver gold maroon navy teal olive")
-    corpus = spark.createDataFrame(
-        [(200, text), (201, text)],  # two identical corpus docs
-        "doc_id bigint, text string",
-    )
-    shard = spark.createDataFrame([(5, text)], "doc_id bigint, text string")
-    out = dedup.minhash_dedup_incremental(
-        shard, dedup.minhash_signatures(corpus), threshold=0.5
-    ).collect()
-    assert [(r["doc_id"], r["dup_of"], r["est_jaccard"]) for r in out] == [
-        (5, 200, 1.0)
-    ]
-
-
-def test_minhash_incremental_bucket_cap(spark):
-    """A boilerplate bucket bigger than the cap on the corpus side is
-    excluded from candidate generation (same policy as the batch path)."""
-    text = ("every page has this exact same footer text repeated verbatim "
-            "across the entire site forever and ever and ever again")
-    corpus = spark.createDataFrame(
-        [(i, text) for i in range(300, 303)], "doc_id bigint, text string"
-    )
-    shard = spark.createDataFrame([(9, text)], "doc_id bigint, text string")
-    sigs = dedup.minhash_signatures(corpus)
-    capped = dedup.minhash_dedup_incremental(shard, sigs, threshold=0.5,
-                                             bucket_cap=2)
-    assert capped.count() == 0
-    uncapped = dedup.minhash_dedup_incremental(shard, sigs, threshold=0.5)
-    assert uncapped.count() == 1  # default cap (50) admits the bucket
-
-
-def test_contamination_stats_matches_duckdb(spark):
-    from tests.oracle_harness import compare, duck_connection
-
-    con = duck_connection(SF_DIR)
-    out = dedup.contamination_stats(spark, SF_DIR)
-    assert compare(out, con.sql(dedup.CONTAMINATION_STATS_SQL).df()) == []
-    # the graded report is consistent with the binary gate: exactly the
-    # docs with n_eval_hits > 0 are the ones decontaminate flags
-    flagged = {
-        r["doc_id"]
-        for r in dedup.decontaminate_against_eval(spark, SF_DIR).collect()
-    }
-    stats = {r["doc_id"]: r for r in out.collect()}
-    assert {i for i, r in stats.items() if r["n_eval_hits"] > 0} == flagged
-    for r in stats.values():  # fraction is bounded and consistent
-        assert 0.0 <= r["frac_contaminated"] <= 1.0
-        assert r["n_eval_hits"] <= r["n_windows"]

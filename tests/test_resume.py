@@ -160,14 +160,16 @@ def test_seen_compaction_long_run(spark, tmp_path_factory):
     pages.unpersist()
 
 
-def test_adaptive_fetch_join_shuffle_path_equivalent(spark, tiny, tmp_path_factory):
-    """Forcing the non-broadcast fetch join (fetch_broadcast_max_rows=0)
+def test_adaptive_fetch_join_shuffle_path_equivalent(spark, tiny, tmp_path_factory,
+                                                     monkeypatch):
+    """Forcing the non-broadcast fetch join (FETCH_BROADCAST_MAX_ROWS=0)
     must leave every committed output byte-identical — it is a physical
     strategy, not a semantics change."""
     run_b, _ = _run(spark, tiny, tmp_path_factory.mktemp("bcast"), 3)
     p, pages, seeds = tiny
+    monkeypatch.setattr(crawl_mod, "FETCH_BROADCAST_MAX_ROWS", 0)
     cfg = CrawlConfig(state_dir=str(tmp_path_factory.mktemp("shuf")), rounds=3,
-                      round_budget_s=BUDGET, fetch_broadcast_max_rows=0)
+                      round_budget_s=BUDGET)
     run_s = run_crawl(spark, pages, seeds, cfg)
     assert (_final_state(spark, run_s.io, run_s.rounds_run)
             == _final_state(spark, run_b.io, run_b.rounds_run))
@@ -284,7 +286,8 @@ def test_failed_write_in_round_batch_leaves_round_uncommitted(spark, tiny,
     """A round's writes run as one concurrent batch.  When one of them
     raises, run_crawl re-raises only after every submitted write has
     finished, the round gets no manifest, no batch thread outlives the call,
-    and a resume ends in the same state as an uninterrupted run."""
+    no cache of the call outlives it, and a resume ends in the same state
+    as an uninterrupted run."""
     import threading
     import time
 
@@ -317,6 +320,8 @@ def test_failed_write_in_round_batch_leaves_round_uncommitted(spark, tiny,
     p, pages, seeds = tiny
     state_dir = str(tmp_path_factory.mktemp("batch_fail"))
     io = FailingBloomIO(state_dir)
+    pages.count()  # fill the fixture's own cache before counting caches
+    persisted = spark.sparkContext._jsc.getPersistentRDDs().size()
     with pytest.raises(RuntimeError, match="injected bloom write failure"):
         run_crawl(spark, pages, seeds,
                   CrawlConfig(state_dir=state_dir, rounds=ROUNDS,
@@ -334,6 +339,8 @@ def test_failed_write_in_round_batch_leaves_round_uncommitted(spark, tiny,
     # the batch pool was shut down with the call
     assert not [t for t in threading.enumerate()
                 if t.name.startswith("crawl-batch")]
+    # every cache of the call was released with the error
+    assert spark.sparkContext._jsc.getPersistentRDDs().size() <= persisted
 
     run_full, _ = _run(spark, tiny, tmp_path_factory.mktemp("batch_full"), ROUNDS)
     run_res, _ = _run(spark, tiny, None, ROUNDS, resume=True, state_dir=state_dir)
