@@ -5,8 +5,9 @@ The actual codec work (JPEG decode, audio resample, video frame-sample) is
 STUBBED — the sandbox has no image/audio libraries — but everything Spark
 cares about is real and tested: explicit schemas, binary Arrow transfer,
 batch-shaped UDF signatures, and deterministic fake feature extraction so
-the pipeline is end-to-end runnable.  Swap `_decode_image` for a PIL/ffmpeg
-call on a real cluster and nothing else changes.
+the pipeline is end-to-end runnable.  Swap `_fake_features` for a
+PIL/ffmpeg decode plus a real extractor on a real cluster and nothing else
+changes.
 """
 
 from __future__ import annotations
@@ -29,17 +30,6 @@ FEATURES_SCHEMA = T.StructType([
     T.StructField("byte_len", T.LongType()),
     T.StructField("features", T.ArrayType(T.DoubleType())),
 ])
-
-
-def _decode_image(data: bytes) -> "np.ndarray":
-    """REAL-CLUSTER HOOK: decode an image payload to HxWxC uint8.
-
-    No codec libraries exist in this sandbox, so decoding is explicitly not
-    implemented; the deterministic fake featurizer below exercises the same
-    Spark plumbing (binary Arrow batches in, fixed-size vectors out)."""
-    raise NotImplementedError(
-        "image decoding requires PIL/opencv — not available in this environment"
-    )
 
 
 def _fake_features(data: bytes) -> list[float]:

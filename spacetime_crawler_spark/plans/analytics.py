@@ -50,16 +50,6 @@ def a1_unique_pages(spark: SparkSession, sf_dir: str) -> DataFrame:
 A1_SQL = "SELECT COUNT(DISTINCT source) AS unique_pages FROM documents"
 
 
-def a1_approx_unique_pages(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """HLL++ variant for the 10^10 tier (SURVEY §2 A1). approx sketches are
-    engine-specific → rows-only driver check; the pytest asserts <5% error
-    vs the exact count."""
-    docs = load_table(spark, sf_dir, "documents")
-    return docs.agg(
-        F.approx_count_distinct("source", 0.02).alias("approx_unique_pages")
-    )
-
-
 # A2 — subdomain histogram ----------------------------------------------------
 
 def a2_subdomain_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:

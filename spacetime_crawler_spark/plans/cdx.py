@@ -29,17 +29,16 @@ bodies touched); write_cdx_index adds exactly one range exchange keyed by
 (surt, ts) plus a partition-local sort, producing globally-ordered parquet
 shards whose per-file/row-group min-max stats ARE the secondary index —
 the same two-level layout as Common Crawl's ZipNum cluster.idx, with
-parquet stats standing in for the idx lines.  cdx_lookup compiles every
-match type to a StringStartsWith/EqualTo predicate that reaches the scan
-(PushedFilters, plan-asserted), so a domain query over a 100 TB crawl
-reads only the shards whose surt range intersects the prefix.
+parquet stats standing in for the idx lines: a SURT-prefix filter over the
+index (host and domain lookups alike) needs only the shards whose surt
+range intersects the prefix.
 """
 
 from __future__ import annotations
 
 from datetime import datetime, timezone
 
-from pyspark.sql import Column, DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 CDX_EPOCH_S = int(datetime(2024, 1, 1, tzinfo=timezone.utc).timestamp())
@@ -103,9 +102,9 @@ def capture_records(pages: DataFrame) -> DataFrame:
     """The captures frame for a raw multi-snapshot pages archive (the
     BASELINE.json input shape: url, warc_ts, html, text, lang) — each
     (url, warc_ts) row is one capture.  Same schema cdx_records emits from
-    a fetch_log, so revisit_flags / revisit_stats / recrawl_schedule run
-    unchanged over either source.  Map-only; the digest is the engine's
-    text sha256 (the byte-identity invariant column), html is never read."""
+    a fetch_log, so revisit_stats / recrawl_schedule run unchanged over
+    either source.  Map-only; the digest is the engine's text sha256 (the
+    byte-identity invariant column), html is never read."""
     return pages.select(
         surt_expr("url").alias("surt"),
         F.date_format("warc_ts", "yyyyMMddHHmmss").alias("ts"),
@@ -113,29 +112,6 @@ def capture_records(pages: DataFrame) -> DataFrame:
         F.lit(200).alias("status"),
         F.sha2(F.col("text"), 256).alias("digest"),
         F.length("text").cast("long").alias("length"),
-    )
-
-
-def revisit_flags(records: DataFrame) -> DataFrame:
-    """Per-capture revisit marking — the Internet-Archive dedup rule that
-    turns repeated captures of unchanged content into cheap `revisit`
-    records instead of stored payloads.
-
-    Pinned spec: a capture is a revisit iff an EARLIER capture of the same
-    surt carries the same digest (per-URL digest dedup — the conservative
-    IA default, not URL-agnostic dedup).  "Earlier" is the total order
-    (ts, url_norm): the virtual clock breaks most ties and url_norm settles
-    the rest (http/https variants of one URL share a surt), so the flagged
-    set is deterministic on any cluster size.
-
-    Scale shape: one window over (surt, digest) — a single hash exchange on
-    a narrow key followed by a bounded per-group sort (groups are captures
-    of ONE url with IDENTICAL content; even a hot URL recrawled daily for a
-    decade is ~4k rows).  No page bodies move: callers pass cdx_records
-    output, which already dropped html/text."""
-    w = Window.partitionBy("surt", "digest").orderBy("ts", "url_norm")
-    return records.withColumn(
-        "is_revisit", F.row_number().over(w) > F.lit(1)
     )
 
 
@@ -241,39 +217,3 @@ def recrawl_schedule(
             "next_due"
         ),
     )
-
-
-def cdx_lookup(
-    spark: SparkSession, path: str, url: str, match_type: str = "exact"
-) -> DataFrame:
-    """Captures for a URL at CDX-server match semantics:
-      exact  — this URL only
-      prefix — this URL and everything under its path prefix
-      host   — every path on exactly this host
-      domain — this registrable host and all its subdomains (the SURT
-               payoff: one startswith over the sorted key)
-    The probe's own SURT is computed on a literal through the SAME
-    surt_expr — lookup can never drift from indexing."""
-    probe = (
-        spark.range(1)
-        .select(surt_expr(F.lit(url)).alias("s"))
-        .head()[0]
-    )
-    cdx = spark.read.parquet(path)
-    if match_type == "exact":
-        cond = F.col("surt") == probe
-    elif match_type == "prefix":
-        cond = F.col("surt").startswith(probe)
-    elif match_type == "host":
-        host_key = probe.split(")", 1)[0]
-        cond = F.col("surt").startswith(host_key + ")")
-    elif match_type == "domain":
-        host_key = probe.split(")", 1)[0]
-        # 'com,example' must match itself and 'com,example,www' but NOT
-        # 'com,examples' — the separator disambiguates
-        cond = F.col("surt").startswith(host_key + ")") | F.col(
-            "surt"
-        ).startswith(host_key + ",")
-    else:
-        raise ValueError(f"unknown match_type {match_type!r}")
-    return cdx.filter(cond).orderBy("surt", "ts")

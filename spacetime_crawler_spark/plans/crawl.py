@@ -14,10 +14,11 @@ Scale levers baked in (SURVEY §4): F1 stays native (pushable); the fetch
 join is keyed on xxhash64(url_norm) (narrow shuffle key, AQE skew-join
 handles hot hosts); robots/bloom sidecars are broadcasts; the per-host
 scheduler is two-phase-ranked then applyInPandas on quota-bounded groups;
-`seen` and candidates are both repartitioned by pmod(url_hash, P) so the
-anti-join co-partitions; on the Iceberg backend the seen/frontier tables are
-CREATED with bucket(P, url_hash) DDL (sources/io_tables.py::iceberg_layout),
-so under storage-partitioned joins that exchange disappears entirely.
+the exact anti-join hash-repartitions both `seen` and the candidates by
+url_hash into P partitions as it reads them.  Seen is written as it comes,
+with no shuffle of its own: a parquet file records no partitioning, so a
+write-side repartition would only be shuffled again on read, and Spark's
+hash partitioning is not Iceberg's bucket(P, url_hash) transform either.
 Lineage never spans rounds — every round re-reads committed state, the
 Spark analogue of the reference's save-file sync.
 
@@ -409,10 +410,9 @@ def run_crawl(
     sources/io_tables.py).  io.write may be called from several threads at
     once, always for different tables."""
     io = io if io is not None else ParquetManifestIO(cfg.state_dir)
-    # bucketed-store wiring check: a store whose bucket(P, url_hash) DDL
-    # modulus differs from cfg.n_parts would silently create a layout the
-    # engine's pmod(url_hash, P) repartitioning can never storage-co-join
-    # with — fail loudly instead of quietly reintroducing the exchange.
+    # bucketed-store wiring check: the store's bucket(P, url_hash) DDL
+    # modulus must equal cfg.n_parts, the P the engine partitions seen by —
+    # fail loudly instead of writing a layout that disagrees with it.
     store_buckets = getattr(getattr(io, "store", None), "n_buckets", None)
     if store_buckets is not None and store_buckets != cfg.n_parts:
         raise ValueError(
@@ -470,8 +470,7 @@ def run_crawl(
                 # the URLs first seen in round N): writes are O(new), never
                 # O(total).  Readers union the latest compacted snapshot
                 # plus the ≤K tail deltas (see read_seen_up_to)
-                tables["seen"] = _observed_write(
-                    io, "seen", 0, seen.repartition(cfg.n_parts, "url_hash"))["n"]
+                tables["seen"] = _observed_write(io, "seen", 0, seen)["n"]
 
             def write_bloom0():
                 # the bloom sidecar is itself a committed state table:
@@ -619,9 +618,7 @@ def run_crawl(
 
                 def write_seen():
                     tables["seen"] = _observed_write(  # delta count
-                        io, "seen", rnd,
-                        seen_delta.repartition(cfg.n_parts, "url_hash"),
-                    )["n"]
+                        io, "seen", rnd, seen_delta)["n"]
 
                 def write_bloom():
                     # distributed sidecar maintenance: previous rows cogrouped
@@ -633,11 +630,9 @@ def run_crawl(
 
                 def write_snapshot():
                     # compaction: one full snapshot so seen readers union ≤K+1
-                    # files instead of O(rounds); committed with the round
+                    # reads instead of O(rounds); committed with the round
                     tables["seen_snapshot"] = _observed_write(
-                        io, "seen_snapshot", rnd,
-                        seen.unionByName(seen_delta)
-                        .repartition(cfg.n_parts, "url_hash"),
+                        io, "seen_snapshot", rnd, seen.unionByName(seen_delta)
                     )["n"]
 
                 later = [_timed(m.phase_s, "seen_write", write_seen)]
@@ -711,7 +706,7 @@ def read_seen_up_to(spark: SparkSession, io: ParquetManifestIO,
                     rnd_inclusive: int) -> DataFrame:
     """The full seen set as of a round: the latest committed compacted
     snapshot ≤ rnd plus the tail deltas after it — bounded read fan-in
-    (≤ seen_compact_every + 1 files) regardless of how many rounds the
+    (≤ seen_compact_every + 1 reads) regardless of how many rounds the
     crawl has run."""
     snaps = [s for s in io.committed_rounds("seen_snapshot") if s <= rnd_inclusive]
     if snaps:

@@ -28,10 +28,9 @@ QueryFn = Callable[[SparkSession, str], DataFrame]
 # dropping the 51st).  The registry is therefore capped at 50 entries —
 # pinned in tests/test_driver_contract.py — with redundant demo entries
 # consolidated away rather than letting a component's driver-visible row
-# vanish: a1_approx_unique_pages (HLL bound pinned in
-# test_approx_count_distinct_error_bound) and dedup_exact_stats (oracle
-# compare pinned in test_dedup_exact_stats_oracle) live on as pytest-only
-# coverage; dedup_exact_stats also runs in bench.py's HEADLINE suite.
+# vanish: dedup_exact_stats (oracle compare pinned in
+# test_dedup_exact_stats_oracle) lives on as pytest-only coverage and runs
+# in bench.py's HEADLINE suite.
 DRIVER_QUERY_CAP = 50
 
 SPARK_QUERIES: dict[str, QueryFn] = {

@@ -21,8 +21,10 @@ Two backends behind one interface:
   --conf spark.sql.catalog.cr=org.apache.iceberg.spark.SparkCatalog ...``;
   untestable offline, kept thin and documented.
 
-All tables are written partitioned/bucketable by their join key so the next
-round's anti-join reads co-partitioned data.
+The parquet backend writes each slice as it comes; the crawl's anti-join
+repartitions seen by url_hash when it reads it.  The Iceberg backend
+partitions the url_hash-keyed tables with bucket(P, url_hash) DDL
+(iceberg_layout).
 """
 
 from __future__ import annotations
@@ -146,9 +148,10 @@ STATE_ROUND_COL = "_state_round"
 # default bucket modulus for url_hash-keyed state tables — matches
 # CrawlConfig.n_parts's default.  The CALLER must keep these in sync: a run
 # with a non-default n_parts must construct its store with the same P
-# (SparkIcebergStore(..., n_buckets=cfg.n_parts)), otherwise the bucketed
-# table layout and the engine's pmod(url_hash, P) repartitioning disagree
-# and the storage-partitioned join the layout exists for never engages.
+# (SparkIcebergStore(..., n_buckets=cfg.n_parts)); run_crawl refuses a
+# store that disagrees.  The engine still repartitions seen with Spark's
+# own hash (not Iceberg's bucket transform) when the anti-join reads it,
+# so the layout saves no exchange until seen is read in place.
 ICEBERG_BUCKETS = 32
 
 
@@ -160,11 +163,10 @@ def iceberg_layout(
 
     - every table partitions by identity(_state_round) — round pruning;
     - the url_hash-keyed tables (frontier / seen / seen_snapshot)
-      additionally use bucket(P, url_hash), so the F3 anti-join and the
-      seen-side of resume reads are storage-co-partitioned: with
-      spark.sql.sources.v2.bucketing.enabled the per-round
-      repartition(P, url_hash) exchange disappears entirely (SURVEY §1.2's
-      `bucket(P, url_hash)` promise, now actual DDL)."""
+      additionally use bucket(P, url_hash) (SURVEY §1.2's
+      `bucket(P, url_hash)` layout, as DDL).  The F3 anti-join does not
+      use it yet: it repartitions seen with Spark's hash as it reads it
+      (see ICEBERG_BUCKETS)."""
     spec: list[tuple] = []
     if STATE_ROUND_COL in columns:
         spec.append(("identity", STATE_ROUND_COL))
@@ -303,7 +305,7 @@ class SparkIcebergStore:
     ):
         # n_buckets MUST equal the run's CrawlConfig.n_parts (see the
         # ICEBERG_BUCKETS note) — it parameterizes the bucket(P, url_hash)
-        # DDL the engine's repartitioning relies on.
+        # DDL of the url_hash-keyed tables.
         self.spark = spark
         self.prefix = f"{catalog}.{namespace}"
         self.n_buckets = n_buckets

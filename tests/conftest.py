@@ -27,9 +27,11 @@ def pytest_collection_modifyitems(config, items):
 
 @pytest.fixture(scope="session")
 def spark():
-    from spacetime_crawler_spark.session import get_spark
+    from spacetime_crawler_spark.session import get_spark, host_cpus
 
-    cpus = os.environ.get("SPARK_GRAFT_TEST_CPUS", "8")
+    # one task slot per core this process may run on (get_spark then sets
+    # max(8, cpus) shuffle partitions); SPARK_GRAFT_TEST_CPUS overrides
+    cpus = os.environ.get("SPARK_GRAFT_TEST_CPUS") or host_cpus()
     s = get_spark(master=f"local[{cpus}]", app_name="scs-tests")
     yield s
     s.stop()

@@ -105,37 +105,6 @@ def test_cdx_shards_are_globally_ordered(spark, crawl_cdx):
         assert hi <= lo
 
 
-def test_cdx_lookup_semantics_and_pushdown(spark, crawl_cdx):
-    _fetch_log, path, rows = crawl_cdx
-    all_surts = [r.surt for r in rows]
-    target = rows[len(rows) // 2]
-    host = target.url_norm.split("/")[2]
-
-    exact = cdx.cdx_lookup(spark, path, target.url_norm, "exact").collect()
-    assert [r.surt for r in exact] == [s for s in sorted(all_surts) if s == target.surt]
-
-    got_host = cdx.cdx_lookup(spark, path, f"http://{host}/", "host").collect()
-    want_host = sorted(s for s in all_surts if s.split(")", 1)[0] == py_surt(f"http://{host}/").split(")", 1)[0])
-    assert sorted(r.surt for r in got_host) == want_host
-    assert len(got_host) > 0
-
-    # domain match over the registrable domain catches every subdomain…
-    got_dom = cdx.cdx_lookup(spark, path, "http://example.com/", "domain")
-    assert got_dom.count() == len(all_surts)
-    # …while a lexically-adjacent host is NOT swallowed (separator guard)
-    assert cdx.cdx_lookup(spark, path, "http://example.co/", "domain").count() == 0
-
-    # the prefix predicate reaches the parquet scan
-    plan = got_dom._jdf.queryExecution().executedPlan().toString()
-    assert "PushedFilters" in plan and "StartsWith" in plan, plan
-
-
-def test_cdx_lookup_rejects_unknown_match_type(spark, crawl_cdx):
-    _fetch_log, path, _rows = crawl_cdx
-    with pytest.raises(ValueError):
-        cdx.cdx_lookup(spark, path, "http://example.com/", "regex")
-
-
 # --- revisit detection --------------------------------------------------------
 
 
@@ -193,34 +162,6 @@ def test_revisit_stats_matches_duckdb(spark, captures):
     oracle = con.sql(cdx.REVISIT_STATS_SQL).df()
     assert compare(cdx.revisit_stats(df), oracle) == []
     con.close()
-
-
-def test_revisit_flags_match_pure_python(spark, captures):
-    df, _path = captures
-    rows = df.collect()
-    assert len(rows) > len({r.surt for r in rows})  # snapshots actually exist
-    # pure-python spec: revisit iff an earlier (ts, url_norm) capture of the
-    # same surt has the same digest
-    order = sorted(rows, key=lambda r: (r.surt, r.digest, r.ts, r.url_norm))
-    want: dict[tuple, bool] = {}
-    prev_key = None
-    for r in order:
-        k = (r.surt, r.digest)
-        want[(r.surt, r.digest, r.ts, r.url_norm)] = k == prev_key
-        prev_key = k
-    got = cdx.revisit_flags(df).collect()
-    assert len(got) == len(rows)
-    n_revisits = 0
-    for r in got:
-        assert r.is_revisit == want[(r.surt, r.digest, r.ts, r.url_norm)], r
-        n_revisits += int(r.is_revisit)
-    assert n_revisits > 0  # the unchanged-content snapshots were planted
-    # cross-check the agg: revisits = captures − versions, surt by surt
-    stats = cdx.revisit_stats(df).collect()
-    assert sum(s.n_revisits for s in stats) == n_revisits
-    for s in stats:
-        assert s.n_revisits == s.n_captures - s.n_versions
-        assert s.first_ts <= s.last_ts
 
 
 def test_recrawl_schedule_matches_pure_python(spark, captures):

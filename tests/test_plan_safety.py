@@ -19,6 +19,7 @@ except ImportError:  # pragma: no cover - PySpark 3.x
 
 from spacetime_crawler_spark.plans.crawl import CrawlConfig, run_crawl
 from spacetime_crawler_spark.sources import synth
+from spacetime_crawler_spark.sources.io_tables import ParquetManifestIO
 
 N_PARTS = 8
 
@@ -104,7 +105,20 @@ _PYTHON_NODE = ("Python", "Pandas", "InArrow")
 def _plan_nodes(df) -> list[str]:
     """Node names of df's optimized logical plan.  A cached relation is a
     leaf here, so the plan that filled a cache is not counted again."""
-    names, todo = [], [df._jdf.queryExecution().optimizedPlan()]
+    return _tree_nodes(df._jdf.queryExecution().optimizedPlan())
+
+
+def _physical_nodes(df) -> list[str]:
+    """Node names of df's physical plan as adaptive execution first plans
+    it, exchanges included.  An in-memory scan is a leaf here too."""
+    plan = df._jdf.queryExecution().executedPlan()
+    if plan.nodeName() == "AdaptiveSparkPlan":
+        plan = plan.initialPlan()
+    return _tree_nodes(plan)
+
+
+def _tree_nodes(root) -> list[str]:
+    names, todo = [], [root]
     while todo:
         node = todo.pop()
         names.append(node.nodeName())
@@ -120,6 +134,20 @@ def _assert_no_python(names: list[str]) -> None:
     assert "LogicalRDD" not in names, names
 
 
+class CapturingIO(ParquetManifestIO):
+    """Records plan_of(df) for every write, planned while the round's
+    caches are still registered."""
+
+    def __init__(self, root, plan_of):
+        super().__init__(root)
+        self.plan_of = plan_of
+        self.plans = {}
+
+    def write(self, table, rnd, df):
+        self.plans[(table, rnd)] = self.plan_of(df)
+        return super().write(table, rnd, df)
+
+
 def test_seed_frontier_and_metrics_plans_cross_no_python(spark, tmp_path):
     """Seeds are canonicalized on the driver and the metrics table is built
     on the driver: both reach Spark as Arrow-built local relations, so
@@ -127,7 +155,6 @@ def test_seed_frontier_and_metrics_plans_cross_no_python(spark, tmp_path):
     maintenance is a single cogrouped pass over the previous sidecar and the
     round's new keys."""
     from spacetime_crawler_spark.plans import crawl as crawl_mod
-    from spacetime_crawler_spark.sources.io_tables import ParquetManifestIO
 
     p = synth.world("tiny", n_pages=400)
     pages = synth.generate_pages_df(spark, p).persist()
@@ -140,17 +167,7 @@ def test_seed_frontier_and_metrics_plans_cross_no_python(spark, tmp_path):
     _assert_no_python(_plan_nodes(seen))
     assert frontier.count() > 0
 
-    class CapturingIO(ParquetManifestIO):
-        def __init__(self, root):
-            super().__init__(root)
-            self.plans = {}
-
-        def write(self, table, rnd, df):
-            # the plan while the round's caches are still registered
-            self.plans[(table, rnd)] = _plan_nodes(df)
-            return super().write(table, rnd, df)
-
-    io = CapturingIO(cfg.state_dir)
+    io = CapturingIO(cfg.state_dir, _plan_nodes)
     run = run_crawl(spark, pages, seeds, cfg, io=io)
     pages.unpersist()
     assert run.rounds_run == 1
@@ -161,3 +178,34 @@ def test_seed_frontier_and_metrics_plans_cross_no_python(spark, tmp_path):
         assert bloom_plan.count("FlatMapCoGroupsInPandas") == 1, bloom_plan
         assert "FlatMapGroupsInPandas" not in bloom_plan, bloom_plan
         assert "LogicalRDD" not in bloom_plan, bloom_plan
+
+
+def test_seen_writes_shuffle_nothing(spark, tmp_path):
+    """Seen deltas and snapshots are written as they come: a parquet file
+    records no partitioning and the anti-join repartitions seen when it
+    reads it, so no Exchange sits above the cached new rows or the seen
+    scan in what run_crawl hands to io.write."""
+    p = synth.world("tiny", n_pages=400)
+    pages = synth.generate_pages_df(spark, p).persist()
+    seeds = synth.seed_urls(p)
+    cfg = CrawlConfig(state_dir=str(tmp_path / "st"), rounds=2,
+                      round_budget_s=8.0, n_parts=N_PARTS,
+                      seen_compact_every=1)
+
+    io = CapturingIO(cfg.state_dir, _physical_nodes)
+    run = run_crawl(spark, pages, seeds, cfg, io=io)
+    pages.unpersist()
+    assert run.rounds_run == 2
+    seen_writes = {k: v for k, v in io.plans.items()
+                   if k[0] in ("seen", "seen_snapshot")}
+    assert set(seen_writes) == {
+        ("seen", 0), ("seen", 1), ("seen", 2),
+        ("seen_snapshot", 1), ("seen_snapshot", 2),
+    }
+    for key, nodes in seen_writes.items():
+        assert not [n for n in nodes if "Exchange" in n], (key, nodes)
+    for rnd in (1, 2):
+        assert "InMemoryTableScan" in io.plans[("seen", rnd)]
+        snapshot = io.plans[("seen_snapshot", rnd)]
+        assert "InMemoryTableScan" in snapshot, snapshot
+        assert any(n.startswith("Scan parquet") for n in snapshot), snapshot

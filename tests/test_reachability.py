@@ -14,7 +14,6 @@ ROOT = Path(__file__).resolve().parents[1]
 PKG = "spacetime_crawler_spark"
 ENTRY_POINTS = ("__spark_entry__.py", "run.py", "bench.py")
 
-_NEXT_DELETION = "ROADMAP item 2: deleted with its tests in the next change"
 _WIRE_IN = "ROADMAP item 2: a crawl report, to be wired into run.py --reports"
 _REFERENCE = "pure-Python reference the tests compare the engine against"
 
@@ -22,10 +21,6 @@ _REFERENCE = "pure-Python reference the tests compare the engine against"
 # it is kept.  The guard compares for equality: an entry that becomes
 # reachable or is deleted must leave this dict too.
 TEST_ONLY = {
-    "plans.cdx.revisit_flags": _NEXT_DELETION,
-    "plans.cdx.cdx_lookup": _NEXT_DELETION,
-    "plans.analytics.a1_approx_unique_pages": _NEXT_DELETION,
-    "operators.multimodal._decode_image": _NEXT_DELETION,
     "plans.crawl_reports.unique_pages": _WIRE_IN,
     "plans.crawl_reports.subdomain_histogram": _WIRE_IN,
     "plans.crawl_reports.longest_page": _WIRE_IN,
