@@ -15,20 +15,22 @@ join is keyed on xxhash64(url_norm) (narrow shuffle key, AQE skew-join
 handles hot hosts); robots/bloom sidecars are broadcasts; the per-host
 scheduler is two-phase-ranked then applyInPandas on quota-bounded groups;
 the exact anti-join hash-repartitions both `seen` and the candidates by
-url_hash into P partitions as it reads them.  Seen is written as it comes,
-with no shuffle of its own: a parquet file records no partitioning, so a
-write-side repartition would only be shuffled again on read, and Spark's
-hash partitioning is not Iceberg's bucket(P, url_hash) transform either.
+url_hash into P partitions as it reads them.  Seen is stored as per-round
+deltas and read as one scan of every committed delta (io.read over a range
+of rounds).  Each delta is written as it comes, with no shuffle of its own:
+a parquet file records no partitioning, so a write-side repartition would
+only be shuffled again on read, and Spark's hash partitioning is not
+Iceberg's bucket(P, url_hash) transform either.
 Lineage never spans rounds — every round re-reads committed state, the
 Spark analogue of the reference's save-file sync.
 
 A round is one concurrent batch of writes plus one commit.  The writes run
 on a small thread pool: the fetch_log sink next to the candidate →
-frontier chain; the seen, bloom and (every K rounds) seen_snapshot writes
-join the batch as soon as the frontier write has cached the round's new
-rows, which is all they read.  Every write is joined before the round's
-single io.commit, so the commit protocol is unchanged: a failed write
-leaves the round uncommitted, and resume re-runs it.  Prep (robots rules,
+frontier chain; the seen and bloom writes join the batch as soon as the
+frontier write has cached the round's new rows, which is all they read.
+Every write is joined before the round's single io.commit, so the commit
+protocol is unchanged: a failed write leaves the round uncommitted, and
+resume re-runs it.  Prep (robots rules,
 the page-key index and round 0's writes) is one batch the same way.
 """
 
@@ -79,8 +81,8 @@ class CrawlConfig:
     round_budget_s: float = 30.0
     n_parts: int = 32
     use_bloom: bool = True
-    # rewrite `seen` as one compacted snapshot every K rounds so readers
-    # union ≤K+1 files instead of O(rounds); 0 disables compaction
+    # nothing reads this field; it stays only because perfbench/worker.py
+    # passes it, until the benchmark change of ROADMAP item 7 removes it
     seen_compact_every: int = 8
 
 
@@ -301,9 +303,8 @@ def _bloom_state_matches(spark, io, rnd: int, cfg: CrawlConfig) -> bool:
 
 # --- one round's batch of concurrent writes -----------------------------------
 
-# the largest batches: prep (robots rules, the page-key index and round 0's
-# frontier, seen and bloom writes) and a compacting round (fetch_log,
-# frontier, seen, bloom and seen_snapshot)
+# the largest batch: prep (robots rules, the page-key index and round 0's
+# frontier, seen and bloom writes)
 _BATCH_THREADS = 5
 
 
@@ -407,8 +408,9 @@ def run_crawl(
     """io: any object honoring the state-IO contract (write/commit/read/
     manifest/committed_rounds/last_committed_round/reset) —
     ParquetManifestIO by default, IcebergIO on a real cluster (both in
-    sources/io_tables.py).  io.write may be called from several threads at
-    once, always for different tables."""
+    sources/io_tables.py).  io.read takes one round or a range of rounds,
+    read as one scan of those committed slices.  io.write may be called
+    from several threads at once, always for different tables."""
     io = io if io is not None else ParquetManifestIO(cfg.state_dir)
     # bucketed-store wiring check: the store's bucket(P, url_hash) DDL
     # modulus must equal cfg.n_parts, the P the engine partitions seen by —
@@ -442,7 +444,7 @@ def run_crawl(
             run.rounds_run = start_round
         else:
             # fence against stale committed rounds from an earlier run reusing
-            # this state_dir (they would otherwise union into read_seen/
+            # this state_dir (they would otherwise leak into read_seen/
             # read_fetch_log silently)
             io.reset()
 
@@ -468,8 +470,7 @@ def run_crawl(
             def write_seen0():
                 # `seen` is stored as per-round DELTAS (round=N holds only
                 # the URLs first seen in round N): writes are O(new), never
-                # O(total).  Readers union the latest compacted snapshot
-                # plus the ≤K tail deltas (see read_seen_up_to)
+                # O(total).  Readers scan every committed delta at once
                 tables["seen"] = _observed_write(io, "seen", 0, seen)["n"]
 
             def write_bloom0():
@@ -498,7 +499,7 @@ def run_crawl(
             # or by `held` if anything in the round raises
             round_held = held.enter_context(ExitStack())
             frontier = io.read(spark, "frontier", rnd - 1)
-            seen = read_seen_up_to(spark, io, rnd - 1)
+            seen = io.read(spark, "seen", range(rnd))
             bloom_prev = None
             if cfg.use_bloom:
                 if (
@@ -601,9 +602,9 @@ def run_crawl(
                 return n, new_rows, flagged
 
             # the round's one batch: the fetch_log sink next to the candidate →
-            # frontier chain; seen, bloom and compaction need only the rows the
-            # frontier write cached, so they join the batch as soon as it
-            # returns — never a read-back of the uncommitted seen delta
+            # frontier chain; seen and bloom need only the rows the frontier
+            # write cached, so they join the batch as soon as it returns —
+            # never a read-back of the uncommitted seen delta
             futures = _submit(
                 spark, pool,
                 _timed(m.phase_s, "fetch_extract_write", write_fetch_log),
@@ -628,18 +629,9 @@ def run_crawl(
                     ))
                     tables["bloom"] = cfg.n_parts
 
-                def write_snapshot():
-                    # compaction: one full snapshot so seen readers union ≤K+1
-                    # reads instead of O(rounds); committed with the round
-                    tables["seen_snapshot"] = _observed_write(
-                        io, "seen_snapshot", rnd, seen.unionByName(seen_delta)
-                    )["n"]
-
                 later = [_timed(m.phase_s, "seen_write", write_seen)]
                 if cfg.use_bloom:
                     later.append(_timed(m.phase_s, "bloom_write", write_bloom))
-                if cfg.seen_compact_every and rnd % cfg.seen_compact_every == 0:
-                    later.append(_timed(m.phase_s, "compact_write", write_snapshot))
                 futures += _submit(spark, pool, *later)
                 if flagged is not None:
                     # the frontier write filled the flagged cache, so this
@@ -690,39 +682,17 @@ def run_crawl(
 
 def read_fetch_log(spark: SparkSession, io: ParquetManifestIO,
                    up_to_round: int) -> DataFrame:
-    """Union of fetch_log rounds 1..up_to_round.  A gap (a round in range
+    """fetch_log rounds 1..up_to_round in one scan.  A gap (a round in range
     that was never committed) raises instead of silently truncating — the
     commit protocol guarantees contiguity, so a hole means corruption."""
-    dfs = [io.read(spark, "fetch_log", rnd) for rnd in range(1, up_to_round + 1)]
-    if not dfs:
+    if up_to_round < 1:
         raise FileNotFoundError("no committed fetch_log rounds")
-    out = dfs[0]
-    for df in dfs[1:]:
-        out = out.unionByName(df)
-    return out
-
-
-def read_seen_up_to(spark: SparkSession, io: ParquetManifestIO,
-                    rnd_inclusive: int) -> DataFrame:
-    """The full seen set as of a round: the latest committed compacted
-    snapshot ≤ rnd plus the tail deltas after it — bounded read fan-in
-    (≤ seen_compact_every + 1 reads) regardless of how many rounds the
-    crawl has run."""
-    snaps = [s for s in io.committed_rounds("seen_snapshot") if s <= rnd_inclusive]
-    if snaps:
-        out = io.read(spark, "seen_snapshot", snaps[-1])
-        start = snaps[-1] + 1
-    else:
-        out = io.read(spark, "seen", 0)
-        start = 1
-    for r in range(start, rnd_inclusive + 1):
-        out = out.unionByName(io.read(spark, "seen", r))
-    return out
+    return io.read(spark, "fetch_log", range(1, up_to_round + 1))
 
 
 def read_seen(spark: SparkSession, io: ParquetManifestIO) -> DataFrame:
-    """The full committed seen set (snapshot + tail deltas)."""
+    """The full committed seen set: every round's delta in one scan."""
     last = io.last_committed_round("seen")
     if last is None:
         raise FileNotFoundError("no committed seen rounds")
-    return read_seen_up_to(spark, io, last)
+    return io.read(spark, "seen", range(last + 1))

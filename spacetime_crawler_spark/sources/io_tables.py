@@ -21,6 +21,14 @@ Two backends behind one interface:
   --conf spark.sql.catalog.cr=org.apache.iceberg.spark.SparkCatalog ...``;
   untestable offline, kept thin and documented.
 
+``read`` takes one round, or a ``range`` of rounds read as ONE scan of
+exactly those committed slices (parquet: one multi-path read; Iceberg: one
+table read filtered on the round marker); a round in the range that was
+never committed raises FileNotFoundError.  seen (per-round deltas) and
+fetch_log are read this way, uncompacted.  A state_dir from a build that
+compacted seen still resumes exactly: compaction never deleted a delta,
+and its leftover ``seen_snapshot`` directory or table is ignored.
+
 The parquet backend writes each slice as it comes; the crawl's anti-join
 repartitions seen by url_hash when it reads it.  The Iceberg backend
 partitions the url_hash-keyed tables with bucket(P, url_hash) DDL
@@ -39,9 +47,12 @@ from pyspark.sql import DataFrame, SparkSession
 COMMITS_DIR = "_commits"
 
 # every table name the crawl engine writes — reset() fences exactly these
-STATE_TABLES = (
-    "frontier", "seen", "seen_snapshot", "fetch_log", "bloom", "metrics"
-)
+STATE_TABLES = ("frontier", "seen", "fetch_log", "bloom", "metrics")
+
+
+def _rounds(rnd: int | range) -> range:
+    """The rounds a read names: one round, or a range of them."""
+    return range(rnd, rnd + 1) if isinstance(rnd, int) else rnd
 
 
 @dataclass
@@ -121,11 +132,12 @@ class ParquetManifestIO:
         rounds = self.committed_rounds(table)
         return rounds[-1] if rounds else None
 
-    def read(self, spark: SparkSession, table: str, rnd: int) -> DataFrame:
-        m = self._round_manifest(rnd)
-        if m is None or table not in m.get("tables", {}):
-            raise FileNotFoundError(f"round {rnd} of {table} was never committed")
-        return spark.read.parquet(self._round_dir(table, rnd))
+    def read(self, spark: SparkSession, table: str, rnd: int | range) -> DataFrame:
+        """Round `rnd` of `table`, or one scan of every round in a range."""
+        rounds = _rounds(rnd)
+        for r in rounds:
+            self.manifest(table, r)  # raises if r was never committed
+        return spark.read.parquet(*(self._round_dir(table, r) for r in rounds))
 
     def manifest(self, table: str, rnd: int) -> dict:
         """Per-table manifest view (rows + commit time) from the round
@@ -149,9 +161,10 @@ STATE_ROUND_COL = "_state_round"
 # CrawlConfig.n_parts's default.  The CALLER must keep these in sync: a run
 # with a non-default n_parts must construct its store with the same P
 # (SparkIcebergStore(..., n_buckets=cfg.n_parts)); run_crawl refuses a
-# store that disagrees.  The engine still repartitions seen with Spark's
-# own hash (not Iceberg's bucket transform) when the anti-join reads it,
-# so the layout saves no exchange until seen is read in place.
+# store that disagrees.  The engine reads seen as one scan of its committed
+# round slices and repartitions it with Spark's own hash (not Iceberg's
+# bucket transform) for the anti-join, so the layout saves no exchange
+# until seen is read in place.
 ICEBERG_BUCKETS = 32
 
 
@@ -162,15 +175,15 @@ def iceberg_layout(
     SparkIcebergStore DDL and the FakeStore contract assertions:
 
     - every table partitions by identity(_state_round) — round pruning;
-    - the url_hash-keyed tables (frontier / seen / seen_snapshot)
-      additionally use bucket(P, url_hash) (SURVEY §1.2's
-      `bucket(P, url_hash)` layout, as DDL).  The F3 anti-join does not
-      use it yet: it repartitions seen with Spark's hash as it reads it
-      (see ICEBERG_BUCKETS)."""
+    - the url_hash-keyed tables (frontier / seen) additionally use
+      bucket(P, url_hash) (SURVEY §1.2's `bucket(P, url_hash)` layout, as
+      DDL).  The F3 anti-join does not use it yet: it reads seen's round
+      slices in one scan and repartitions them with Spark's hash (see
+      ICEBERG_BUCKETS)."""
     spec: list[tuple] = []
     if STATE_ROUND_COL in columns:
         spec.append(("identity", STATE_ROUND_COL))
-    if table in ("frontier", "seen", "seen_snapshot") and "url_hash" in columns:
+    if table in ("frontier", "seen") and "url_hash" in columns:
         spec.append(("bucket", n_buckets, "url_hash"))
     return tuple(spec)
 
@@ -254,18 +267,15 @@ class IcebergIO:
         )
         return rnd
 
-    def read(self, spark: SparkSession, table: str, rnd: int) -> DataFrame:
-        m = self._commit_map().get(rnd)
-        if m is None or table not in m:
-            raise FileNotFoundError(f"round {rnd} of {table} was never committed")
-        return self._round_slice(table, rnd)
-
-    def _round_slice(self, table: str, rnd: int) -> DataFrame:
-        """The `_state_round = rnd` rows of `table`, committed or not."""
+    def read(self, spark: SparkSession, table: str, rnd: int | range) -> DataFrame:
+        """Round `rnd` of `table`, or one scan of every round in a range."""
         from pyspark.sql import functions as F
 
+        rounds = _rounds(rnd)
+        for r in rounds:
+            self.manifest(table, r)  # raises if r was never committed
         df = self.store.read(table)
-        return df.filter(F.col(STATE_ROUND_COL) == rnd).drop(STATE_ROUND_COL)
+        return df.filter(F.col(STATE_ROUND_COL).isin(*rounds)).drop(STATE_ROUND_COL)
 
     # -- round resolution ------------------------------------------------------
 

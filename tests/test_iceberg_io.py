@@ -1,8 +1,9 @@
 """IcebergIO contract tests against an in-memory store: round resolution,
-cross-table commit atomicity, idempotent round rewrite, and full-engine
-parity with the parquet backend.  The Iceberg-specific calls live in
-SparkIcebergStore (jar-gated, untestable offline); everything exercised here
-is the backend-independent logic the crawl engine actually depends on."""
+cross-table commit atomicity, idempotent round rewrite, range reads (next
+to the parquet backend's), and full-engine parity with the parquet backend.
+The Iceberg-specific calls live in SparkIcebergStore (jar-gated, untestable
+offline); everything exercised here is the backend-independent logic the
+crawl engine actually depends on."""
 
 from __future__ import annotations
 
@@ -137,6 +138,50 @@ def test_payload_round_column_passes_through(spark, iio):
     row = iio.read(spark, "fetch_log", 1).collect()[0]
     assert row.round == 7 and row.host == "a"
     assert STATE_ROUND_COL not in iio.read(spark, "fetch_log", 1).columns
+
+
+@pytest.mark.parametrize("backend", ["parquet", "iceberg"])
+def test_range_read_is_one_scan_of_committed_rounds(spark, tmp_path, backend):
+    """read(table, range) returns exactly the union of the range's committed
+    slices (Iceberg: from one store read); an uncommitted round inside the
+    range raises, and a slice written past the range but never committed
+    does not appear."""
+    from spacetime_crawler_spark.sources.io_tables import ParquetManifestIO
+
+    table_reads = []
+    if backend == "parquet":
+        io = ParquetManifestIO(str(tmp_path / "st"))
+    else:
+        io = IcebergIO(FakeStore(spark))
+        store_read = io.store.read
+
+        def counting_store_read(name):
+            if name != IcebergIO.COMMITS_TABLE:
+                table_reads.append(name)
+            return store_read(name)
+
+        io.store.read = counting_store_read
+    for rnd in range(4):  # round 3 is written, never committed
+        io.write("seen", rnd, _df(spark, [10 * rnd, 10 * rnd + 1]))
+        if rnd < 3:
+            io.commit(rnd, {"seen": 2})
+
+    def xs(df):
+        return sorted(r.x for r in df.collect())
+
+    whole = io.read(spark, "seen", range(3))
+    assert table_reads == ([] if backend == "parquet" else ["seen"])
+    assert xs(whole) == [0, 1, 10, 11, 20, 21]
+    assert xs(whole) == sorted(
+        x for rnd in range(3) for x in xs(io.read(spark, "seen", rnd))
+    )
+    assert xs(io.read(spark, "seen", range(1, 3))) == [10, 11, 20, 21]
+    with pytest.raises(FileNotFoundError):
+        io.read(spark, "seen", range(4))
+    io.write("fetch_log", 2, _df(spark, [7]))
+    io.commit(2, {"fetch_log": 1})
+    with pytest.raises(FileNotFoundError):  # round 1 of fetch_log: a hole
+        io.read(spark, "fetch_log", range(1, 3))
 
 
 def test_bucketed_table_layout_requested(spark, iio):

@@ -180,32 +180,40 @@ def test_seed_frontier_and_metrics_plans_cross_no_python(spark, tmp_path):
         assert "LogicalRDD" not in bloom_plan, bloom_plan
 
 
-def test_seen_writes_shuffle_nothing(spark, tmp_path):
-    """Seen deltas and snapshots are written as they come: a parquet file
-    records no partitioning and the anti-join repartitions seen when it
-    reads it, so no Exchange sits above the cached new rows or the seen
-    scan in what run_crawl hands to io.write."""
+@pytest.fixture(scope="module")
+def crawl3(spark, tmp_path_factory):
+    """A 3-round crawl whose writes' physical plans were captured."""
     p = synth.world("tiny", n_pages=400)
     pages = synth.generate_pages_df(spark, p).persist()
-    seeds = synth.seed_urls(p)
-    cfg = CrawlConfig(state_dir=str(tmp_path / "st"), rounds=2,
-                      round_budget_s=8.0, n_parts=N_PARTS,
-                      seen_compact_every=1)
-
+    cfg = CrawlConfig(state_dir=str(tmp_path_factory.mktemp("crawl3")),
+                      rounds=3, round_budget_s=8.0, n_parts=N_PARTS)
     io = CapturingIO(cfg.state_dir, _physical_nodes)
-    run = run_crawl(spark, pages, seeds, cfg, io=io)
+    run = run_crawl(spark, pages, synth.seed_urls(p), cfg, io=io)
     pages.unpersist()
-    assert run.rounds_run == 2
-    seen_writes = {k: v for k, v in io.plans.items()
-                   if k[0] in ("seen", "seen_snapshot")}
-    assert set(seen_writes) == {
-        ("seen", 0), ("seen", 1), ("seen", 2),
-        ("seen_snapshot", 1), ("seen_snapshot", 2),
-    }
+    assert run.rounds_run == 3
+    return run
+
+
+def test_seen_writes_shuffle_nothing(crawl3):
+    """Seen deltas are written as they come: a parquet file records no
+    partitioning and the anti-join repartitions seen when it reads it, so
+    no Exchange sits above the cached new rows in what run_crawl hands to
+    io.write."""
+    seen_writes = {k: v for k, v in crawl3.io.plans.items() if k[0] == "seen"}
+    assert set(seen_writes) == {("seen", rnd) for rnd in range(4)}
     for key, nodes in seen_writes.items():
         assert not [n for n in nodes if "Exchange" in n], (key, nodes)
-    for rnd in (1, 2):
-        assert "InMemoryTableScan" in io.plans[("seen", rnd)]
-        snapshot = io.plans[("seen_snapshot", rnd)]
-        assert "InMemoryTableScan" in snapshot, snapshot
-        assert any(n.startswith("Scan parquet") for n in snapshot), snapshot
+    for rnd in (1, 2, 3):
+        assert "InMemoryTableScan" in seen_writes[("seen", rnd)]
+
+
+def test_multi_round_reads_are_one_scan(spark, crawl3):
+    """read_seen and read_fetch_log read every committed round of their
+    table in ONE parquet scan, not a union of per-round scans."""
+    from spacetime_crawler_spark.plans import crawl as crawl_mod
+
+    for df in (crawl_mod.read_seen(spark, crawl3.io),
+               crawl_mod.read_fetch_log(spark, crawl3.io, crawl3.rounds_run)):
+        nodes = _physical_nodes(df)
+        scans = [n for n in nodes if n.startswith("Scan ")]
+        assert len(scans) == 1 and scans[0].startswith("Scan parquet"), nodes

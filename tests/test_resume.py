@@ -104,60 +104,49 @@ def test_round_commit_is_atomic_across_tables(spark, tiny, tmp_path_factory):
     assert io.manifest("seen", last + 1)["rows"] == 2
 
 
-def test_seen_compaction_long_run(spark, tmp_path_factory):
-    """A ≥15-round crawl with compaction every 4 rounds: (1) snapshots are
-    actually written, (2) read fan-in is bounded by K+1 regardless of round
-    count, (3) outputs are identical to the compaction-disabled engine, and
-    (4) resume across a compaction boundary is exact."""
-    from spacetime_crawler_spark.plans.crawl import read_seen_up_to
+def test_long_run_reads_each_table_in_one_scan(spark, tmp_path_factory,
+                                               monkeypatch):
+    """A 15-round crawl: read_seen and read_fetch_log each make ONE io.read
+    call over every committed round, and return exactly the union of the
+    per-round reads; no url enters seen twice."""
+    from collections import Counter
 
     p = synth.world("tiny", n_pages=900)
     pages = synth.generate_pages_df(spark, p).persist()
     seeds = synth.seed_urls(p)[:2]  # small seed set + tiny budget → slow BFS
     rounds = 15
+    cfg = CrawlConfig(state_dir=str(tmp_path_factory.mktemp("long")),
+                      rounds=rounds, round_budget_s=1.0)
+    run = run_crawl(spark, pages, seeds, cfg)
+    pages.unpersist()
+    assert run.rounds_run == rounds, "world too small to sustain 15 rounds"
+    io = run.io
 
-    def go(tmp, k, n_rounds, resume=False, state_dir=None):
-        cfg = CrawlConfig(state_dir=state_dir or str(tmp), rounds=n_rounds,
-                          round_budget_s=1.0, seen_compact_every=k)
-        return run_crawl(spark, pages, seeds, cfg, resume=resume)
-
-    run_c = go(tmp_path_factory.mktemp("compact"), 4, rounds)
-    assert run_c.rounds_run == rounds, "world too small to sustain 15 rounds"
-    snaps = run_c.io.committed_rounds("seen_snapshot")
-    assert snaps == [4, 8, 12]
-
-    # fan-in bound: count the parquet reads read_seen performs
     reads = []
-    orig_read = run_c.io.read
+    read = io.read
 
     def counting_read(spark_, table, rnd):
         reads.append((table, rnd))
-        return orig_read(spark_, table, rnd)
+        return read(spark_, table, rnd)
 
-    run_c.io.read = counting_read
-    seen_c = sorted(
-        (r.url_norm, r.round_seen)
-        for r in crawl_mod.read_seen(spark, run_c.io).collect()
-    )
-    run_c.io.read = orig_read
-    assert len(reads) <= 4 + 1, reads  # snapshot + ≤K tail deltas
+    monkeypatch.setattr(io, "read", counting_read)
+    seen = crawl_mod.read_seen(spark, io)
+    log = crawl_mod.read_fetch_log(spark, io, rounds)
+    monkeypatch.undo()
+    assert reads == [("seen", range(rounds + 1)),
+                     ("fetch_log", range(1, rounds + 1))]
 
-    run_u = go(tmp_path_factory.mktemp("uncompacted"), 0, rounds)
-    seen_u = sorted(
-        (r.url_norm, r.round_seen)
-        for r in crawl_mod.read_seen(spark, run_u.io).collect()
-    )
-    assert seen_c == seen_u
-    assert (_final_state(spark, run_c.io, rounds)
-            == _final_state(spark, run_u.io, rounds))
+    def rows(df):
+        return Counter(df.collect())
 
-    # resume across a compaction boundary (interrupt at 6, snapshots at 4/8/12)
-    run_a = go(tmp_path_factory.mktemp("part15"), 4, 6)
-    state_dir = run_a.io.root
-    run_b = go(None, 4, rounds, resume=True, state_dir=state_dir)
-    assert (_final_state(spark, run_b.io, run_b.rounds_run)
-            == _final_state(spark, run_c.io, rounds))
-    pages.unpersist()
+    def per_round(table, first):
+        return sum((rows(io.read(spark, table, rnd))
+                    for rnd in range(first, rounds + 1)), Counter())
+
+    seen_rows = rows(seen)
+    assert seen_rows == per_round("seen", 0)
+    assert rows(log) == per_round("fetch_log", 1)
+    assert len({r.url_norm for r in seen_rows}) == sum(seen_rows.values())
 
 
 def test_adaptive_fetch_join_shuffle_path_equivalent(spark, tiny, tmp_path_factory,
