@@ -43,7 +43,6 @@ def main() -> None:
     ap.add_argument("--master", default=None, help="override spark master")
     ap.add_argument("--resume", action="store_true",
                     help="resume from last committed round")
-    ap.add_argument("--no-bloom", action="store_true")
     ap.add_argument("--revisit", metavar="DIR", default=None,
                     help="after the crawl, write per-URL revisit stats and"
                          " the change-rate recrawl schedule over the INPUT"
@@ -102,7 +101,6 @@ def main() -> None:
         rounds=args.rounds,
         round_budget_s=args.budget,
         n_parts=args.parts,
-        use_bloom=not args.no_bloom,
     )
     io = None
     if args.iceberg:

@@ -24,48 +24,6 @@ _VOID_TAGS = frozenset(
 )
 
 
-class _TextCollector(HTMLParser):
-    """Collects stripped, non-empty text nodes in document order, skipping
-    the contents of <script>/<style>."""
-
-    def __init__(self) -> None:
-        super().__init__(convert_charrefs=True)
-        self._skip_depth = 0
-        self.chunks: list[str] = []
-
-    def handle_starttag(self, tag: str, attrs) -> None:
-        if tag in _SKIP_CONTENT_TAGS and tag not in _VOID_TAGS:
-            self._skip_depth += 1
-
-    def handle_endtag(self, tag: str) -> None:
-        if tag in _SKIP_CONTENT_TAGS and self._skip_depth > 0:
-            self._skip_depth -= 1
-
-    def handle_data(self, data: str) -> None:
-        if self._skip_depth:
-            return
-        stripped = data.strip()
-        if stripped:
-            self.chunks.append(stripped)
-
-
-class _LinkCollector(HTMLParser):
-    """Collects <a href> values in document order (reference
-    scraper.py::extract_next_links shape)."""
-
-    def __init__(self) -> None:
-        super().__init__(convert_charrefs=True)
-        self.hrefs: list[str] = []
-
-    def handle_starttag(self, tag: str, attrs) -> None:
-        if tag != "a":
-            return
-        for name, value in attrs:
-            if name == "href" and value is not None:
-                self.hrefs.append(value)
-                break
-
-
 def _decode(html: bytes | str | None) -> str:
     if html is None:
         return ""
@@ -74,38 +32,11 @@ def _decode(html: bytes | str | None) -> str:
     return html
 
 
-def extract_text(html: bytes | str | None) -> str:
-    """PINNED SPEC (SURVEY.md §2 F9): decode UTF-8 (errors → U+FFFD), parse
-    with stdlib html.parser, drop <script>/<style> subtree text, then
-    ``'\\n'.join`` of the stripped non-empty text nodes in document order."""
-    parser = _TextCollector()
-    try:
-        parser.feed(_decode(html))
-        parser.close()
-    except Exception:
-        pass  # html.parser is lenient; belt-and-braces for hostile bytes
-    return "\n".join(parser.chunks)
-
-
-def extract_links(html: bytes | str | None, base_url: str) -> list[str]:
-    """PINNED SPEC (SURVEY.md §2 F8): every <a href> in document order,
-    resolved against the page URL (urljoin), defragmented + canonicalized.
-    Duplicates are preserved (dedup is F3's job); scheme filtering is F1's."""
-    parser = _LinkCollector()
-    try:
-        parser.feed(_decode(html))
-        parser.close()
-    except Exception:
-        pass
-    return [resolve_and_canonicalize(base_url, href) for href in parser.hrefs]
-
-
 class _PageCollector(HTMLParser):
-    """Single-pass combined collector: text chunks AND hrefs in one parse.
-    MUST stay behaviorally identical to _TextCollector + _LinkCollector —
-    tests/test_textextract.py asserts extract_page ≡ (extract_text,
-    extract_links) on goldens and random inputs.  Exists because parsing is
-    the crawl hot path's dominant Python cost and parsing twice doubles it."""
+    """Text chunks AND <a href> values in one parse, in document order:
+    stripped, non-empty text nodes outside <script>/<style>, and each <a>
+    tag's first non-None href (reference scraper.py::extract_next_links
+    shape)."""
 
     def __init__(self) -> None:
         super().__init__(convert_charrefs=True)
@@ -134,14 +65,34 @@ class _PageCollector(HTMLParser):
             self.chunks.append(stripped)
 
 
-def extract_page(html: bytes | str | None, base_url: str) -> tuple[str, list[str]]:
-    """(extract_text(html), extract_links(html, base_url)) in ONE parse."""
+def _parse(html: bytes | str | None) -> _PageCollector:
     parser = _PageCollector()
     try:
         parser.feed(_decode(html))
         parser.close()
     except Exception:
-        pass
+        pass  # html.parser is lenient; belt-and-braces for hostile bytes
+    return parser
+
+
+def extract_text(html: bytes | str | None) -> str:
+    """PINNED SPEC (SURVEY.md §2 F9): decode UTF-8 (errors → U+FFFD), parse
+    with stdlib html.parser, drop <script>/<style> subtree text, then
+    ``'\\n'.join`` of the stripped non-empty text nodes in document order."""
+    return "\n".join(_parse(html).chunks)
+
+
+def extract_links(html: bytes | str | None, base_url: str) -> list[str]:
+    """PINNED SPEC (SURVEY.md §2 F8): every <a href> in document order,
+    resolved against the page URL (urljoin), defragmented + canonicalized.
+    Duplicates are preserved (dedup is F3's job); scheme filtering is F1's."""
+    return [resolve_and_canonicalize(base_url, href) for href in _parse(html).hrefs]
+
+
+def extract_page(html: bytes | str | None, base_url: str) -> tuple[str, list[str]]:
+    """(extract_text(html), extract_links(html, base_url)) in ONE parse —
+    the crawl's fetch path, where parsing is the dominant Python cost."""
+    parser = _parse(html)
     return (
         "\n".join(parser.chunks),
         [resolve_and_canonicalize(base_url, href) for href in parser.hrefs],
@@ -173,12 +124,11 @@ class _BlockCollector(HTMLParser):
     boundaries; chars inside <a> count toward its anchor total;
     <script>/<style>/<title> text is skipped.
 
-    Anchor state is a BOOLEAN with implicit close (mirroring
-    _AnchorCollector's pinned browser behavior: a new <a> closes an open
-    one, HTML forbids nesting) and a block boundary also closes any open
-    anchor — so crawled HTML with an unclosed </a> (extremely common in
-    nav markup) poisons at most its own block, never the rest of the
-    page."""
+    Anchor state is a BOOLEAN with implicit close (browser behavior: a
+    new <a> closes an open one, HTML forbids nesting) and a block boundary
+    also closes any open anchor — so crawled HTML with an unclosed </a>
+    (extremely common in nav markup) poisons at most its own block, never
+    the rest of the page."""
 
     def __init__(self) -> None:
         super().__init__(convert_charrefs=True)

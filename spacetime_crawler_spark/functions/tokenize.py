@@ -12,6 +12,16 @@ import re
 TOKEN_SPLIT_REGEX = "[^a-z0-9]+"
 _TOKEN_RE = re.compile(TOKEN_SPLIT_REGEX)
 
+# Non-empty lowercase tokens of a `text` column as a SQL expression, one per
+# engine — identical semantics (Spark `split` and DuckDB
+# `regexp_split_to_array` both keep empty strings at separators; both sides
+# filter them).
+SPARK_TOKENS = f"filter(split(lower(text), '{TOKEN_SPLIT_REGEX}'), x -> x != '')"
+DUCK_TOKENS = (
+    f"list_filter(regexp_split_to_array(lower(text), '{TOKEN_SPLIT_REGEX}'),"
+    " x -> x <> '')"
+)
+
 # Fixed English stopword list (the reference's common-word report excluded a
 # standard stopword list; this is ours, pinned).  Kept sorted for stable
 # embedding into SQL.

@@ -18,11 +18,10 @@ Sidecar lifecycle (round 2 design): the sidecar is a per-round STATE TABLE
 with frontier/seen — resume reads it back in O(P) instead of rebuilding
 from the full seen set.  Maintenance is distributed (the previous rows
 cogroup with the round's new keys on part_id and each group ORs them in one
-pass); the driver never has to hold the bitmaps.  Membership testing is
-size-gated: small sidecars ride one broadcast (destroyed after the round); past
-`crawl.BLOOM_BROADCAST_MAX_BYTES` the candidates COGROUP with the sidecar rows on
-part_id, so each task receives only the bitmaps of its own buckets — the
-shard-routing design SURVEY §4.3 calls for at the 10^10 tier.
+pass), and so is membership testing: the candidates COGROUP with the sidecar
+rows on part_id, so each task receives only the bitmaps of its own buckets —
+the shard-routing design SURVEY §4.3 calls for at the 10^10 tier.  The
+driver never holds the bitmaps.
 """
 
 from __future__ import annotations
@@ -128,12 +127,10 @@ def flag_maybe_seen_cogrouped(
     only its own buckets' bitmaps — executor memory stays O(sidecar/P) no
     matter how large the seen set grows.  Multiple bitmap rows per bucket
     (e.g. sidecar ∪ fresh deltas) are OR'd on the fly.  Returns candidates
-    + maybe_seen, exactly like the broadcast-UDF path."""
-    import pyspark.sql.types as _T
-
+    + maybe_seen."""
     cand_cols = [f.name for f in candidates.schema.fields]
-    out_schema = _T.StructType(
-        list(candidates.schema.fields) + [_T.StructField("maybe_seen", _T.BooleanType())]
+    out_schema = T.StructType(
+        list(candidates.schema.fields) + [T.StructField("maybe_seen", T.BooleanType())]
     )
     keyed = candidates.withColumn(
         "part_id", F.pmod("url_hash", F.lit(n_parts)).cast("int")
@@ -178,41 +175,9 @@ def flag_maybe_seen_cogrouped(
 
 
 def collect_sidecar(bloom_df: DataFrame) -> dict[int, tuple[int, int, bytes]]:
-    """≤P small rows to the driver (the ONE permitted collect — SURVEY §4)."""
+    """The sidecar's ≤P rows on the driver, {part_id: (nbits, nhashes,
+    bits)}, to read a sidecar back; the engine itself never collects it."""
     return {
         r.part_id: (r.nbits, r.nhashes, bytes(r.bits))
         for r in bloom_df.collect()
     }
-
-
-def make_maybe_seen_udf(spark, sidecar: dict[int, tuple[int, int, bytes]], n_parts: int):
-    """Vectorized membership test: (url_hash, h2) → maybe_seen boolean.
-    The sidecar rides a Spark broadcast; numpy does the bit tests per Arrow
-    batch.  Returns (udf, broadcast) — the CALLER must destroy() the
-    broadcast once the round's filtering is materialized, otherwise each
-    round leaks a full sidecar copy on the driver and every executor."""
-    bcast = spark.sparkContext.broadcast(
-        {p: (nb, k, np.frombuffer(b, dtype=np.uint8)) for p, (nb, k, b) in sidecar.items()}
-    )
-
-    @F.pandas_udf(T.BooleanType())
-    def maybe_seen(url_hash: pd.Series, h2: pd.Series) -> pd.Series:
-        shards = bcast.value
-        h1a = url_hash.to_numpy()
-        h2a = h2.to_numpy()
-        parts = (
-            h1a.astype(np.int64) % np.int64(n_parts) + n_parts
-        ) % np.int64(n_parts)
-        out = np.zeros(len(h1a), dtype=bool)
-        for part in np.unique(parts):
-            shard = shards.get(int(part))
-            if shard is None:
-                continue  # no bitmap for this bucket → nothing seen there
-            nbits, k, bits = shard
-            mask = parts == part
-            pos = _positions(h1a[mask], h2a[mask], k, nbits)
-            hit = (bits[pos >> 3] >> (pos & 7)) & 1
-            out[mask] = hit.all(axis=1)
-        return pd.Series(out)
-
-    return maybe_seen, bcast

@@ -13,14 +13,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from spacetime_crawler_spark.functions.tokenize import TOKEN_SPLIT_REGEX
+from spacetime_crawler_spark.functions.tokenize import DUCK_TOKENS, SPARK_TOKENS
+from spacetime_crawler_spark.operators.similarity import _SPARK_COS
 from spacetime_crawler_spark.sources.tables import load_table, spread
-
-_SPARK_TOKENS = f"filter(split(lower(text), '{TOKEN_SPLIT_REGEX}'), x -> x != '')"
-_DUCK_TOKENS = (
-    f"list_filter(regexp_split_to_array(lower(text), '{TOKEN_SPLIT_REGEX}'),"
-    " x -> x <> '')"
-)
 
 # Word-bigram shingles, distinct per doc.  Bigrams (not 3-grams) because the
 # synthetic corpus is short random-word docs; the planted near-dup pairs sit
@@ -52,10 +47,10 @@ _SPARK_SHINGLES_FROM_TOKS = (
     "else array_distinct(transform(sequence(1, size(toks) - 1),"
     " i -> concat_ws(' ', slice(toks, i, 2)))) end"
 )
-_SPARK_SHINGLES = _SPARK_SHINGLES_FROM_TOKS.replace("toks", f"({_SPARK_TOKENS})")
+_SPARK_SHINGLES = _SPARK_SHINGLES_FROM_TOKS.replace("toks", f"({SPARK_TOKENS})")
 _DUCK_SHINGLES = (
-    f"list_distinct(list_transform(generate_series(1, greatest(len({_DUCK_TOKENS}) - 1, 0)),"
-    f" i -> {_DUCK_TOKENS}[i] || ' ' || {_DUCK_TOKENS}[i+1]))"
+    f"list_distinct(list_transform(generate_series(1, greatest(len({DUCK_TOKENS}) - 1, 0)),"
+    f" i -> {DUCK_TOKENS}[i] || ' ' || {DUCK_TOKENS}[i+1]))"
 )
 
 
@@ -85,7 +80,7 @@ FROM documents
 def _shingle_docs(docs: DataFrame) -> DataFrame:
     """(doc_id, text) → (doc_id, shingles ARRAY<STRING>)."""
     return docs.select(
-        "doc_id", F.expr(_SPARK_TOKENS).alias("toks")
+        "doc_id", F.expr(SPARK_TOKENS).alias("toks")
     ).select("doc_id", F.expr(_SPARK_SHINGLES_FROM_TOKS).alias("shingles"))
 
 
@@ -499,17 +494,6 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 _COSINE_DUP_THRESHOLD = 0.4
 _COSINE_DOC_LIMIT = 400  # bound the verify pairs at bench scale
 
-# Double-precision cosine with sequential accumulation — bit-compatible with
-# DuckDB's list_cosine_similarity over DOUBLE[] (same order, same IEEE ops).
-_SPARK_COS = """
-  aggregate(zip_with({a}, {b}, (x, y) -> cast(x as double) * cast(y as double)),
-            cast(0.0 as double), (s, v) -> s + v)
-  / (sqrt(aggregate({a}, cast(0.0 as double),
-                    (s, v) -> s + cast(v as double) * cast(v as double)))
-     * sqrt(aggregate({b}, cast(0.0 as double),
-                      (s, v) -> s + cast(v as double) * cast(v as double))))
-"""
-
 
 def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup pairs by embedding cosine ≥ threshold over a bounded id
@@ -593,7 +577,7 @@ _DUCK_SPANS = _duck_span_windows("w", f"md5({_duck_span_slice('w')})")
 def _doc_spans(docs: DataFrame) -> DataFrame:
     """(doc_id, span) — one row per non-overlapping token window."""
     return docs.select(
-        "doc_id", F.expr(_SPARK_TOKENS).alias("t")
+        "doc_id", F.expr(SPARK_TOKENS).alias("t")
     ).select("doc_id", F.explode(F.expr(_SPARK_SPANS)).alias("span"))
 
 
@@ -641,7 +625,7 @@ def dedup_span_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 DEDUP_SPAN_STATS_SQL = f"""
-WITH t AS (SELECT doc_id, {_DUCK_TOKENS} AS w FROM documents),
+WITH t AS (SELECT doc_id, {DUCK_TOKENS} AS w FROM documents),
 s AS (SELECT doc_id, unnest({_DUCK_SPANS}) AS span FROM t),
 d AS (SELECT span FROM s GROUP BY span HAVING COUNT(*) > 1)
 SELECT s.doc_id,
@@ -692,7 +676,7 @@ def decontaminate_against_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 DECONTAMINATE_SQL = f"""
-WITH t AS (SELECT doc_id, {_DUCK_TOKENS} AS w FROM documents),
+WITH t AS (SELECT doc_id, {DUCK_TOKENS} AS w FROM documents),
 s AS (SELECT doc_id, unnest({_DUCK_SPANS}) AS span FROM t),
 e AS (SELECT DISTINCT span FROM s
       WHERE doc_id % {EVAL_DOC_MODULUS} = 0 AND doc_id < {EVAL_DOC_LIMIT})
@@ -752,7 +736,7 @@ def _doc_spans_sliding(docs: DataFrame) -> DataFrame:
     single whole-doc window for docs shorter than SPAN_TOKENS, matching
     the grid's behavior for short docs so short-doc quotes still align)."""
     return docs.select(
-        "doc_id", F.expr(_SPARK_TOKENS).alias("t")
+        "doc_id", F.expr(SPARK_TOKENS).alias("t")
     ).select("doc_id", F.explode(F.expr(_SPARK_SPANS_SLIDING)).alias("span"))
 
 
@@ -797,7 +781,7 @@ def decontaminate_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 DECONTAMINATE_SLIDING_SQL = f"""
-WITH t AS (SELECT doc_id, {_DUCK_TOKENS} AS w FROM documents),
+WITH t AS (SELECT doc_id, {DUCK_TOKENS} AS w FROM documents),
 s AS (SELECT doc_id, unnest({_DUCK_SPANS}) AS span FROM t
       WHERE NOT (doc_id % {EVAL_DOC_MODULUS} = 0 AND doc_id < {EVAL_DOC_LIMIT})),
 e AS (SELECT DISTINCT unnest({_DUCK_SPANS_SLIDING}) AS span FROM t

@@ -23,6 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from spacetime_crawler_spark.functions.tokenize import DUCK_TOKENS
 from spacetime_crawler_spark.operators.dedup import (
     _DEDUP_DOC_LIMIT,
     _DUCK_SHINGLES,
@@ -32,7 +33,6 @@ from spacetime_crawler_spark.operators.dedup import (
     ngram_jaccard_pairs,
 )
 from spacetime_crawler_spark.operators.textstats import (
-    _DUCK_TOKENS,
     DUCK_AVG_TOK_LEN_W,
     DUCK_N_TOKENS_W,
     DUCK_STOP_RATIO_W,
@@ -93,7 +93,7 @@ def pipeline_training_set(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 PIPELINE_TRAINING_SET_SQL = f"""
 WITH base AS (
-  SELECT doc_id, lang, text, {_DUCK_TOKENS} AS w
+  SELECT doc_id, lang, text, {DUCK_TOKENS} AS w
   FROM documents WHERE doc_id < {_DEDUP_DOC_LIMIT}
 ),
 q AS (

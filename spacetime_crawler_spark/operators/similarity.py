@@ -22,6 +22,8 @@ from spacetime_crawler_spark.sources.tables import load_table, spread
 TOP_K = 5
 _QUERY_VEC_ID = 0  # the pinned demo query vector
 
+# Double-precision cosine with sequential accumulation — bit-compatible with
+# DuckDB's list_cosine_similarity over DOUBLE[] (same order, same IEEE ops).
 _SPARK_COS = """
   aggregate(zip_with({a}, {b}, (x, y) -> cast(x as double) * cast(y as double)),
             cast(0.0 as double), (s, v) -> s + v)

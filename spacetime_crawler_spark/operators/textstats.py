@@ -9,17 +9,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from spacetime_crawler_spark.functions.tokenize import (
+    DUCK_TOKENS,
+    SPARK_TOKENS,
     STOPWORDS,
-    TOKEN_SPLIT_REGEX,
     sql_stopword_list,
 )
 from spacetime_crawler_spark.sources.tables import load_table, spread
-
-_SPARK_TOKENS = f"filter(split(lower(text), '{TOKEN_SPLIT_REGEX}'), x -> x != '')"
-_DUCK_TOKENS = (
-    f"list_filter(regexp_split_to_array(lower(text), '{TOKEN_SPLIT_REGEX}'),"
-    " x -> x <> '')"
-)
 
 
 # --- quality scoring ----------------------------------------------------------
@@ -30,14 +25,14 @@ _DUCK_TOKENS = (
 # Values are ROUNDED to 4dp BEFORE thresholding — both consumers and both
 # engines must agree at the boundary.
 _STOP_LIST = ", ".join(f"'{w}'" for w in STOPWORDS)
-SPARK_N_TOKENS = f"size({_SPARK_TOKENS})"
+SPARK_N_TOKENS = f"size({SPARK_TOKENS})"
 SPARK_STOP_RATIO = (
-    f"round(size(filter({_SPARK_TOKENS}, t -> t IN ({_STOP_LIST})))"
-    f" / greatest(size({_SPARK_TOKENS}), 1), 4)"
+    f"round(size(filter({SPARK_TOKENS}, t -> t IN ({_STOP_LIST})))"
+    f" / greatest(size({SPARK_TOKENS}), 1), 4)"
 )
 SPARK_AVG_TOK_LEN = (
-    f"round(aggregate({_SPARK_TOKENS}, 0L, (a, t) -> a + length(t))"
-    f" / greatest(size({_SPARK_TOKENS}), 1), 4)"
+    f"round(aggregate({SPARK_TOKENS}, 0L, (a, t) -> a + length(t))"
+    f" / greatest(size({SPARK_TOKENS}), 1), 4)"
 )
 # DuckDB mirrors over a pre-tokenized `w` column (see TEXT_QUALITY_SQL /
 # PIPELINE_TRAINING_SET_SQL for the CTE that binds w)
@@ -86,7 +81,7 @@ def text_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 TEXT_QUALITY_SQL = f"""
 WITH t AS (
-  SELECT doc_id, text, {_DUCK_TOKENS} AS w FROM documents
+  SELECT doc_id, text, {DUCK_TOKENS} AS w FROM documents
 ),
 m AS (
   SELECT doc_id,
@@ -112,7 +107,7 @@ def text_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (sums are over integers — exact under any re-partitioning)
     docs = spread(load_table(spark, sf_dir, "documents"))
     return (
-        docs.select("lang", F.expr(f"size({_SPARK_TOKENS})").alias("n_tok"))
+        docs.select("lang", F.expr(f"size({SPARK_TOKENS})").alias("n_tok"))
         .groupBy("lang")
         .agg(
             F.count("*").alias("n_docs"),
@@ -125,8 +120,8 @@ def text_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 TEXT_TOKEN_STATS_SQL = f"""
 SELECT lang, COUNT(*) AS n_docs,
-       CAST(SUM(len({_DUCK_TOKENS})) AS BIGINT) AS total_tokens,
-       ROUND(AVG(len({_DUCK_TOKENS})), 4) AS avg_tokens
+       CAST(SUM(len({DUCK_TOKENS})) AS BIGINT) AS total_tokens,
+       ROUND(AVG(len({DUCK_TOKENS})), 4) AS avg_tokens
 FROM documents GROUP BY lang ORDER BY lang
 """
 
@@ -445,7 +440,7 @@ def text_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     fp_expr = f"""
       aggregate(
-        transform({_SPARK_TOKENS},
+        transform({SPARK_TOKENS},
                   t -> cast(ascii(substring(t, 1, 1)) as bigint) * 1000003
                        + length(t)),
         0L, (acc, v) -> (acc * 131 + v) % 2147483647
@@ -458,7 +453,7 @@ TEXT_FINGERPRINT_SQL = f"""
 SELECT doc_id,
        list_reduce(
          list_prepend(CAST(0 AS BIGINT),
-           list_transform({_DUCK_TOKENS},
+           list_transform({DUCK_TOKENS},
              t -> CAST(ascii(substr(t, 1, 1)) AS BIGINT) * 1000003
                   + LENGTH(t))),
          (acc, v) -> (acc * 131 + v) % 2147483647
@@ -493,7 +488,7 @@ def text_bigrams_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     stage is the whole cost — parallelize it past the one-row-group scan."""
     docs = spread(load_table(spark, sf_dir, "documents"))
     return (
-        docs.select(F.expr(_SPARK_TOKENS).alias("t"))
+        docs.select(F.expr(SPARK_TOKENS).alias("t"))
         .select(F.explode(F.expr(_SPARK_BIGRAMS)).alias("bigram"))
         .groupBy("bigram")
         .agg(F.count("*").alias("n"))
@@ -503,7 +498,7 @@ def text_bigrams_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 TEXT_BIGRAMS_SQL = f"""
-WITH t AS (SELECT {_DUCK_TOKENS} AS w FROM documents),
+WITH t AS (SELECT {DUCK_TOKENS} AS w FROM documents),
 b AS (
   SELECT unnest(CASE WHEN len(w) < 2 THEN []
                      ELSE list_transform(generate_series(1, len(w) - 1),
@@ -567,7 +562,7 @@ def text_repetition_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
       )
     """
     return (
-        docs.select("doc_id", F.expr(_SPARK_TOKENS).alias("t"))
+        docs.select("doc_id", F.expr(SPARK_TOKENS).alias("t"))
         .select(
             "doc_id",
             F.expr("cast(size(t) as int)").alias("n_tokens"),
@@ -605,7 +600,7 @@ def text_repetition_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 TEXT_REPETITION_SQL = f"""
 WITH t AS (
-  SELECT doc_id, {_DUCK_TOKENS} AS w FROM documents
+  SELECT doc_id, {DUCK_TOKENS} AS w FROM documents
 ),
 m AS (
   SELECT doc_id,
@@ -680,7 +675,7 @@ def source_quality_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 SOURCE_QUALITY_AGG_SQL = f"""
 WITH t AS (
-  SELECT source, text, {_DUCK_TOKENS} AS w FROM documents
+  SELECT source, text, {DUCK_TOKENS} AS w FROM documents
 ),
 m AS (
   SELECT source,

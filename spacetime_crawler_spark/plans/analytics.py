@@ -22,22 +22,15 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from spacetime_crawler_spark.functions.tokenize import (
+    DUCK_TOKENS,
+    SPARK_TOKENS,
     STOPWORDS,
-    TOKEN_SPLIT_REGEX,
     sql_stopword_list,
 )
 from spacetime_crawler_spark.sources.tables import load_table, spread
 
 # Shared sub-expressions -----------------------------------------------------
 
-# Non-empty lowercase tokens of documents.text — identical semantics in both
-# engines (Spark `split` and DuckDB `regexp_split_to_array` both keep empty
-# strings at separators; both sides filter them).
-_SPARK_TOKENS = f"filter(split(lower(text), '{TOKEN_SPLIT_REGEX}'), x -> x != '')"
-_DUCK_TOKENS = (
-    f"list_filter(regexp_split_to_array(lower(text), '{TOKEN_SPLIT_REGEX}'),"
-    " x -> x <> '')"
-)
 
 
 # A1 — unique pages (reference report Q1: distinct defragmented URLs) --------
@@ -69,7 +62,7 @@ def a3_longest_page(spark: SparkSession, sf_dir: str) -> DataFrame:
     # spread: the tokenize feeding the ranking window is the whole cost
     docs = spread(load_table(spark, sf_dir, "documents"))
     with_n = docs.select(
-        "doc_id", F.expr(f"size({_SPARK_TOKENS})").alias("n_words")
+        "doc_id", F.expr(f"size({SPARK_TOKENS})").alias("n_words")
     )
     w = Window.orderBy(F.desc("n_words"), F.asc("doc_id"))
     return (
@@ -82,7 +75,7 @@ def a3_longest_page(spark: SparkSession, sf_dir: str) -> DataFrame:
 A3_SQL = f"""
 WITH counted AS (
   -- CAST: Spark size() is INT32; keep schemas identical
-  SELECT doc_id, CAST(len({_DUCK_TOKENS}) AS INT) AS n_words FROM documents
+  SELECT doc_id, CAST(len({DUCK_TOKENS}) AS INT) AS n_words FROM documents
 )
 SELECT doc_id, n_words FROM (
   SELECT doc_id, n_words,
@@ -99,7 +92,7 @@ def a4_common_words(spark: SparkSession, sf_dir: str) -> DataFrame:
     # testdata's one-row-group parquet otherwise runs it on a single core
     docs = spread(load_table(spark, sf_dir, "documents"))
     return (
-        docs.select(F.explode(F.expr(_SPARK_TOKENS)).alias("word"))
+        docs.select(F.explode(F.expr(SPARK_TOKENS)).alias("word"))
         .filter(~F.col("word").isin(*STOPWORDS))
         .groupBy("word")
         .agg(F.count("*").alias("n"))
@@ -110,7 +103,7 @@ def a4_common_words(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 A4_SQL = f"""
 WITH toks AS (
-  SELECT unnest({_DUCK_TOKENS}) AS word FROM documents
+  SELECT unnest({DUCK_TOKENS}) AS word FROM documents
 )
 SELECT word, COUNT(*) AS n FROM toks
 WHERE word NOT IN ({sql_stopword_list()})

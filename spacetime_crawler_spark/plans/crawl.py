@@ -7,13 +7,15 @@ Dataflow per round (SURVEY §3.2):
     selected ──F5 fetch-join pages_latest (hash-keyed) ── fetched (persist)
     fetched ──F9 text UDF──► fetch_log sink
     fetched ──F8 link UDF ── explode ── F1 native filter
-            ──F3 dedup (bloom bcast prefilter → exact anti-join vs seen)
+            ──F3 dedup (bloom prefilter cogrouped with its sidecar → exact
+              anti-join vs seen)
             ──F11 merge leftover ──► frontier′, seen′, bloom′ sinks
 
 Scale levers baked in (SURVEY §4): F1 stays native (pushable); the fetch
 join is keyed on xxhash64(url_norm) (narrow shuffle key, AQE skew-join
-handles hot hosts); robots/bloom sidecars are broadcasts; the per-host
-scheduler is two-phase-ranked then applyInPandas on quota-bounded groups;
+handles hot hosts); the robots sidecar is a broadcast; the bloom sidecar
+is never broadcast: candidates cogroup with its rows on part_id, so a task
+holds only its own buckets' bitmaps; the per-host scheduler is two-phase-ranked then applyInPandas on quota-bounded groups;
 the exact anti-join hash-repartitions both `seen` and the candidates by
 url_hash into P partitions as it reads them.  Seen is stored as per-round
 deltas and read as one scan of every committed delta (io.read over a range
@@ -67,11 +69,6 @@ FRONTIER_COLS = ("url_norm", "url_hash", "h2", "host", "depth")
 # fall back to a shuffled hash join past this many rows (the 10^10-tier
 # regime where the winner set exceeds broadcast size)
 FETCH_BROADCAST_MAX_ROWS = 2_000_000
-# sidecar membership gate: broadcast the whole sidecar up to this size,
-# cogroup candidates with the sidecar rows on part_id above it (each task
-# then holds only its buckets' bitmaps) — past 256 parts at the fixed
-# bloom.BITS_PER_PART
-BLOOM_BROADCAST_MAX_BYTES = 64 << 20
 
 
 @dataclass
@@ -80,7 +77,6 @@ class CrawlConfig:
     rounds: int = 4
     round_budget_s: float = 30.0
     n_parts: int = 32
-    use_bloom: bool = True
     # nothing reads this field; it stays only because perfbench/worker.py
     # passes it, until the benchmark change of ROADMAP item 7 removes it
     seen_compact_every: int = 8
@@ -351,50 +347,29 @@ def _cache(held: ExitStack, df: DataFrame) -> DataFrame:
 
 
 def _dedup_candidates(
-    spark: SparkSession,
     candidates: DataFrame,
     seen: DataFrame,
-    bloom_prev: DataFrame | None,
+    bloom_prev: DataFrame,
     cfg: CrawlConfig,
-    m: RoundMetrics,
     held: ExitStack,
 ):
     """F3 — bloom prefilter (definite negatives skip the exact anti-join),
     then the exact left_anti vs seen, both sides partitioned by url_hash.
-    Returns (new_urls, flagged): `flagged` is the cached candidates +
-    maybe_seen (None without the bloom).  The cache and the sidecar
-    broadcast are released when `held` closes."""
-    flagged = None
-    if bloom_prev is not None:
-        sidecar_bytes = cfg.n_parts * (bloom.BITS_PER_PART // 8)
-        if sidecar_bytes <= BLOOM_BROADCAST_MAX_BYTES:
-            # small sidecar: one broadcast, destroyed at round end
-            maybe_seen_udf, bloom_bcast = bloom.make_maybe_seen_udf(
-                spark, bloom.collect_sidecar(bloom_prev), cfg.n_parts
-            )
-            held.callback(bloom_bcast.destroy)
-            flagged = candidates.withColumn(
-                "maybe_seen", maybe_seen_udf("url_hash", "h2")
-            )
-        else:
-            # large sidecar: cogroup on part_id — each task receives only
-            # its buckets' bitmaps, never the whole sidecar
-            flagged = bloom.flag_maybe_seen_cogrouped(
-                candidates, bloom_prev, cfg.n_parts
-            )
-        flagged = _cache(held, flagged)
-        to_check = flagged.filter(F.col("maybe_seen")).drop("maybe_seen")
-        definitely_new = flagged.filter(~F.col("maybe_seen")).drop("maybe_seen")
-    else:
-        m.candidates = candidates.count()
-        to_check = candidates
+    The candidates cogroup with the sidecar rows on part_id, so each task
+    holds only its own buckets' bitmaps.  Returns (new_urls, flagged):
+    `flagged` is the cached candidates + maybe_seen, released when `held`
+    closes."""
+    flagged = _cache(held, bloom.flag_maybe_seen_cogrouped(
+        candidates, bloom_prev, cfg.n_parts
+    ))
+    to_check = flagged.filter(F.col("maybe_seen")).drop("maybe_seen")
+    definitely_new = flagged.filter(~F.col("maybe_seen")).drop("maybe_seen")
     checked_new = to_check.repartition(cfg.n_parts, "url_hash").join(
         seen.repartition(cfg.n_parts, "url_hash"),
         ["url_hash", "url_norm"],
         "left_anti",
     )
-    new_urls = checked_new if flagged is None else definitely_new.unionByName(checked_new)
-    return new_urls, flagged
+    return definitely_new.unionByName(checked_new), flagged
 
 
 def run_crawl(
@@ -423,8 +398,8 @@ def run_crawl(
             " engine's repartitioning (construct the store with"
             " n_buckets=cfg.n_parts)"
         )
-    # `held` releases every cache and broadcast the run still holds when the
-    # call ends, returning or raising; it closes after the pool has joined
+    # `held` releases every cache the run still holds when the call ends,
+    # returning or raising; it closes after the pool has joined
     with ExitStack() as held, ThreadPoolExecutor(
         _BATCH_THREADS, thread_name_prefix="crawl-batch"
     ) as pool:
@@ -480,9 +455,7 @@ def run_crawl(
                     None, frontier, cfg.n_parts))
                 tables["bloom"] = cfg.n_parts
 
-            prep += [write_frontier0, write_seen0]
-            if cfg.use_bloom:
-                prep.append(write_bloom0)
+            prep += [write_frontier0, write_seen0, write_bloom0]
         _join(_submit(spark, pool, *prep))
         if start_round == 0:
             io.commit(0, tables)
@@ -495,32 +468,29 @@ def run_crawl(
             prev_frontier_rows = io.manifest("frontier", rnd - 1)["rows"]
             if prev_frontier_rows == 0:
                 break
-            # the round's caches and broadcasts: released once it commits,
-            # or by `held` if anything in the round raises
+            # the round's caches: released once it commits, or by `held` if
+            # anything in the round raises
             round_held = held.enter_context(ExitStack())
             frontier = io.read(spark, "frontier", rnd - 1)
             seen = io.read(spark, "seen", range(rnd))
-            bloom_prev = None
-            if cfg.use_bloom:
-                if (
-                    start_round > 0
-                    and rnd == start_round + 1
-                    and not _bloom_state_matches(spark, io, start_round, cfg)
-                ):
-                    # resumed state without a bloom table, or one built under a
-                    # DIFFERENT geometry (n_parts / bits / hashes — reusing it
-                    # would mis-bucket membership tests and re-admit seen
-                    # URLs): rebuild once from seen, IN MEMORY ONLY.  Never
-                    # rewrite the already-committed round's bloom slice — a
-                    # crash mid-rewrite would leave committed-but-partial
-                    # state, exactly what the round-manifest protocol forbids.
-                    # The rebuilt sidecar is written (and committed) at this
-                    # round like any other.
-                    bloom_prev = _cache(round_held, bloom.update_bitmaps_df(
-                        None, seen, cfg.n_parts
-                    ))
-                else:
-                    bloom_prev = io.read(spark, "bloom", rnd - 1)
+            if (
+                start_round > 0
+                and rnd == start_round + 1
+                and not _bloom_state_matches(spark, io, start_round, cfg)
+            ):
+                # resumed state without a bloom table, or one built under a
+                # DIFFERENT geometry (n_parts / bits / hashes — reusing it
+                # would mis-bucket membership tests and re-admit seen URLs):
+                # rebuild once from seen, IN MEMORY ONLY.  Never rewrite the
+                # already-committed round's bloom slice — a crash mid-rewrite
+                # would leave committed-but-partial state, exactly what the
+                # round-manifest protocol forbids.  The rebuilt sidecar is
+                # written (and committed) at this round like any other.
+                bloom_prev = _cache(round_held, bloom.update_bitmaps_df(
+                    None, seen, cfg.n_parts
+                ))
+            else:
+                bloom_prev = io.read(spark, "bloom", rnd - 1)
 
             # F6 + F7 — gate and schedule
             gated = _cache(round_held, robots_gate(frontier, robots_rules))
@@ -586,7 +556,7 @@ def run_crawl(
                 # materializing action for the candidate side: it fills the
                 # flagged and new_frontier_rows caches the next batch reads.
                 new_urls, flagged = _dedup_candidates(
-                    spark, candidates, seen, bloom_prev, cfg, m, round_held
+                    candidates, seen, bloom_prev, cfg, round_held
                 )
                 new_rows = _cache(round_held, new_urls.withColumn(
                     "host", F.lower(F.parse_url("url_norm", F.lit("HOST")))
@@ -629,19 +599,19 @@ def run_crawl(
                     ))
                     tables["bloom"] = cfg.n_parts
 
-                later = [_timed(m.phase_s, "seen_write", write_seen)]
-                if cfg.use_bloom:
-                    later.append(_timed(m.phase_s, "bloom_write", write_bloom))
-                futures += _submit(spark, pool, *later)
-                if flagged is not None:
-                    # the frontier write filled the flagged cache, so this
-                    # aggregate is a cache scan, running next to the writes
-                    cstats = flagged.agg(
-                        F.count("*").alias("n"),
-                        F.sum(F.col("maybe_seen").cast("long")).alias("maybes"),
-                    ).collect()[0]
-                    m.candidates = cstats.n
-                    m.bloom_skipped = m.candidates - (cstats.maybes or 0)
+                futures += _submit(
+                    spark, pool,
+                    _timed(m.phase_s, "seen_write", write_seen),
+                    _timed(m.phase_s, "bloom_write", write_bloom),
+                )
+                # the frontier write filled the flagged cache, so this
+                # aggregate is a cache scan, running next to the writes
+                cstats = flagged.agg(
+                    F.count("*").alias("n"),
+                    F.sum(F.col("maybe_seen").cast("long")).alias("maybes"),
+                ).collect()[0]
+                m.candidates = cstats.n
+                m.bloom_skipped = m.candidates - (cstats.maybes or 0)
             finally:
                 # every submitted write finishes before the round either
                 # commits or is abandoned with the first error
@@ -656,8 +626,8 @@ def run_crawl(
             io.commit(rnd, tables)
             run.metrics.append(m)
             run.rounds_run = rnd
-            # all round outputs are committed — free the round's caches and
-            # sidecar broadcast so memory stays O(1 round), not O(rounds)
+            # all round outputs are committed — free the round's caches so
+            # memory stays O(1 round), not O(rounds)
             round_held.close()
             if n_frontier == 0:
                 break

@@ -9,9 +9,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from spacetime_crawler_spark.functions.tokenize import STOPWORDS, TOKEN_SPLIT_REGEX
-
-_TOKENS = f"filter(split(lower(text), '{TOKEN_SPLIT_REGEX}'), x -> x != '')"
+from spacetime_crawler_spark.functions.tokenize import SPARK_TOKENS, STOPWORDS
 
 
 def _fetched_pages(fetch_log: DataFrame, pages_latest: DataFrame) -> DataFrame:
@@ -56,7 +54,7 @@ def subdomain_histogram(fetch_log: DataFrame) -> DataFrame:
 def longest_page(fetch_log: DataFrame, pages_latest: DataFrame) -> DataFrame:
     """A3 — url with the most words (ties → lexicographically first url)."""
     counted = _fetched_pages(fetch_log, pages_latest).select(
-        "url_norm", F.expr(f"size({_TOKENS})").alias("n_words")
+        "url_norm", F.expr(f"size({SPARK_TOKENS})").alias("n_words")
     )
     w = Window.orderBy(F.desc("n_words"), F.asc("url_norm"))
     return (
@@ -142,7 +140,7 @@ def common_words(fetch_log: DataFrame, pages_latest: DataFrame, k: int = 50) -> 
     """A4 — top-k words over fetched text, stopwords excluded."""
     return (
         _fetched_pages(fetch_log, pages_latest)
-        .select(F.explode(F.expr(_TOKENS)).alias("word"))
+        .select(F.explode(F.expr(SPARK_TOKENS)).alias("word"))
         .filter(~F.col("word").isin(*STOPWORDS))
         .groupBy("word")
         .agg(F.count("*").alias("n"))

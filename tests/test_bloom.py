@@ -1,7 +1,7 @@
 """Bloom sidecar properties (SURVEY.md §5.2): ZERO false negatives (the
 correctness-critical property — positives fall through to the exact
-anti-join), plausible FPR, and engine-level dedup equivalence with and
-without the bloom path."""
+anti-join), plausible FPR, and an engine crawl through the bloom that
+equals the single-node reference."""
 
 from __future__ import annotations
 
@@ -97,10 +97,10 @@ def test_update_bitmaps_df_is_exact_or(spark):
     assert sum(r.n_items for r in rows) == 500
 
 
-def test_cogrouped_membership_equals_broadcast(spark):
-    """The sharded (cogroup) membership path must flag exactly the same rows
-    as the broadcast-UDF path — it is a memory strategy, not a semantics
-    change."""
+def test_cogrouped_membership_matches_numpy_reference(spark):
+    """The cogrouped membership test flags exactly the rows a numpy probe of
+    the collected sidecar flags, with zero false negatives on the seen
+    overlap."""
     from pyspark.sql import functions as F
 
     from spacetime_crawler_spark.operators import bloom
@@ -116,57 +116,59 @@ def test_cogrouped_membership_equals_broadcast(spark):
         F.hash("id").alias("h2"),
     )
     bloom_df = bloom.update_bitmaps_df(None, seen, n_parts, nbits, k).persist()
-    udf, bcast = bloom.make_maybe_seen_udf(
-        spark, bloom.collect_sidecar(bloom_df), n_parts
-    )
-    via_bcast = {
-        r.url_norm: r.maybe_seen
-        for r in cands.withColumn("maybe_seen", udf("url_hash", "h2")).collect()
-    }
+    sidecar = bloom.collect_sidecar(bloom_df)
     via_cogroup = {
         r.url_norm: r.maybe_seen
         for r in bloom.flag_maybe_seen_cogrouped(cands, bloom_df, n_parts).collect()
     }
-    bcast.destroy()
     bloom_df.unpersist()
-    assert via_cogroup == via_bcast
+
+    rows = cands.collect()
+    h1 = np.array([r.url_hash for r in rows], dtype=np.int64)
+    h2 = np.array([r.h2 for r in rows], dtype=np.int64)
+    parts = np.mod(h1, n_parts)
+    expected = np.zeros(len(rows), dtype=bool)
+    for part, (part_bits, part_k, bits) in sidecar.items():
+        mask = parts == part
+        pos = bloom._positions(h1[mask], h2[mask], part_k, part_bits)
+        bitmap = np.frombuffer(bits, dtype=np.uint8)
+        expected[mask] = ((bitmap[pos >> 3] >> (pos & 7)) & 1).all(axis=1)
+    assert via_cogroup == {
+        r.url_norm: bool(e) for r, e in zip(rows, expected)
+    }
     # zero false negatives on the truly-seen overlap
     for i in range(1500, 2000):
         assert via_cogroup[f"http://x.com/{i}"]
+    # the bloom must also reject most of the unseen candidates
+    assert sum(via_cogroup[f"http://x.com/{i}"] for i in range(2000, 4000)) < 200
 
 
-def test_engine_dedup_same_with_and_without_bloom(spark, tmp_path_factory,
-                                                  monkeypatch):
-    """use_bloom is purely an optimization: final seen/fetch_log identical."""
+def test_engine_bloom_crawl_matches_reference(spark, tmp_path):
+    """The crawl's committed seen set and fetch order, with every candidate
+    probed through the cogrouped bloom, equal the single-node reference
+    crawl on the same world, and the prefilter actually skips candidates."""
     from spacetime_crawler_spark.plans import crawl as crawl_mod
     from spacetime_crawler_spark.plans.crawl import CrawlConfig, run_crawl
     from spacetime_crawler_spark.sources import synth
+    from tests import reference_impl
 
+    rounds, budget = 3, 8.0
     p = synth.world("tiny", n_pages=400)
-    pages = synth.generate_pages_df(spark, p).persist()
     seeds = synth.seed_urls(p)
+    pages = synth.generate_pages_df(spark, p).persist()
+    cfg = CrawlConfig(state_dir=str(tmp_path / "st"), rounds=rounds,
+                      round_budget_s=budget)
+    run = run_crawl(spark, pages, seeds, cfg)
+    seen = {r.url_norm: r.round_seen
+            for r in crawl_mod.read_seen(spark, run.io).collect()}
+    log = sorted(
+        (r.round, r.host, r.fetch_seq, r.url_norm)
+        for r in crawl_mod.read_fetch_log(spark, run.io, run.rounds_run).collect()
+    )
+    pages.unpersist()
 
-    states = []
-    # (use_bloom, BLOOM_BROADCAST_MAX_BYTES): broadcast path, forced-cogroup
-    # path, and bloom off — all must produce identical committed state
-    for i, (use_bloom, max_bytes) in enumerate(
-        [(True, 64 << 20), (True, 0), (False, 64 << 20)]
-    ):
-        d = str(tmp_path_factory.mktemp(f"bloom_{i}"))
-        monkeypatch.setattr(crawl_mod, "BLOOM_BROADCAST_MAX_BYTES", max_bytes)
-        cfg = CrawlConfig(state_dir=d, rounds=3, round_budget_s=8.0,
-                          use_bloom=use_bloom)
-        run = run_crawl(spark, pages, seeds, cfg)
-        seen = sorted(
-            (r.url_norm, r.round_seen)
-            for r in crawl_mod.read_seen(spark, run.io).collect()
-        )
-        log = sorted(
-            (r.round, r.host, r.fetch_seq, r.url_norm)
-            for r in crawl_mod.read_fetch_log(spark, run.io, run.rounds_run).collect()
-        )
-        states.append((seen, log))
-        bloom_skips = sum(m.bloom_skipped for m in run.metrics)
-        if use_bloom:
-            assert bloom_skips > 0  # the prefilter actually fired
-    assert states[0] == states[1] == states[2]
+    oracle = reference_impl.crawl(synth.driver_side_pages(p), seeds,
+                                  rounds=rounds, round_budget_s=budget)
+    assert seen == oracle.seen
+    assert log == oracle.ordering_key()
+    assert sum(m.bloom_skipped for m in run.metrics) > 0  # the prefilter fired

@@ -189,8 +189,8 @@ def test_pipeline_web_ingest_cross_engine(spark):
     from datetime import datetime, timezone
 
     from spacetime_crawler_spark.functions.textextract import extract_main_content
+    from spacetime_crawler_spark.functions.tokenize import DUCK_TOKENS
     from spacetime_crawler_spark.operators.pipeline import pipeline_web_ingest
-    from spacetime_crawler_spark.operators.textstats import _DUCK_TOKENS
 
     NAV = ("<nav><a href='/'>Home</a> <a href='/a'>About</a>"
            " <a href='/c'>Contact</a></nav>")
@@ -237,7 +237,7 @@ def test_pipeline_web_ingest_cross_engine(spark):
     con.sql("CREATE VIEW docs AS SELECT doc_id, text_redacted AS text FROM red")
     want = con.sql(
         "SELECT doc_id AS url, text_clean AS text,"
-        f" CAST(len({_DUCK_TOKENS.replace('text', 'text_clean')}) AS INT) AS n_tokens"
+        f" CAST(len({DUCK_TOKENS.replace('text', 'text_clean')}) AS INT) AS n_tokens"
         f" FROM ({cleaning.CLEAN_LINES_SQL})"
     ).df()
     assert compare(got.drop("lang"), want) == []

@@ -24,13 +24,12 @@ from spacetime_crawler_spark.sources.io_tables import ParquetManifestIO
 N_PARTS = 8
 
 # (file, function) -> max rows a single collect may return.  Bounds are in
-# engine parameters, never data size: 1-row stats/limit(1) probes, and the
-# bloom sidecar's ≤ n_parts rows.  Adding a site here requires arguing its
-# bound in review — that is the point.
+# engine parameters, never data size: 1-row stats/limit(1) probes and the
+# commit ledger.  Adding a site here requires arguing its bound in review —
+# that is the point.
 ALLOWED_COLLECT_SITES = {
     ("crawl.py", "run_crawl"): 1,                 # flagged-cache stats agg
     ("crawl.py", "_bloom_state_matches"): 1,      # limit(1) geometry probe
-    ("bloom.py", "collect_sidecar"): N_PARTS,     # one row per part_id
     ("io_tables.py", "_commit_map"): 64,          # ledger: O(rounds·tables)
 }
 
@@ -94,7 +93,6 @@ def test_crawl_driver_collects_are_pinned_and_bounded(spark, tmp_path):
         seen_sites.add(site)
     # the guard must actually exercise the hot sites it exists to pin
     assert ("crawl.py", "run_crawl") in seen_sites
-    assert ("bloom.py", "collect_sidecar") in seen_sites
 
 
 # --- Python crossings: only where a kernel runs ---------------------------------
