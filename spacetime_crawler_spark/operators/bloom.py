@@ -13,15 +13,17 @@ definitely-new and may skip the exact anti-join; a positive falls through to
 the exact check.  Choice of bloom over cuckoo: the URL-seen set is
 insert-only — cuckoo's deletions buy nothing (SURVEY §4.3).
 
-Sidecar lifecycle (round 2 design): the sidecar is a per-round STATE TABLE
-(P rows of (part_id, nbits, nhashes, n_items, bits)) committed atomically
-with frontier/seen — resume reads it back in O(P) instead of rebuilding
-from the full seen set.  Maintenance is distributed (the previous rows
-cogroup with the round's new keys on part_id and each group ORs them in one
-pass), and so is membership testing: the candidates COGROUP with the sidecar
-rows on part_id, so each task receives only the bitmaps of its own buckets —
-the shard-routing design SURVEY §4.3 calls for at the 10^10 tier.  The
-driver never holds the bitmaps.
+Sidecar lifecycle: the sidecar is a per-round STATE TABLE (P rows of
+SIDECAR_SCHEMA) committed atomically with frontier/seen — resume reads it
+back in O(P) instead of rebuilding from the full seen set.  One kernel,
+bloom_pass, does all the bloom work of a round: a set of keys cogroups with
+the previous sidecar rows on part_id, so each task receives only the
+bitmaps of its own buckets (the shard-routing design SURVEY §4.3 calls for
+at the 10^10 tier), and each group returns its keys flagged against the
+previous bitmap together with its next bitmap, the previous one OR the
+bits of every key.  OR-ing every candidate rather than only the new URLs
+gives the same bitmap: a candidate that is not new is in seen, so its bits
+are already set.  The driver never holds the bitmaps.
 """
 
 from __future__ import annotations
@@ -32,13 +34,20 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-BLOOM_SCHEMA = T.StructType([
+SIDECAR_SCHEMA = T.StructType([
     T.StructField("part_id", T.IntegerType()),
     T.StructField("nbits", T.LongType()),
     T.StructField("nhashes", T.IntegerType()),
-    T.StructField("n_items", T.LongType()),
+    T.StructField("bits_set", T.LongType()),      # popcount of bits
+    # the keys the pass that wrote the row probed, and how many of them the
+    # previous bitmap held
+    T.StructField("n_probed", T.LongType()),
+    T.StructField("n_maybe_seen", T.LongType()),
     T.StructField("bits", T.BinaryType()),
 ])
+# what a pass reads of the previous sidecar (a sidecar committed with an
+# n_items column and no counts reads the same)
+_PREV_COLS = ("part_id", "nbits", "nhashes", "bits")
 
 # fixed geometry per partition bucket (incremental maintenance): 2^21 bits
 # / 7 hashes ≈ 1% FPR up to ~200k keys per bucket — FPR degradation past
@@ -55,123 +64,91 @@ def _positions(h1: np.ndarray, h2: np.ndarray, k: int, nbits: int) -> np.ndarray
     return ((u1[:, None] + i * u2[:, None]) % np.uint64(nbits)).astype(np.int64)
 
 
-def _build_bitmap_fixed(
-    h1: np.ndarray, h2: np.ndarray, nbits: int, k: int
-) -> bytes:
-    """Bitmap with CALLER-fixed geometry — the incremental-maintenance path:
-    per-round delta bitmaps share (nbits, k) so they OR together."""
-    bits = np.zeros(nbits // 8, dtype=np.uint8)
-    if len(h1):
-        pos = _positions(h1, h2, k, nbits)
-        np.bitwise_or.at(bits, pos >> 3, (1 << (pos & 7)).astype(np.uint8))
-    return bits.tobytes()
+def _probe(bits: np.ndarray, pos: np.ndarray) -> np.ndarray:
+    """Per key: are all its bit positions set in the uint8 bitmap?"""
+    return ((bits[pos >> 3] >> (pos & 7)) & 1).all(axis=1)
 
 
-def update_bitmaps_df(
-    prev: DataFrame | None, new_keys: DataFrame, n_parts: int,
+def _insert(bits: np.ndarray, pos: np.ndarray) -> None:
+    """Set every key's bit positions in the uint8 bitmap, in place."""
+    np.bitwise_or.at(bits, pos >> 3, (1 << (pos & 7)).astype(np.uint8))
+
+
+def bloom_pass(
+    keys: DataFrame, prev: DataFrame | None, n_parts: int,
     nbits: int = BITS_PER_PART, k: int = NUM_HASHES,
 ) -> DataFrame:
-    """The next sidecar in ONE grouped pass: the previous sidecar rows and
-    the round's newly-seen keys cogroup on part_id = pmod(url_hash, P), and
-    each group ORs its previous bitmap with its new keys' bits.  This is
-    incremental maintenance — O(new) hashing plus a ≤P-row bitmap exchange,
-    never a rebuild from the full seen set.  prev=None (round 0, the resume
-    rebuild) builds every bucket from new_keys alone.  A bucket gets a row
-    iff it had a previous row or has a new key."""
-    keyed = new_keys.select(
-        F.pmod("url_hash", F.lit(n_parts)).cast("int").alias("part_id"),
-        "url_hash",
-        "h2",
+    """The round's one bloom pass.  `keys` (any columns, url_hash and h2
+    among them) cogroups with the previous sidecar rows on part_id =
+    pmod(url_hash, P); prev=None (round 0, the resume rebuild) is an empty
+    sidecar.  Each group returns
+    - its key rows: the key columns + maybe_seen, tested against the
+      previous bitmap (several previous rows of a bucket are OR'd);
+    - one next-bitmap row of SIDECAR_SCHEMA: the previous bitmap OR the
+      bits of every key, with the group's probed and maybe-seen counts.
+    A bucket gets a bitmap row iff it had a previous row or has a key.
+    Split the output with `flags` and `sidecar`."""
+    key_cols = keys.columns
+    out_schema = T.StructType(
+        [T.StructField(f.name, f.dataType) for f in keys.schema.fields]
+        + [T.StructField("maybe_seen", T.BooleanType())]
+        + SIDECAR_SCHEMA.fields
+    )
+    keyed = keys.withColumn(
+        "part_id", F.pmod("url_hash", F.lit(n_parts)).cast("int")
     )
     if prev is None:
         # an empty native relation: the no-sidecar case runs the same
         # cogroup, and no Python RDD is built for it
-        prev = new_keys.sparkSession.range(0).select(*[
-            F.lit(None).cast(f.dataType).alias(f.name) for f in BLOOM_SCHEMA.fields
+        prev = keys.sparkSession.range(0).select(*[
+            F.lit(None).cast(f.dataType).alias(f.name)
+            for f in SIDECAR_SCHEMA.fields if f.name in _PREV_COLS
         ])
 
-    def update(prev_pdf: pd.DataFrame, keys_pdf: pd.DataFrame) -> pd.DataFrame:
-        # OR-ing bitmaps of another geometry would test bit positions
-        # against the wrong modulus — a silent false negative; ValueError,
-        # not assert, so the check survives `python -O`
+    def run(keys_pdf: pd.DataFrame, prev_pdf: pd.DataFrame) -> pd.DataFrame:
+        # bitmaps of another geometry would be tested and OR'd against the
+        # wrong modulus — a silent false negative that re-admits seen URLs;
+        # ValueError, not assert, so the check survives `python -O`
         if not ((prev_pdf["nbits"] == nbits).all()
                 and (prev_pdf["nhashes"] == k).all()):
-            raise ValueError("bloom sidecar geometry differs from the update's")
-        acc = np.zeros(nbits // 8, dtype=np.uint8)
+            raise ValueError("bloom sidecar geometry differs from the pass's")
+        bits = np.zeros(nbits // 8, dtype=np.uint8)
         for b in prev_pdf["bits"]:
-            acc |= np.frombuffer(b, dtype=np.uint8)
-        if len(keys_pdf):
-            acc |= np.frombuffer(_build_bitmap_fixed(
-                keys_pdf["url_hash"].to_numpy(), keys_pdf["h2"].to_numpy(),
-                nbits, k,
-            ), dtype=np.uint8)
+            bits |= np.frombuffer(b, dtype=np.uint8)
+        pos = _positions(
+            keys_pdf["url_hash"].to_numpy(), keys_pdf["h2"].to_numpy(), k, nbits
+        )
+        maybe = _probe(bits, pos)
+        _insert(bits, pos)
         part = (prev_pdf if len(prev_pdf) else keys_pdf)["part_id"].iloc[0]
-        return pd.DataFrame({
+        row = pd.DataFrame({
             "part_id": [int(part)], "nbits": [nbits], "nhashes": [k],
-            "n_items": [int(prev_pdf["n_items"].sum()) + len(keys_pdf)],
-            "bits": [acc.tobytes()],
+            "bits_set": [int(np.unpackbits(bits).sum())],
+            "n_probed": [len(keys_pdf)], "n_maybe_seen": [int(maybe.sum())],
+            "bits": [bits.tobytes()],
         })
-
-    return (
-        prev.groupBy("part_id")
-        .cogroup(keyed.groupBy("part_id"))
-        .applyInPandas(update, schema=BLOOM_SCHEMA)
-    )
-
-
-def flag_maybe_seen_cogrouped(
-    candidates: DataFrame, bloom_df: DataFrame, n_parts: int
-) -> DataFrame:
-    """Membership test WITHOUT broadcasting the sidecar: candidates cogroup
-    with the sidecar rows on part_id = pmod(url_hash, P), so each task holds
-    only its own buckets' bitmaps — executor memory stays O(sidecar/P) no
-    matter how large the seen set grows.  Multiple bitmap rows per bucket
-    (e.g. sidecar ∪ fresh deltas) are OR'd on the fly.  Returns candidates
-    + maybe_seen."""
-    cand_cols = [f.name for f in candidates.schema.fields]
-    out_schema = T.StructType(
-        list(candidates.schema.fields) + [T.StructField("maybe_seen", T.BooleanType())]
-    )
-    keyed = candidates.withColumn(
-        "part_id", F.pmod("url_hash", F.lit(n_parts)).cast("int")
-    )
-    bloomed = bloom_df.select("part_id", "nbits", "nhashes", "bits")
-
-    def flag(cand_pdf: pd.DataFrame, bloom_pdf: pd.DataFrame) -> pd.DataFrame:
-        if not len(cand_pdf):
-            return pd.DataFrame(columns=cand_cols + ["maybe_seen"])
-        if not len(bloom_pdf):
-            maybe = np.zeros(len(cand_pdf), dtype=bool)
-        else:
-            nbits = int(bloom_pdf["nbits"].iloc[0])
-            k = int(bloom_pdf["nhashes"].iloc[0])
-            # uniform-geometry guard (same contract as update_bitmaps_df):
-            # OR-ing bitmaps built under different nbits/nhashes would
-            # compute bit positions against the wrong modulus — a silent
-            # bloom FALSE NEGATIVE that re-admits seen URLs.  A mixed
-            # sidecar is a caller bug; fail loudly — ValueError, not
-            # assert, so the check survives `python -O`.
-            if not (
-                (bloom_pdf["nbits"] == nbits).all()
-                and (bloom_pdf["nhashes"] == k).all()
-            ):
-                raise ValueError(
-                    "mixed bloom geometry within one part_id group"
-                )
-            bits = np.zeros(nbits // 8, dtype=np.uint8)
-            for b in bloom_pdf["bits"]:
-                bits |= np.frombuffer(b, dtype=np.uint8)
-            pos = _positions(
-                cand_pdf["url_hash"].to_numpy(), cand_pdf["h2"].to_numpy(), k, nbits
-            )
-            maybe = ((bits[pos >> 3] >> (pos & 7)) & 1).all(axis=1)
-        return cand_pdf[cand_cols].assign(maybe_seen=maybe)
+        # nullable dtypes, so the rows of one kind hold nulls in the other
+        # kind's columns without casting 64-bit hashes through float
+        return pd.concat([
+            keys_pdf[key_cols].assign(maybe_seen=maybe).convert_dtypes(),
+            row.convert_dtypes(),
+        ], ignore_index=True)
 
     return (
         keyed.groupBy("part_id")
-        .cogroup(bloomed.groupBy("part_id"))
-        .applyInPandas(flag, schema=out_schema)
+        .cogroup(prev.select(*_PREV_COLS).groupBy("part_id"))
+        .applyInPandas(run, schema=out_schema)
     )
+
+
+def flags(out: DataFrame) -> DataFrame:
+    """bloom_pass's key rows: its keys + maybe_seen."""
+    return out.filter(F.col("bits").isNull()).drop(*SIDECAR_SCHEMA.fieldNames())
+
+
+def sidecar(out: DataFrame) -> DataFrame:
+    """bloom_pass's next-bitmap rows: the next sidecar."""
+    return out.filter(F.col("bits").isNotNull()).select(*SIDECAR_SCHEMA.fieldNames())
 
 
 def collect_sidecar(bloom_df: DataFrame) -> dict[int, tuple[int, int, bytes]]:

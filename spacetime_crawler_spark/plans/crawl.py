@@ -7,15 +7,17 @@ Dataflow per round (SURVEY §3.2):
     selected ──F5 fetch-join pages_latest (hash-keyed) ── fetched (persist)
     fetched ──F9 text UDF──► fetch_log sink
     fetched ──F8 link UDF ── explode ── F1 native filter
-            ──F3 dedup (bloom prefilter cogrouped with its sidecar → exact
-              anti-join vs seen)
-            ──F11 merge leftover ──► frontier′, seen′, bloom′ sinks
+            ──F3 dedup (one bloom pass cogrouped with the sidecar: flags
+              → exact anti-join vs seen; next sidecar → bloom′ sink)
+            ──F11 leftover ∪ new ──► frontier′, seen′ sinks
 
 Scale levers baked in (SURVEY §4): F1 stays native (pushable); the fetch
 join is keyed on xxhash64(url_norm) (narrow shuffle key, AQE skew-join
 handles hot hosts); the robots sidecar is a broadcast; the bloom sidecar
 is never broadcast: candidates cogroup with its rows on part_id, so a task
-holds only its own buckets' bitmaps; the per-host scheduler is two-phase-ranked then applyInPandas on quota-bounded groups;
+holds only its own buckets' bitmaps, and the same pass yields both the
+membership flags and the next sidecar; the per-host scheduler is
+two-phase-ranked then applyInPandas on quota-bounded groups;
 the exact anti-join hash-repartitions both `seen` and the candidates by
 url_hash into P partitions as it reads them.  Seen is stored as per-round
 deltas and read as one scan of every committed delta (io.read over a range
@@ -29,11 +31,12 @@ Spark analogue of the reference's save-file sync.
 A round is one concurrent batch of writes plus one commit.  The writes run
 on a small thread pool: the fetch_log sink next to the candidate →
 frontier chain; the seen and bloom writes join the batch as soon as the
-frontier write has cached the round's new rows, which is all they read.
-Every write is joined before the round's single io.commit, so the commit
-protocol is unchanged: a failed write leaves the round uncommitted, and
-resume re-runs it.  Prep (robots rules,
-the page-key index and round 0's writes) is one batch the same way.
+frontier write has cached the round's new rows and bloom pass, which is
+all they read.  Every write is joined before the round's single io.commit,
+so the commit protocol is unchanged: a failed write leaves the round
+uncommitted, and resume re-runs it.  Prep (robots rules, the page-key
+index and round 0's writes) is one batch the same way.  A round makes no
+driver collect: its counts ride the writes as observed metrics.
 """
 
 from __future__ import annotations
@@ -346,6 +349,12 @@ def _cache(held: ExitStack, df: DataFrame) -> DataFrame:
     return df
 
 
+def _fill(df: DataFrame):
+    """A task that fills df's cache in one job: a noop-sink write runs the
+    plan and stops there, with no aggregate exchange after it."""
+    return lambda: df.write.format("noop").mode("overwrite").save()
+
+
 def _dedup_candidates(
     candidates: DataFrame,
     seen: DataFrame,
@@ -355,13 +364,12 @@ def _dedup_candidates(
 ):
     """F3 — bloom prefilter (definite negatives skip the exact anti-join),
     then the exact left_anti vs seen, both sides partitioned by url_hash.
-    The candidates cogroup with the sidecar rows on part_id, so each task
-    holds only its own buckets' bitmaps.  Returns (new_urls, flagged):
-    `flagged` is the cached candidates + maybe_seen, released when `held`
-    closes."""
-    flagged = _cache(held, bloom.flag_maybe_seen_cogrouped(
-        candidates, bloom_prev, cfg.n_parts
-    ))
+    The round's one bloom pass cogroups the candidates with the sidecar
+    rows on part_id, so each task holds only its own buckets' bitmaps; its
+    output is cached (released when `held` closes).  Returns (new_urls,
+    next_sidecar): the next sidecar is a filter of that cache."""
+    probed = _cache(held, bloom.bloom_pass(candidates, bloom_prev, cfg.n_parts))
+    flagged = bloom.flags(probed)
     to_check = flagged.filter(F.col("maybe_seen")).drop("maybe_seen")
     definitely_new = flagged.filter(~F.col("maybe_seen")).drop("maybe_seen")
     checked_new = to_check.repartition(cfg.n_parts, "url_hash").join(
@@ -369,7 +377,7 @@ def _dedup_candidates(
         ["url_hash", "url_norm"],
         "left_anti",
     )
-    return definitely_new.unionByName(checked_new), flagged
+    return definitely_new.unionByName(checked_new), bloom.sidecar(probed)
 
 
 def run_crawl(
@@ -429,7 +437,7 @@ def run_crawl(
         if start_round < cfg.rounds and (
             start_round == 0 or io.manifest("frontier", start_round)["rows"] > 0
         ):
-            prep += [robots_rules.count, page_keys.count]
+            prep += [_fill(robots_rules), _fill(page_keys)]
         tables: dict[str, int] = {}
         if start_round == 0:
             frontier, seen = init_frontier(spark, seeds, cfg)
@@ -450,9 +458,10 @@ def run_crawl(
 
             def write_bloom0():
                 # the bloom sidecar is itself a committed state table:
-                # resume reads it back in O(P) instead of rebuilding it
-                io.write("bloom", 0, bloom.update_bitmaps_df(
-                    None, frontier, cfg.n_parts))
+                # resume reads it back in O(P) instead of rebuilding it.
+                # The seeds' bloom pass has no previous sidecar
+                io.write("bloom", 0, bloom.sidecar(bloom.bloom_pass(
+                    frontier.select("url_hash", "h2"), None, cfg.n_parts)))
                 tables["bloom"] = cfg.n_parts
 
             prep += [write_frontier0, write_seen0, write_bloom0]
@@ -486,9 +495,8 @@ def run_crawl(
                 # would leave committed-but-partial state, exactly what the
                 # round-manifest protocol forbids.  The rebuilt sidecar is
                 # written (and committed) at this round like any other.
-                bloom_prev = _cache(round_held, bloom.update_bitmaps_df(
-                    None, seen, cfg.n_parts
-                ))
+                bloom_prev = _cache(round_held, bloom.sidecar(bloom.bloom_pass(
+                    seen.select("url_hash", "h2"), None, cfg.n_parts)))
             else:
                 bloom_prev = io.read(spark, "bloom", rnd - 1)
 
@@ -551,25 +559,21 @@ def run_crawl(
                 )
 
             def write_frontier():
-                # F3 dedup, then F11 merge: leftover ∪ newly discovered (min
-                # depth per url).  This write is the round's one lineage-
-                # materializing action for the candidate side: it fills the
-                # flagged and new_frontier_rows caches the next batch reads.
-                new_urls, flagged = _dedup_candidates(
+                # F3 dedup, then F11: leftover ∪ newly discovered.  No merge
+                # is needed: the leftover is in seen, the new urls are not,
+                # and the candidates are already one row per url.  This
+                # write is the round's one lineage-materializing action for
+                # the candidate side: it fills the bloom-pass and
+                # new_frontier_rows caches the next batch reads.
+                new_urls, next_sidecar = _dedup_candidates(
                     candidates, seen, bloom_prev, cfg, round_held
                 )
                 new_rows = _cache(round_held, new_urls.withColumn(
                     "host", F.lower(F.parse_url("url_norm", F.lit("HOST")))
                 ).select(*FRONTIER_COLS))
-                next_frontier = (
-                    leftover.select(*FRONTIER_COLS)
-                    .unionByName(new_rows)
-                    .groupBy("url_norm", "url_hash", "h2", "host")
-                    .agg(F.min("depth").alias("depth"))
-                    .select(*FRONTIER_COLS)
-                )
+                next_frontier = leftover.select(*FRONTIER_COLS).unionByName(new_rows)
                 n = _observed_write(io, "frontier", rnd, next_frontier)["n"]
-                return n, new_rows, flagged
+                return n, new_rows, next_sidecar
 
             # the round's one batch: the fetch_log sink next to the candidate →
             # frontier chain; seen and bloom need only the rows the frontier
@@ -582,7 +586,7 @@ def run_crawl(
             )
             tables: dict[str, int] = {}
             try:
-                n_frontier, new_frontier_rows, flagged = futures[1].result()
+                n_frontier, new_frontier_rows, next_sidecar = futures[1].result()
                 seen_delta = new_frontier_rows.select(
                     "url_norm", "url_hash", "h2"
                 ).withColumn("round_seen", F.lit(rnd))
@@ -592,31 +596,28 @@ def run_crawl(
                         io, "seen", rnd, seen_delta)["n"]
 
                 def write_bloom():
-                    # distributed sidecar maintenance: previous rows cogrouped
-                    # with this round's new keys, OR'd per bucket in one pass
-                    io.write("bloom", rnd, bloom.update_bitmaps_df(
-                        bloom_prev, new_frontier_rows, cfg.n_parts
-                    ))
+                    # a filter of the cached bloom pass; the round's candidate
+                    # and maybe-seen counts ride the write
+                    stats = _observed_write(
+                        io, "bloom", rnd, next_sidecar,
+                        F.sum("n_probed").alias("probed"),
+                        F.sum("n_maybe_seen").alias("maybes"),
+                    )
                     tables["bloom"] = cfg.n_parts
+                    return stats
 
                 futures += _submit(
                     spark, pool,
                     _timed(m.phase_s, "seen_write", write_seen),
                     _timed(m.phase_s, "bloom_write", write_bloom),
                 )
-                # the frontier write filled the flagged cache, so this
-                # aggregate is a cache scan, running next to the writes
-                cstats = flagged.agg(
-                    F.count("*").alias("n"),
-                    F.sum(F.col("maybe_seen").cast("long")).alias("maybes"),
-                ).collect()[0]
-                m.candidates = cstats.n
-                m.bloom_skipped = m.candidates - (cstats.maybes or 0)
             finally:
                 # every submitted write finishes before the round either
                 # commits or is abandoned with the first error
                 wait(futures)
-            log_stats = _join(futures)[0]
+            log_stats, _, _, bloom_stats = _join(futures)
+            m.candidates = bloom_stats["probed"] or 0
+            m.bloom_skipped = m.candidates - (bloom_stats["maybes"] or 0)
             m.urls_selected = log_stats["n"]
             m.urls_fetched_ok = log_stats["ok"] or 0
             m.urls_404 = m.urls_selected - m.urls_fetched_ok

@@ -28,7 +28,6 @@ N_PARTS = 8
 # commit ledger.  Adding a site here requires arguing its bound in review —
 # that is the point.
 ALLOWED_COLLECT_SITES = {
-    ("crawl.py", "run_crawl"): 1,                 # flagged-cache stats agg
     ("crawl.py", "_bloom_state_matches"): 1,      # limit(1) geometry probe
     ("io_tables.py", "_commit_map"): 64,          # ledger: O(rounds·tables)
 }
@@ -91,8 +90,8 @@ def test_crawl_driver_collects_are_pinned_and_bounded(spark, tmp_path):
         )
         assert n <= ALLOWED_COLLECT_SITES[site], (site, n)
         seen_sites.add(site)
-    # the guard must actually exercise the hot sites it exists to pin
-    assert ("crawl.py", "run_crawl") in seen_sites
+    # the guard must actually exercise the site it exists to pin
+    assert ("crawl.py", "_bloom_state_matches") in seen_sites
 
 
 # --- Python crossings: only where a kernel runs ---------------------------------
@@ -149,9 +148,9 @@ class CapturingIO(ParquetManifestIO):
 def test_seed_frontier_and_metrics_plans_cross_no_python(spark, tmp_path):
     """Seeds are canonicalized on the driver and the metrics table is built
     on the driver: both reach Spark as Arrow-built local relations, so
-    neither plan evaluates Python nor reads a Python RDD.  One round's bloom
-    maintenance is a single cogrouped pass over the previous sidecar and the
-    round's new keys."""
+    neither plan evaluates Python nor reads a Python RDD.  Round 0's sidecar
+    is one bloom pass over the seeds; round 1's bloom write is a filter of
+    the round's cached bloom pass and runs no Python at all."""
     from spacetime_crawler_spark.plans import crawl as crawl_mod
 
     p = synth.world("tiny", n_pages=400)
@@ -170,12 +169,13 @@ def test_seed_frontier_and_metrics_plans_cross_no_python(spark, tmp_path):
     pages.unpersist()
     assert run.rounds_run == 1
     _assert_no_python(io.plans[("metrics", 1)])
-    # round 0 builds the sidecar with no previous one, round 1 updates it
-    for rnd in (0, 1):
-        bloom_plan = io.plans[("bloom", rnd)]
-        assert bloom_plan.count("FlatMapCoGroupsInPandas") == 1, bloom_plan
-        assert "FlatMapGroupsInPandas" not in bloom_plan, bloom_plan
-        assert "LogicalRDD" not in bloom_plan, bloom_plan
+    bloom_plan = io.plans[("bloom", 0)]
+    assert bloom_plan.count("FlatMapCoGroupsInPandas") == 1, bloom_plan
+    assert "FlatMapGroupsInPandas" not in bloom_plan, bloom_plan
+    assert "LogicalRDD" not in bloom_plan, bloom_plan
+    bloom_plan = io.plans[("bloom", 1)]
+    _assert_no_python(bloom_plan)
+    assert "InMemoryRelation" in bloom_plan, bloom_plan
 
 
 @pytest.fixture(scope="module")
@@ -203,6 +203,22 @@ def test_seen_writes_shuffle_nothing(crawl3):
         assert not [n for n in nodes if "Exchange" in n], (key, nodes)
     for rnd in (1, 2, 3):
         assert "InMemoryTableScan" in seen_writes[("seen", rnd)]
+
+
+def test_committed_frontiers_hold_each_url_once(spark, crawl3):
+    """The next frontier is leftover ∪ new urls with no merge aggregate:
+    the leftover is in seen, the new urls are anti-joined against seen, and
+    the candidates are one row per url — so every committed frontier holds
+    each url_norm once."""
+    from pyspark.sql import functions as F
+
+    for rnd in range(crawl3.rounds_run + 1):
+        frontier = crawl3.io.read(spark, "frontier", rnd)
+        n, distinct = frontier.agg(
+            F.count("*"), F.countDistinct("url_norm")).first()
+        assert n == distinct == crawl3.io.manifest("frontier", rnd)["rows"], rnd
+        if rnd:
+            assert n > 0, rnd
 
 
 def test_multi_round_reads_are_one_scan(spark, crawl3):

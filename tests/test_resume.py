@@ -42,11 +42,14 @@ def _run(spark, tiny, tmp, rounds, resume=False, state_dir=None):
     return run, state_dir
 
 
-def test_resume_equals_uninterrupted(spark, tiny, tmp_path_factory):
-    # full run
+@pytest.fixture(scope="module")
+def full(spark, tiny, tmp_path_factory):
+    """The final state of an uninterrupted ROUNDS-round run."""
     run_full, _ = _run(spark, tiny, tmp_path_factory.mktemp("full"), ROUNDS)
-    full = _final_state(spark, run_full.io, run_full.rounds_run)
+    return _final_state(spark, run_full.io, run_full.rounds_run)
 
+
+def test_resume_equals_uninterrupted(spark, tiny, full, tmp_path_factory):
     # interrupted after round 2, then resumed to ROUNDS
     run_a, state_dir = _run(spark, tiny, tmp_path_factory.mktemp("part"), 2)
     assert run_a.rounds_run == 2
@@ -54,6 +57,44 @@ def test_resume_equals_uninterrupted(spark, tiny, tmp_path_factory):
     resumed = _final_state(spark, run_b.io, run_b.rounds_run)
 
     assert resumed == full
+
+
+def test_resume_reads_sidecar_of_the_older_schema(spark, tiny, full,
+                                                  tmp_path_factory,
+                                                  monkeypatch):
+    """A state_dir whose committed sidecar has the older schema (an
+    n_items column, no bits_set or count columns) resumes exactly and
+    reuses that sidecar: no rebuild from seen."""
+    import pyarrow as pa
+
+    from spacetime_crawler_spark.operators import bloom
+
+    run_a, state_dir = _run(spark, tiny, tmp_path_factory.mktemp("old"), 2)
+    rows = run_a.io.read(spark, "bloom", 2).collect()
+    old = spark.createDataFrame(pa.table({
+        "part_id": pa.array([r.part_id for r in rows], pa.int32()),
+        "nbits": pa.array([r.nbits for r in rows], pa.int64()),
+        "nhashes": pa.array([r.nhashes for r in rows], pa.int32()),
+        "n_items": pa.array([r.n_probed for r in rows], pa.int64()),
+        "bits": pa.array([bytes(r.bits) for r in rows], pa.binary()),
+    }))
+    run_a.io.write("bloom", 2, old)  # round 2 stays committed as it was
+    assert "n_items" in run_a.io.read(spark, "bloom", 2).columns
+
+    prevs = []
+    bloom_pass = bloom.bloom_pass
+
+    def recording(keys, prev, n_parts, *a):
+        prevs.append(prev)
+        return bloom_pass(keys, prev, n_parts, *a)
+
+    monkeypatch.setattr(bloom, "bloom_pass", recording)
+    run_b, _ = _run(spark, tiny, None, ROUNDS, resume=True, state_dir=state_dir)
+    monkeypatch.undo()
+    assert _final_state(spark, run_b.io, run_b.rounds_run) == full
+    # one pass per resumed round, each over a previous sidecar: no rebuild
+    assert len(prevs) == ROUNDS - 2
+    assert all(prev is not None for prev in prevs)
 
 
 def test_same_seed_runs_identical(spark, tiny, tmp_path_factory):
