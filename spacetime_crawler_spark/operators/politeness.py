@@ -12,12 +12,12 @@ Scale design:
   longest-prefix match runs as a native higher-order aggregate (codegen'd,
   identical semantics to functions/robots.py::robots_allowed).
 - The per-host top-quota selection is the skew-dangerous step (Zipf hosts):
-  it runs as TWO-PHASE ranking — first a salted window (host × salt bucket)
-  that caps each bucket at quota, then the exact window on the ≤S·quota
-  survivors — so no single task ever sorts a whole hot host's frontier.
-- The final fetch_seq/due_s assignment is the mandated
-  groupBy(host).applyInPandas priority queue, operating on groups already
-  bounded by quota.
+  a salted window (host × salt bucket) first caps each bucket at quota, so
+  no single task ever sorts a whole hot host's frontier.  Each host's exact
+  top quota survives it.
+- The mandated groupBy(host).applyInPandas priority queue then makes the
+  one per-host cut: it orders each group of ≤S·quota survivors, keeps the
+  first quota and assigns fetch_seq/due_s (SURVEY §2 F7).
 """
 
 from __future__ import annotations
@@ -126,7 +126,8 @@ def schedule_round(gated: DataFrame, round_budget_s: float) -> DataFrame:
     quota = F.floor(F.lit(round_budget_s) / F.col("crawl_delay")).cast("int")
     with_quota = gated.withColumn("quota", quota).filter(F.col("quota") >= 1)
 
-    # Phase 1 — salted pre-rank: cap each (host, salt) bucket at quota.
+    # salted pre-rank: cap each (host, salt) bucket at quota.  A host's
+    # top quota rows are each in their bucket's top quota, so they survive.
     salted = Window.partitionBy(
         "host", F.pmod("url_hash", F.lit(SALT_BUCKETS))
     ).orderBy("depth", "url_norm")
@@ -136,23 +137,15 @@ def schedule_round(gated: DataFrame, round_budget_s: float) -> DataFrame:
         .drop("prn")
     )
 
-    # Phase 2 — exact rank on ≤ S·quota survivors per host.
-    exact = Window.partitionBy("host").orderBy("depth", "url_norm")
-    capped = (
-        pre.withColumn("rn", F.row_number().over(exact))
-        .filter(F.col("rn") <= F.col("quota"))
-        .drop("rn", "quota")
-    )
-
-    # Phase 3 — the mandated applyInPandas per-host priority queue: groups
-    # are ≤ quota rows, so pandas materialization is bounded regardless of
+    # the mandated applyInPandas per-host priority queue: groups are
+    # ≤ S·quota rows, so pandas materialization is bounded regardless of
     # host skew.  numpy orders the group (lexsort's last key is primary;
-    # unicode arrays compare by code point, like Python str) and one frame
-    # is built from the ordered columns.
+    # unicode arrays compare by code point, like Python str), the first
+    # quota rows are kept and one frame is built from the ordered columns.
     def assign_schedule(pdf: pd.DataFrame) -> pd.DataFrame:
         order = np.lexsort((
             pdf["url_norm"].to_numpy(dtype=str), pdf["depth"].to_numpy()
-        ))
+        ))[: pdf["quota"].iat[0]]
         seq = np.arange(1, len(order) + 1)
         out = {c: pdf[c].to_numpy()[order] for c in _SCHEDULE_IN}
         out["fetch_seq"] = seq.astype(np.int32)
@@ -160,7 +153,7 @@ def schedule_round(gated: DataFrame, round_budget_s: float) -> DataFrame:
         out["due_s"] = pdf["crawl_delay"].iat[0] * seq.astype(np.float64)
         return pd.DataFrame(out)
 
-    return capped.groupBy("host").applyInPandas(
+    return pre.groupBy("host").applyInPandas(
         assign_schedule, schema=SCHEDULE_SCHEMA
     )
 
@@ -169,9 +162,10 @@ def leftover_after_schedule(gated: DataFrame, selected: DataFrame) -> DataFrame:
     """Allowed-but-over-quota URLs stay in the frontier for the next round.
     Anti-join keys lead with the 64-bit url_hash (cheap fixed-width hashing
     on the hot path); url_norm stays in the key so a hash collision can never
-    drop a distinct URL."""
+    drop a distinct URL.  The rows keep gated's columns; the crawl selects
+    the frontier's."""
     return gated.join(
         selected.select("url_hash", "url_norm"),
         ["url_hash", "url_norm"],
         "left_anti",
-    ).select("url_norm", "url_hash", "h2", "host", "depth")
+    )

@@ -11,9 +11,11 @@ hold (see __spark_entry__.py docstring):
 - token split regex + stopword list come from ONE pinned definition
   (functions/tokenize.py).
 
-The same group-A functions run over the crawl engine's `fetch_log`/`pages`
-tables in production; here they are demonstrated over the driver testdata
-per FIXTURES.md §B so DuckDB can check them.
+The group-A functions here read only the driver testdata (FIXTURES.md §B),
+so DuckDB can check them; they never read the crawl engine's tables.  The
+reports over a crawl's `fetch_log` ⋈ `pages` are separate implementations
+in plans/crawl_reports.py; the two modules share only the generic
+pagerank() kernel that graph_pagerank calls.
 """
 
 from __future__ import annotations

@@ -34,9 +34,12 @@ frontier chain; the seen and bloom writes join the batch as soon as the
 frontier write has cached the round's new rows and bloom pass, which is
 all they read.  Every write is joined before the round's single io.commit,
 so the commit protocol is unchanged: a failed write leaves the round
-uncommitted, and resume re-runs it.  Prep (robots rules, the page-key
-index and round 0's writes) is one batch the same way.  A round makes no
-driver collect: its counts ride the writes as observed metrics.
+uncommitted, and resume re-runs it.  The round's metrics row (F12) is
+written once the batch has joined and commits with the round, so a killed
+run keeps the metrics of every round it committed.  Prep (robots rules,
+the page-key index and round 0's writes) is one batch the same way.  A
+round makes no driver collect: its counts ride the writes as observed
+metrics.
 """
 
 from __future__ import annotations
@@ -102,7 +105,8 @@ class RoundMetrics:
     phase_s: dict = field(default_factory=dict)
 
 
-# the committed `metrics` table: one row per RoundMetrics, fields in order
+# the committed `metrics` table: slice N holds round N's RoundMetrics row,
+# fields in order; read rounds 1..R as one scan of range(1, R + 1)
 _METRICS_SCHEMA = pa.schema([
     ("round", pa.int32()),
     *[(name, pa.int64()) for name in (
@@ -621,9 +625,15 @@ def run_crawl(
             m.urls_selected = log_stats["n"]
             m.urls_fetched_ok = log_stats["ok"] or 0
             m.urls_404 = m.urls_selected - m.urls_fetched_ok
-            tables.update(fetch_log=m.urls_selected, frontier=n_frontier)
+            tables.update(fetch_log=m.urls_selected, frontier=n_frontier,
+                          metrics=1)
             m.urls_new = tables["seen"]
             m.wall_s = time.monotonic() - t0
+            # the round's metrics row commits with the round.  phase_s rides
+            # along as a map column, so an operator reads the per-write
+            # spans off the state table without driver logs
+            io.write("metrics", rnd, spark.createDataFrame(pa.Table.from_pylist(
+                [vars(m)], schema=_METRICS_SCHEMA)))
             io.commit(rnd, tables)
             run.metrics.append(m)
             run.rounds_run = rnd
@@ -633,19 +643,6 @@ def run_crawl(
             if n_frontier == 0:
                 break
 
-        # F12 — one metrics snapshot for the whole run (off the per-round
-        # critical path; per-round lineage lives in fetch_log already)
-        if run.metrics:
-            # phase_s rides along as a map column so the committed table carries
-            # the same W-vs-F diagnostic the driver sees (RoundMetrics.phase_s) —
-            # a cluster operator can read scaling behavior off the state table
-            # without driver logs.  Built as an Arrow table: a local relation,
-            # no Python worker.
-            metrics_df = spark.createDataFrame(pa.Table.from_pylist(
-                [vars(m) for m in run.metrics], schema=_METRICS_SCHEMA
-            ))
-            io.write("metrics", run.rounds_run, metrics_df)
-            io.commit(run.rounds_run, {"metrics": len(run.metrics)})
         return run
 
 

@@ -29,6 +29,11 @@ fetch_log are read this way, uncompacted.  A state_dir from a build that
 compacted seen still resumes exactly: compaction never deleted a delta,
 and its leftover ``seen_snapshot`` directory or table is ignored.
 
+``metrics`` is round-sliced the same way: slice N holds round N's one row,
+committed with the round.  A state_dir from a build that wrote metrics at
+the end of the run holds that run's rows in the slice of its last round;
+no engine code reads ``metrics``, so nothing needs converting.
+
 The parquet backend writes each slice as it comes; the crawl's anti-join
 repartitions seen by url_hash when it reads it.  The Iceberg backend
 partitions the url_hash-keyed tables with bucket(P, url_hash) DDL
@@ -92,15 +97,10 @@ class ParquetManifestIO:
         """Publish ALL tables written for this round with ONE atomic rename
         of the round manifest — the cross-table commit point.  A crash before
         this line leaves every table of the round invisible; a crash after it
-        leaves every table visible.  tables maps name -> row_count.  Calling
-        commit again for the same round (e.g. the end-of-run metrics table)
-        merges into the existing manifest — still a single atomic rename."""
+        leaves every table visible.  tables maps name -> row_count; each
+        round is committed once, with every table it wrote."""
         manifest = {"round": rnd, "tables": dict(tables), "committed_at": time.time()}
         path = self._manifest_path(rnd)
-        if os.path.exists(path):
-            with open(path) as f:
-                prev = json.load(f)
-            manifest["tables"] = {**prev.get("tables", {}), **manifest["tables"]}
         os.makedirs(os.path.dirname(path), exist_ok=True)
         tmp = path + ".tmp"
         with open(tmp, "w") as f:
@@ -198,9 +198,10 @@ class IcebergIO:
       mode("overwrite") round directory).
     - ``commit(rnd, tables)`` appends ONE row to the ``_commits`` ledger —
       a single atomic Iceberg snapshot commit is the cross-table publish
-      point, mirroring the parquet backend's single manifest rename.
-      Re-committing the same round (metrics) appends a superseding row with
-      the merged table map; the highest seq per round wins.
+      point, mirroring the parquet backend's single manifest rename.  Each
+      round is committed once, with every table it wrote.  Readers take the
+      highest seq per round, so a ledger from an earlier build, which
+      re-committed its last round with a merged table map, reads the same.
     - readers resolve rounds from the ledger only, so data appended without
       a ledger row is invisible (crash-mid-round safety).
 
@@ -225,7 +226,7 @@ class IcebergIO:
     # -- commit ledger ---------------------------------------------------------
 
     def _ledger(self) -> dict[int, tuple[int, dict[str, int]]]:
-        """round → (latest seq, merged {table: rows}), cached per commit."""
+        """round → (latest seq, {table: rows}), cached per commit."""
         if self._ledger_cache is None:
             try:
                 rows = self.store.read(self.COMMITS_TABLE).collect()
@@ -239,18 +240,19 @@ class IcebergIO:
         return self._ledger_cache
 
     def _commit_map(self) -> dict[int, dict[str, int]]:
-        """round → merged {table: rows} from the latest ledger row per round."""
+        """round → {table: rows} from the latest ledger row per round."""
         return {rnd: tj for rnd, (_, tj) in self._ledger().items()}
 
     def commit(self, rnd: int, tables: dict[str, int]) -> None:
+        """Append the round's one ledger row: the publish point of every
+        table in `tables`."""
         ledger = self._ledger()
-        merged = {**ledger.get(rnd, (0, {}))[1], **tables}
         # next seq from the cached latest-per-round seqs (the global max seq
         # is always among them) — never a full-ledger collect per commit
         seq = max((s for s, _ in ledger.values()), default=-1) + 1
         self.store.append_rows(
             self.COMMITS_TABLE,
-            [(rnd, seq, json.dumps(merged), time.time())],
+            [(rnd, seq, json.dumps(tables), time.time())],
             self._COMMITS_SCHEMA,
         )
         self._ledger_cache = None
@@ -358,7 +360,8 @@ class SparkIcebergStore:
         # merge-schema: an upgraded engine may append a WIDER row shape to a
         # table created by an older build (e.g. the metrics table gaining
         # phase_s); Iceberg evolves the schema additively instead of
-        # failing the end-of-run write after all the crawl work is done.
+        # failing a round's metrics write after the round's crawl work is
+        # done.
         # Both spellings are set — Iceberg's canonical write option is
         # "merge-schema", some releases accept only "mergeSchema".
         # Tables created by a pre-round-5 build lack the accept-any-schema

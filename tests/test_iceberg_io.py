@@ -100,16 +100,6 @@ def test_commit_publishes_all_tables_atomically(spark, iio):
         assert iio.manifest(t, 1)["rows"] == 1
 
 
-def test_recommit_merges_tables(spark, iio):
-    iio.write("frontier", 0, _df(spark, [1]))
-    iio.commit(0, {"frontier": 1})
-    iio.write("metrics", 0, _df(spark, [9]))
-    iio.commit(0, {"metrics": 1})
-    assert iio.manifest("frontier", 0)["rows"] == 1
-    assert iio.manifest("metrics", 0)["rows"] == 1
-    assert iio.committed_rounds("metrics") == [0]
-
-
 def test_replace_round_is_idempotent(spark, iio):
     """Re-running an uncommitted round (crash-recovery) must overwrite its
     own leftovers, not append duplicates."""

@@ -138,11 +138,6 @@ def test_round_commit_is_atomic_across_tables(spark, tiny, tmp_path_factory):
         assert io.last_committed_round(table) <= last
         with pytest.raises(FileNotFoundError):
             io.read(spark, table, last + 1)
-    # a later commit for the same round merges tables into one manifest
-    io.commit(last + 1, {"frontier": 1})
-    io.commit(last + 1, {"seen": 2})
-    assert io.manifest("frontier", last + 1)["rows"] == 1
-    assert io.manifest("seen", last + 1)["rows"] == 2
 
 
 def test_long_run_reads_each_table_in_one_scan(spark, tmp_path_factory,
@@ -297,7 +292,7 @@ def test_metrics_table_carries_phase_breakdown(spark, tiny, tmp_path_factory):
     and the counts must equal the driver-side RoundMetrics."""
     run, _ = _run(spark, tiny, tmp_path_factory.mktemp("metrics"), 2)
     io = run.io
-    mdf = io.read(spark, "metrics", run.rounds_run)
+    mdf = io.read(spark, "metrics", range(1, run.rounds_run + 1))
     rows = {r.round: r for r in mdf.collect()}
     assert set(rows) == {m.round for m in run.metrics}
     for m in run.metrics:
@@ -309,6 +304,35 @@ def test_metrics_table_carries_phase_breakdown(spark, tiny, tmp_path_factory):
         # every round spends time in the core phases
         for phase in ("fetch_extract_write", "frontier_write", "seen_write"):
             assert phase in r.phase_s, (m.round, r.phase_s)
+
+
+def test_killed_run_keeps_metrics_of_committed_rounds(spark, tiny,
+                                                      tmp_path_factory):
+    """Each round commits its own metrics row: a run killed in round 3
+    keeps the rows of rounds 1 and 2, and a resume adds the rows of the
+    rounds it runs, one row per round."""
+    from spacetime_crawler_spark.sources.io_tables import ParquetManifestIO
+
+    class KilledAtRound3IO(ParquetManifestIO):
+        def write(self, table, rnd, df):
+            if rnd == 3:
+                raise RuntimeError("killed in round 3")
+            return super().write(table, rnd, df)
+
+    p, pages, seeds = tiny
+    state_dir = str(tmp_path_factory.mktemp("killed"))
+    io = KilledAtRound3IO(state_dir)
+    with pytest.raises(RuntimeError, match="killed in round 3"):
+        run_crawl(spark, pages, seeds,
+                  CrawlConfig(state_dir=state_dir, rounds=ROUNDS,
+                              round_budget_s=BUDGET), io=io)
+    assert io.committed_rounds("metrics") == [1, 2]
+
+    run, _ = _run(spark, tiny, None, ROUNDS, resume=True, state_dir=state_dir)
+    assert run.rounds_run == ROUNDS
+    rounds = [r.round for r in
+              run.io.read(spark, "metrics", range(1, ROUNDS + 1)).collect()]
+    assert sorted(rounds) == list(range(1, ROUNDS + 1))
 
 
 def test_failed_write_in_round_batch_leaves_round_uncommitted(spark, tiny,
